@@ -3,20 +3,30 @@
 Input contract: a *pairs* DataFrame with one row per mention:
 (mention long, true_id, pred_id) — the Spark form of the reference's
 cluster-pair CSV (nn_thresh.py:192-194, eval_clusters.py:186-195).
+Rows with a NULL true_id or pred_id are dropped before any metric
+(``_keyed``), so every function scores the same mention set.
 
 MUC   — eval_clusters.py:44-74 (Vilain et al.), incl. the +1e-13
 B³    — eval_clusters.py:77-98
-CEAF-e— eval_clusters.py:101-144 (phi_4 + Hungarian; contingency is
-        aggregated in Spark, the #clusters² matrix solves on the
-        driver — small at any data scale)
+CEAF-e— eval_clusters.py:101-144 (phi_4 + Hungarian)
 errors— eval_clusters.py:147-169 (conflated / divided counts)
 
-All heavy work (contingency tables, cluster sizes) is distributed
-groupBy aggregation; only #cluster-sized results ever reach the
-driver.
+``score_contingency`` scores all four from ONE contingency table, the
+way the reference does: a single distributed groupBy(true_id, pred_id)
+count whose cells (true_id, pred_id, overlap) are collected and scored
+on the driver by ``_score_cells`` (marginals by bincount, CEAF-e's
+(#true x #pred) phi_4 matrix solved with Hungarian). The driver bound
+is the number of contingency CELLS — at most min(n, |T|·|P|) — not
+the mention count. CEAF-e needs exactly these cells on the driver
+anyway, so the one-pass scorer adds no new driver bound.
+``muc_df``, ``b3_df`` and ``conflation_df`` stay as the fully
+distributed scalar forms for callers that want no driver collect;
+tests pin them equal to the scorer.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -26,14 +36,114 @@ from streaming_cdc_spark.metrics.hungarian import linear_sum_assignment
 
 EPS = 1e-13
 
+# the one-row result of each metric
+SCHEMAS = {
+    "muc": "muc_p double, muc_r double, muc_f1 double",
+    "b3": "b3_p double, b3_r double, b3_f1 double",
+    "ceaf_e": "ceaf_p double, ceaf_r double, ceaf_f1 double",
+    "errors": "conflated bigint, divided bigint",
+}
+
 
 def contingency(pairs: DataFrame) -> DataFrame:
     """(true_id, pred_id, overlap) — J7, the shared core of every metric."""
     return pairs.groupBy("true_id", "pred_id").agg(F.count("*").alias("overlap"))
 
 
+def _keyed(pairs: DataFrame) -> DataFrame:
+    """The scored mention set: rows whose true_id and pred_id are both
+    non-NULL. One rule for every metric — countDistinct skips a NULL
+    key while count(*) and groupBy keep it, so unfiltered MUC and B³
+    would score different mention sets."""
+    return pairs.filter(F.col("true_id").isNotNull() & F.col("pred_id").isNotNull())
+
+
+def _spark_round(x: float, places: int) -> float:
+    """Spark's round(double, places): HALF_UP on the shortest decimal
+    form of the double (Java Double.toString, Python repr)."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
+
+
+def _decimal_sum(terms: np.ndarray) -> float:
+    """Σ terms exactly as ``SUM(CAST(term AS DECIMAL(28,12)))`` then
+    CAST to double: each double rounds HALF_UP to 12 places, the sum
+    is exact decimal addition."""
+    q = Decimal("1e-12")
+    return float(sum((Decimal(repr(x)).quantize(q, ROUND_HALF_UP) for x in terms.tolist()), Decimal(0)))
+
+
+def _score_cells(true_id: np.ndarray, pred_id: np.ndarray, overlap: np.ndarray) -> dict[str, tuple]:
+    """MUC, B³, CEAF-e and the error counts from the contingency cells
+    (true_id, pred_id, overlap), one tuple per ``SCHEMAS`` entry.
+
+    Marginals come from the cells: |t| and |p| are bincounts of the
+    overlaps, and with n mentions in C cells, Σ_p (|p| − parts(p)) =
+    n − C, Σ_p (|p| − 1) = n − #pred. Every value is computed with the
+    same double operations, in the same order, as the distributed
+    forms muc_df and b3_df, so the rounded results are identical.
+    Empty input keeps their degenerate values: NULL MUC, B³ and
+    errors, 0.0 CEAF-e."""
+    if len(overlap) == 0:
+        return {"muc": (None,) * 3, "b3": (None,) * 3, "ceaf_e": (0.0,) * 3, "errors": (None,) * 2}
+    _, ti = np.unique(true_id, return_inverse=True)
+    _, pi = np.unique(pred_id, return_inverse=True)
+    o = np.asarray(overlap, dtype=np.int64)
+    st = np.bincount(ti, weights=o).astype(np.int64)
+    sp = np.bincount(pi, weights=o).astype(np.int64)
+    n, cells, n_true, n_pred = int(o.sum()), len(o), len(st), len(sp)
+    r6 = lambda x: _spark_round(x, 6)  # noqa: E731
+
+    muc_p = (n - cells) / (n - n_pred + EPS)
+    muc_r = (n - cells) / (n - n_true + EPS)
+    muc_f1 = 2 * muc_p * muc_r / (muc_p + muc_r + EPS)
+
+    o2 = (o * o).astype(np.float64)
+    b3_p = _decimal_sum(o2 / sp[pi]) / n
+    b3_r = _decimal_sum(o2 / st[ti]) / n
+    b3_f1 = 2 * b3_p * b3_r / (b3_p + b3_r)
+
+    # phi_4 over the dense (#true, #pred) matrix; precision divides by
+    # #true clusters, recall by #pred (eval_clusters.py:138-140)
+    phi = np.zeros((n_true, n_pred))
+    phi[ti, pi] = 2.0 * o / (st[ti] + sp[pi])
+    ri, ci = linear_sum_assignment(phi, maximize=True)
+    num = float(phi[ri, ci].sum())
+    ceaf_p, ceaf_r = num / n_true, num / n_pred
+    ceaf_f1 = 2 * ceaf_p * ceaf_r / (ceaf_p + ceaf_r) if (ceaf_p + ceaf_r) else 0.0
+
+    return {
+        "muc": (r6(muc_p), r6(muc_r), r6(muc_f1)),
+        "b3": (r6(b3_p), r6(b3_r), r6(b3_f1)),
+        # CEAF-e has no Spark-side form: Python's round, which its
+        # DuckDB oracle (ceaf_e_prf) agrees with
+        "ceaf_e": (round(ceaf_p, 6), round(ceaf_r, 6), round(ceaf_f1, 6)),
+        "errors": (cells - n_pred, cells - n_true),
+    }
+
+
+def score_contingency(pairs: DataFrame) -> dict[str, tuple]:
+    """Every metric row from ONE distributed contingency aggregation:
+    its cells are collected and scored on the driver (``_score_cells``)."""
+    cells = contingency(_keyed(pairs)).toPandas()
+    return _score_cells(
+        cells["true_id"].to_numpy(), cells["pred_id"].to_numpy(), cells["overlap"].to_numpy()
+    )
+
+
+def one_row_df(spark, schema: str, row: tuple) -> DataFrame:
+    """A one-row DataFrame over an inline VALUES table. It plans as a
+    local relation, so reading it — or a projection of it — runs no
+    Spark job (createDataFrame from a list parallelizes an RDD)."""
+    cols = [c.split() for c in schema.split(",")]
+    values = ", ".join(f"CAST(:{name} AS {typ})" for name, typ in cols)
+    names = ", ".join(name for name, _ in cols)
+    args = {name: v for (name, _), v in zip(cols, row)}
+    return spark.sql(f"SELECT * FROM VALUES ({values}) AS t({names})", args=args)
+
+
 def muc_df(pairs: DataFrame) -> DataFrame:
     """One row: (muc_p, muc_r, muc_f1) rounded to 6dp."""
+    pairs = _keyed(pairs)
     pstats = pairs.groupBy("pred_id").agg(
         F.count("*").alias("sz"), F.countDistinct("true_id").alias("parts")
     )
@@ -64,6 +174,7 @@ def b3_df(pairs: DataFrame) -> DataFrame:
     Per-mention ratios collapse onto the contingency table: each of
     the `overlap` mentions in cell (t, p) contributes overlap/|p| to
     precision and overlap/|t| to recall."""
+    pairs = _keyed(pairs)
     cont = contingency(pairs)
     tsz = pairs.groupBy("true_id").agg(F.count("*").alias("st"))
     psz = pairs.groupBy("pred_id").agg(F.count("*").alias("sp"))
@@ -130,6 +241,7 @@ def ari_df(pairs: DataFrame) -> DataFrame:
 
 def conflation_df(pairs: DataFrame) -> DataFrame:
     """One row: (conflated, divided) error counts (eval_clusters.py:147-169)."""
+    pairs = _keyed(pairs)
     conflated = (
         pairs.groupBy("pred_id")
         .agg((F.countDistinct("true_id") - 1).alias("c"))
@@ -146,40 +258,7 @@ def conflation_df(pairs: DataFrame) -> DataFrame:
 def ceaf_e_df(pairs: DataFrame) -> DataFrame:
     """One row: (ceaf_p, ceaf_r, ceaf_f1) rounded to 6dp.
 
-    Contingency + sizes aggregate in Spark; the dense (n_true, n_pred)
-    phi_4 matrix is built on the driver and solved with Hungarian —
-    matching the reference's orientation exactly: precision divides by
-    #true clusters, recall by #pred (eval_clusters.py:138-140).
-    """
-    spark = pairs.sparkSession
-    cont = contingency(pairs)
-    tsz = pairs.groupBy("true_id").agg(F.count("*").alias("st"))
-    psz = pairs.groupBy("pred_id").agg(F.count("*").alias("sp"))
-    rows = cont.join(tsz, "true_id").join(psz, "pred_id").collect()
-    if not rows:
-        return spark.createDataFrame(
-            [(0.0, 0.0, 0.0)], "ceaf_p double, ceaf_r double, ceaf_f1 double"
-        )
-    t_ids = sorted({r["true_id"] for r in rows})
-    p_ids = sorted({r["pred_id"] for r in rows})
-    t_index = {t: i for i, t in enumerate(t_ids)}
-    p_index = {p: i for i, p in enumerate(p_ids)}
-    scores = np.zeros((len(t_ids), len(p_ids)))
-    t_size = {}
-    p_size = {}
-    for r in rows:
-        t_size[r["true_id"]] = r["st"]
-        p_size[r["pred_id"]] = r["sp"]
-    for r in rows:
-        scores[t_index[r["true_id"]], p_index[r["pred_id"]]] = (
-            2.0 * r["overlap"] / (t_size[r["true_id"]] + p_size[r["pred_id"]])
-        )
-    ri, ci = linear_sum_assignment(scores, maximize=True)
-    num = float(scores[ri, ci].sum())
-    p = num / len(t_ids)
-    r = num / len(p_ids)
-    f1 = 2 * p * r / (p + r) if (p + r) else 0.0
-    return spark.createDataFrame(
-        [(round(p, 6), round(r, 6), round(f1, 6))],
-        "ceaf_p double, ceaf_r double, ceaf_f1 double",
-    )
+    The contingency aggregates in Spark; the dense (n_true, n_pred)
+    phi_4 matrix is built on the driver and solved with Hungarian
+    (``_score_cells``)."""
+    return one_row_df(pairs.sparkSession, SCHEMAS["ceaf_e"], score_contingency(pairs)["ceaf_e"])

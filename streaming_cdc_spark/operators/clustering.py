@@ -19,6 +19,12 @@ Physical strategy for CC is adaptive, like AQE join selection:
   only the edge-touched vertices (isolated vertices are singletons by
   construction and never enter the loop), O(log n) rounds, cheap
   sum-based convergence test, localCheckpoint lineage truncation.
+  The labels start from a SEED pass, not the identity: one
+  ``mapInPandas`` over the cached, u-partitioned symmetric edges runs
+  a vectorized numpy union-find per partition, and each vertex starts
+  at the least root any partition gave it. Components that one
+  partition sees whole (cliques, stars) are then already final, and
+  the loop's first round only confirms the fixpoint.
 """
 
 from __future__ import annotations
@@ -111,42 +117,90 @@ def connected_components(
     # residual sweep): e.union(e.flipped) plans the edge subtree — a
     # full similarity kernel for the threshold-CC queries — TWICE when
     # e is not already cached (driver_cutoff=0 path); exploding each
-    # edge into both directions keeps a single pipelined evaluation
-    # with the identical (u, v) row set feeding the same distinct.
-    sym0 = (
+    # edge into both directions keeps a single pipelined evaluation.
+    # The same explode also emits both SELF-LOOPS (u, u), (v, v), so
+    # the touched-vertex set never has to be derived from the edge
+    # subtree a second time (optimization r10, guide §2.4): the loop's
+    # self-loop row folds "keep own label" into the neighbor-min
+    # aggregate — min over (neighbors ∪ self) IS least(own, nbr min) —
+    # so no per-iteration join on the label relation is needed.
+    # The relation is cached PRE-PARTITIONED on the probe key u (the
+    # cached plan keeps its output partitioning:
+    # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false,
+    # pinned in tests/test_plans.py), so each iteration shuffles only
+    # the label relation (O(V) rows), never the edges (O(E) rows); the
+    # distinct on (u, v) reuses that partitioning — one shuffle.
+    sym = (
         e.select(
             F.explode(
                 F.array(
                     F.struct(F.col("u"), F.col("v")),
                     F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+                    F.struct(F.col("u"), F.col("u").alias("v")),
+                    F.struct(F.col("v").alias("u"), F.col("v")),
                 )
             ).alias("_p")
         )
         .select("_p.u", "_p.v")
-        .distinct()
-    )
-    touched = sym0.select(F.col("u").alias("v")).distinct()
-    # Two per-iteration shuffles removed (optimization r10, guide §2.4):
-    # (a) SELF-LOOPS (v, v) fold the "keep own label" term into the
-    #     neighbor-min aggregate, so the per-iteration least(own,
-    #     nbr-min) join — and its exchange of the label relation by v —
-    #     disappears: min over (neighbors ∪ self) IS least(own, nbr min).
-    # (b) the symmetrized edge relation is cached PRE-PARTITIONED on the
-    #     probe key u (persist keeps the plan's output partitioning;
-    #     AQE leaves cached plans alone by default), so each iteration
-    #     shuffles only the label relation (O(V) rows) instead of
-    #     re-exchanging the edge relation (O(E) rows) every round — at
-    #     scale the edge side dominates, so per-iteration shuffle bytes
-    #     drop from E+V to V. Equivalence: identical label fixpoint
-    #     (probe at sf0.1: same 1964-row assignment, 7 iterations both).
-    sym = (
-        sym0.unionByName(touched.select(F.col("v").alias("u"), F.col("v")))
         .repartition("u")
+        .distinct()
         .persist()
     )
-    lbl = touched.select("v", F.col("v").alias("l")).localCheckpoint()
-    prev_sum = None
-    for _ in range(max_iter):
+
+    def local_roots(batches):
+        # union-find over ONE partition's edges: vectorized min-label
+        # propagation with pointer jumping on dense indices; index
+        # order is id order, so the min index is the min vertex id
+        import numpy as np
+        import pandas as pd
+
+        frames = list(batches)
+        if not frames:
+            return
+        u = np.concatenate([f["u"].to_numpy() for f in frames])
+        v = np.concatenate([f["v"].to_numpy() for f in frames])
+        ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+        a, b = inv[: len(u)], inv[len(u):]
+        lab = np.arange(len(ids))
+        while True:
+            m = np.minimum(lab[a], lab[b])
+            new = lab.copy()
+            np.minimum.at(new, a, m)
+            np.minimum.at(new, b, m)
+            new = new[new]
+            if np.array_equal(new, lab):
+                break
+            lab = new
+        yield pd.DataFrame({"v": ids, "l": ids[lab]})
+
+    # SEED the labels with one local pass instead of the identity: each
+    # partition of the u-partitioned edges solves its own components,
+    # and a vertex starts at the min root any partition gave it. A
+    # partition holds every edge of each vertex hashed to it, so a
+    # component with one vertex adjacent to all the others (a clique, a
+    # star: the near-duplicate groups of a threshold graph) is solved
+    # whole by that vertex's partition; when every component is, the
+    # seed IS the fixpoint and the loop stops after one round. The loop
+    # stays correct: every seed label is a vertex of v's own component
+    # (a local root is reachable from v over real edges), the component
+    # minimum m seeds to itself (no vertex below m is reachable), and a
+    # round only lowers a label to a neighbor's label or to the label
+    # of the vertex it names. Labels thus stay inside the component and
+    # never drop below m, and the fixpoint (no vertex above a
+    # neighbor's label) gives the whole component m — the same answer
+    # as starting from the identity.
+    lbl = (
+        sym.mapInPandas(local_roots, "v long, l long")
+        .groupBy("v")
+        .agg(F.min("l").alias("l"))
+        .localCheckpoint(eager=False)
+    )
+    # labels only ever decrease; the total is a strict monotone — equal
+    # sums mean a fixed point (one cheap agg, no join). The seed's own
+    # sum is the baseline, so an already-converged seed stops after one
+    # round; a NULL sum means no edges at all.
+    prev_sum = _label_sum(lbl)
+    for _ in range(max_iter if prev_sum is not None else 0):
         # min over (neighbors ∪ self): the self-loop row carries v's own
         # label through the same aggregate
         stepped = (
@@ -156,11 +210,9 @@ def connected_components(
         )
         # pointer jump: l(v) <- l(l(v)) — collapses chains in O(log n)
         # LAZY localCheckpoint (optimization r9): the convergence agg
-        # below is the action that materializes it, so each iteration
-        # runs ONE driver job instead of two (eager checkpoint job +
-        # agg job) — the iteration count is unchanged, the
-        # driver-serialized job chain is halved.
-        jumped = (
+        # is the action that materializes it, so each iteration runs ONE
+        # driver job instead of two (eager checkpoint job + agg job).
+        lbl = (
             stepped.alias("a")
             .join(
                 stepped.select(F.col("v").alias("l"), F.col("l").alias("l2")).alias("b"),
@@ -170,23 +222,27 @@ def connected_components(
             .select(F.col("v"), F.least(F.col("l"), F.coalesce("l2", "l")).alias("l"))
             .localCheckpoint(eager=False)
         )
-        # labels only ever decrease; the total is a strict monotone —
-        # equal sums mean a fixed point (one cheap agg, no join)
-        cur_sum = jumped.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
-        lbl = jumped
-        if prev_sum is not None and cur_sum == prev_sum:
+        cur_sum = _label_sum(lbl)
+        if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
     sym.unpersist()
     e.unpersist()
-    # edges may reference ids absent from `vertices`; keep output rows
-    # only for the requested vertex set (matches the driver-union-find
-    # path, which joins back to vertices)
-    lbl = lbl.join(vs, "v", "leftsemi")
-    isolated = vs.join(touched, "v", "leftanti").select("v", F.col("v").alias("l"))
-    return lbl.union(isolated).select(
-        F.col("v").alias(id_col), F.col("l").alias("cluster_id")
+    # the final labels cover exactly the edge-touched vertices; the
+    # rest of `vs` are singletons. Edges may reference ids absent from
+    # `vertices`, so labelled rows are kept only for the requested
+    # vertex set (matches the driver-union-find path).
+    isolated = vs.join(lbl, "v", "leftanti").select("v", F.col("v").alias("l"))
+    return (
+        lbl.join(vs, "v", "leftsemi")
+        .union(isolated)
+        .select(F.col("v").alias(id_col), F.col("l").alias("cluster_id"))
     )
+
+
+def _label_sum(lbl: DataFrame):
+    """Σ labels as an exact decimal — the loop's convergence probe."""
+    return lbl.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
 
 
 def threshold_clusters(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from streaming_cdc_spark.metrics.coref import b3_df, ceaf_e_df, conflation_df, muc_df
+from streaming_cdc_spark.metrics.coref import SCHEMAS, one_row_df, score_contingency
 from streaming_cdc_spark.operators.clustering import connected_components, threshold_clusters
 from streaming_cdc_spark.operators.similarity import blended_self_edges
 from streaming_cdc_spark.operators.vectorize import (
@@ -38,30 +38,22 @@ def first_occurrence_ids(df: DataFrame, key_col: str, order_col: str, out_col: s
 
 def evaluate_pairs(pairs: DataFrame) -> dict[str, DataFrame]:
     """EP stage 3 (eval_clusters.py:172-219): the full metric suite
-    over a (mention, true_id, pred_id) DataFrame. 'summary' adds the
-    A13 mean-of-F1s line (eval_clusters.py:216)."""
-    muc = muc_df(pairs)
-    b3 = b3_df(pairs)
-    ceaf = ceaf_e_df(pairs)
-    summary = (
-        muc.crossJoin(b3)
-        .crossJoin(ceaf)
-        .select(
-            "muc_f1",
-            "b3_f1",
-            "ceaf_f1",
-            F.round((F.col("muc_f1") + F.col("b3_f1") + F.col("ceaf_f1")) / 3, 6).alias(
-                "mean_f1"
-            ),
-        )
+    over a (mention, true_id, pred_id) DataFrame, scored from ONE
+    contingency collect (metrics/coref.py: score_contingency). Each
+    result is a one-row local DataFrame, so reading it runs no further
+    Spark job. 'summary' adds the A13 mean-of-F1s line
+    (eval_clusters.py:216)."""
+    spark = pairs.sparkSession
+    rows = score_contingency(pairs)
+    out = {k: one_row_df(spark, schema, rows[k]) for k, schema in SCHEMAS.items()}
+    f1s = (rows["muc"][2], rows["b3"][2], rows["ceaf_e"][2])
+    out["summary"] = one_row_df(spark, "muc_f1 double, b3_f1 double, ceaf_f1 double", f1s).select(
+        "muc_f1",
+        "b3_f1",
+        "ceaf_f1",
+        F.round((F.col("muc_f1") + F.col("b3_f1") + F.col("ceaf_f1")) / 3, 6).alias("mean_f1"),
     )
-    return {
-        "muc": muc,
-        "b3": b3,
-        "ceaf_e": ceaf,
-        "errors": conflation_df(pairs),
-        "summary": summary,
-    }
+    return out
 
 
 def _ep1_vectorize(mentions: DataFrame, vocab_size: int) -> tuple[DataFrame, int]:

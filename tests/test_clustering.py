@@ -2,6 +2,8 @@
 connected components vs a hand union-find."""
 
 import numpy as np
+import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators.clustering import connected_components, threshold_clusters
@@ -26,9 +28,6 @@ def test_greedy_spark_wrapper(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {r["vec_id"]: r["cluster_id"] for r in greedy_clusters(df, 0.5).collect()}
     assert got == {10: 10, 11: 11, 12: 10, 13: 10, 14: 11}
-
-
-import pytest
 
 
 @pytest.mark.parametrize("cutoff", [0, 2_000_000])  # distributed loop vs driver union-find
@@ -95,6 +94,106 @@ def test_connected_components_edge_only_vertices(spark, cutoff):
         for r in connected_components(vertices, edges, driver_cutoff=cutoff).collect()
     }
     assert set(got) == {1, 2}
+
+
+@st.composite
+def _graphs(draw):
+    """(n_vertices, edges) over ids 0..n-1 plus a few isolated ids:
+    disjoint cliques, long chains (random id order), stars and
+    descending-id chains (the min label enters at the tail)."""
+    kind = draw(st.sampled_from(["cliques", "chain", "star", "desc_chain"]))
+    n = draw(st.integers(2, 40))
+    ids = draw(st.permutations(range(n)))
+    if kind == "cliques":
+        k = draw(st.integers(1, 6))
+        groups = [ids[i : i + k] for i in range(0, n, k)]
+        edges = [(a, b) for g in groups for i, a in enumerate(g) for b in g[i + 1 :]]
+    elif kind == "chain":
+        edges = list(zip(ids, ids[1:]))
+    elif kind == "star":
+        edges = [(ids[0], b) for b in ids[1:]]
+    else:
+        edges = [(i, i - 1) for i in range(n - 1, 0, -1)]
+    return n + draw(st.integers(0, 3)), edges
+
+
+def _cc(spark, n, edges, **kw):
+    vertices = spark.range(n).select(F.col("id").alias("v"))
+    e = spark.createDataFrame(edges, "u long, v long")
+    return {r["v"]: r["cluster_id"] for r in connected_components(vertices, e, **kw).collect()}
+
+
+def _group_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("parts", [1, 3, 7])
+@settings(max_examples=5, deadline=None)
+@given(graph=_graphs())
+def test_connected_components_seeded_loop_equals_union_find(spark, parts, graph):
+    """The locally seeded distributed loop equals the driver
+    union-find at any shuffle-partition count (the seed pass solves
+    each partition's edges, so the partitioning decides how much of
+    each component a seed sees)."""
+    n, edges = graph
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        got = _cc(spark, n, edges, driver_cutoff=0)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got == _cc(spark, n, edges)
+
+
+def test_connected_components_cliques_converge_in_one_round(spark):
+    """Every vertex of a clique sees the whole clique in its own
+    partition's edges, so the seed is already the fixpoint: a call
+    allowed 50 rounds runs exactly the jobs of a call allowed one."""
+    edges = [(a, b) for g in range(5) for a in range(6 * g, 6 * g + 6) for b in range(a + 1, 6 * g + 6)]
+    truth = {v: v - v % 6 if v < 30 else v for v in range(32)}  # 30, 31 isolated
+    assert _cc(spark, 32, edges, driver_cutoff=0, max_iter=1) == truth
+    one = _group_jobs(spark, "cc_one_round", lambda: _cc(spark, 32, edges, driver_cutoff=0, max_iter=1))
+    fifty = _group_jobs(spark, "cc_fifty_rounds", lambda: _cc(spark, 32, edges, driver_cutoff=0))
+    assert fifty == one
+
+
+def test_connected_components_empty_edges_distributed_stops(spark):
+    """An empty edge set on the distributed path is all singletons and
+    runs a small constant number of jobs: the label sum of an empty
+    graph is NULL, which never compares equal, so convergence must not
+    hinge on it (else all max_iter rounds run)."""
+    got = {}
+    jobs = _group_jobs(spark, "cc_empty", lambda: got.update(_cc(spark, 5, [], driver_cutoff=0)))
+    assert got == {v: v for v in range(5)}
+    assert jobs <= 10
+
+
+def test_connected_components_distributed_reads_edges_once(spark):
+    """driver_cutoff=0 evaluates the edge relation exactly once: the
+    seed, the touched set and the isolated vertices all come from the
+    cached symmetric edges or the final labels, never from a second
+    pass over the (for the threshold-CC queries, kernel-sized) edge
+    subtree. An accumulator counts the rows the edge source emits."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(len(b))
+            yield b
+
+    raw = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (7, 30)]
+    edges = spark.createDataFrame(raw, "u long, v long").mapInPandas(count_rows, "u long, v long")
+    vertices = spark.range(50).select(F.col("id").alias("v"))
+    got = {r["v"]: r["cluster_id"] for r in connected_components(vertices, edges, driver_cutoff=0).collect()}
+    assert got == _cc(spark, 50, raw)
+    assert seen.value == len(raw)
 
 
 def test_threshold_clusters_matches_union_find(spark):

@@ -5,6 +5,7 @@ Table 1 for MUC; Luo 2005 Table 1a-c for B³ and CEAF-e), tolerance
 """
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from streaming_cdc_spark.metrics.coref import b3_df, ceaf_e_df, conflation_df, muc_df
 
@@ -158,3 +159,86 @@ def test_ari_anticorrelated_partitions_negative(spark):
         {0: "AC", 1: "BD"},
     )
     assert ari_df(grid).first()["ari"] == -0.5
+
+
+# -- one-pass scorer vs the distributed forms ---------------------------
+
+
+def _distributed_rows(pairs):
+    return {
+        "muc": muc_df(pairs).first().asDict(),
+        "b3": b3_df(pairs).first().asDict(),
+        "ceaf_e": ceaf_e_df(pairs).first().asDict(),
+        "errors": conflation_df(pairs).first().asDict(),
+    }
+
+
+def _scored_rows(pairs):
+    from streaming_cdc_spark.pipelines import evaluate_pairs
+
+    ev = evaluate_pairs(pairs)
+    return {k: ev[k].first().asDict() for k in ("muc", "b3", "ceaf_e", "errors")}
+
+
+@pytest.mark.parametrize(
+    "true_c,pred_c",
+    [(t, p) for t, p, _, _ in VILAIN] + [(LUO_TRUE, p) for p, _ in LUO_CASES_B3],
+)
+def test_evaluate_pairs_equals_distributed_forms(spark, true_c, pred_c):
+    """evaluate_pairs scores every metric from one contingency collect;
+    it must agree exactly (6 dp) with muc_df / b3_df / ceaf_e_df /
+    conflation_df on the Vilain and Luo fixtures."""
+    df = pairs_df(spark, {k: set(v) for k, v in true_c.items()}, {k: set(v) for k, v in pred_c.items()})
+    assert _scored_rows(df) == _distributed_rows(df)
+
+
+def test_evaluate_pairs_column_types(spark):
+    from streaming_cdc_spark.pipelines import evaluate_pairs
+
+    df = pairs_df(spark, LUO_TRUE, LUO_TRUE)
+    ev = evaluate_pairs(df)
+    assert ev["muc"].dtypes == muc_df(df).dtypes
+    assert ev["b3"].dtypes == b3_df(df).dtypes
+    assert ev["ceaf_e"].dtypes == ceaf_e_df(df).dtypes
+    assert ev["errors"].dtypes == conflation_df(df).dtypes
+    summary = ev["summary"].first()
+    assert ev["summary"].columns == ["muc_f1", "b3_f1", "ceaf_f1", "mean_f1"]
+    assert summary["mean_f1"] == pytest.approx(1.0, abs=1e-6)
+
+
+_cells = st.lists(st.tuples(st.integers(0, 6), st.integers(0, 6)), max_size=40)
+
+
+@settings(max_examples=12, deadline=None)
+@given(_cells)
+@example([(i, i) for i in range(9)])  # all singletons
+@example([(i % 4, 0) for i in range(13)])  # one giant predicted cluster
+@example([])  # empty input
+def test_evaluate_pairs_property(spark, cells):
+    """Random partitions (mention i -> (true, pred) label pair): the
+    one-pass scorer equals the distributed forms everywhere, including
+    the degenerate inputs. Empty input keeps the distributed forms'
+    values: NULL MUC, B³ and errors, 0.0 CEAF-e."""
+    df = spark.createDataFrame(
+        [(i, t, p) for i, (t, p) in enumerate(cells)], "mention long, true_id long, pred_id long"
+    )
+    got = _scored_rows(df)
+    assert got == _distributed_rows(df)
+    if not cells:
+        assert set(got["muc"].values()) == set(got["b3"].values()) == set(got["errors"].values()) == {None}
+        assert set(got["ceaf_e"].values()) == {0.0}
+
+
+def test_null_keys_dropped_by_every_metric(spark):
+    """A mention with a NULL true_id or pred_id is not scored by any
+    metric. countDistinct skips NULL keys while count(*) keeps them,
+    so without the shared filter MUC read 1.0 and B³ 0.467 on these
+    five rows; now every metric scores the three keyed rows."""
+    rows = [(1, "a", "x"), (2, "a", "x"), (3, "b", "y"), (4, None, "y"), (5, "b", None)]
+    schema = "mention long, true_id string, pred_id string"
+    with_nulls = spark.createDataFrame(rows, schema)
+    keyed = spark.createDataFrame(rows[:3], schema)
+    want = _distributed_rows(keyed)
+    assert _distributed_rows(with_nulls) == want
+    assert _scored_rows(with_nulls) == want
+    assert want["b3"]["b3_f1"] == 1.0 and want["errors"] == {"conflated": 0, "divided": 0}

@@ -321,3 +321,35 @@ def test_parquet_aggregate_pushdown_serves_from_footers(spark):
         spark.conf.set("spark.sql.sources.useV1SourceList", old_v1)
         spark.conf.set("spark.sql.parquet.aggregatePushdown", old_pd)
     assert tuple(got) == tuple(ref)
+
+
+def test_cached_plan_keeps_output_partitioning(spark):
+    """connected_components caches its symmetrized edges as
+    repartition("u") so each loop round shuffles only the labels. That
+    relies on a Spark default, pinned here:
+    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false
+    keeps AQE from re-planning (coalescing) the cached plan's output
+    partitioning, so a join on u reads the cache with no exchange —
+    the labels side is the only ENSURE_REQUIREMENTS shuffle."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "false"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    edges = (
+        spark.range(200)
+        .select((F.col("id") % 50).alias("u"), F.col("id").alias("v"))
+        .repartition("u")
+        .persist()
+    )
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        edges.count()
+        labels = spark.range(50).select(F.col("id").alias("u"), F.col("id").alias("l"))
+        joined = edges.join(labels, "u")
+        joined.collect()
+        # the adaptive plan prints its final plan first, then the initial one
+        plan = joined._jdf.queryExecution().executedPlan().toString().rsplit("== Initial Plan ==", 1)[0]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        edges.unpersist()
+    assert plan.count("ENSURE_REQUIREMENTS") == 1, plan
