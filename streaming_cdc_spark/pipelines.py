@@ -215,7 +215,6 @@ def ep2_streaming(
     threshold: float,
     limit: int | None = None,
     strategy: str = "cache",
-    checkpoint_dir: str | None = None,
     key_col: str = "category",
     with_metrics: bool = True,
 ) -> dict[str, object]:
@@ -226,36 +225,11 @@ def ep2_streaming(
     stream: streaming DataFrame (key_col, mention_index, embedding);
     gold: batch DataFrame (mention_index, entity_id).
     """
-    import tempfile
-
+    from streaming_cdc_spark.session import drain_stream
     from streaming_cdc_spark.streaming.linker import streaming_linker
 
-    spark = gold.sparkSession
-    # a caller-supplied checkpoint dir is caller-owned (they may want
-    # to resume); one we create ourselves is drained-and-done after
-    # availableNow finishes, so delete it — repeated calls (bench
-    # passes, gates) otherwise accumulate dirs for the process
-    # lifetime (ADVICE r3)
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ep2s_ckpt_")
-    name = f"ep2s_{abs(hash(ckpt)) % 10**9}"
-    from streaming_cdc_spark.session import stream_start_conf
-
     out = streaming_linker(stream, threshold, limit=limit, strategy=strategy, key_col=key_col)
-    with stream_start_conf(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    if own_ckpt:
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-    assign = spark.table(name).select("mention_index", "cluster_id")
+    assign = drain_stream(out, "ep2s").select("mention_index", "cluster_id")
     pairs = assign.join(gold, "mention_index").select(
         F.col("mention_index").alias("mention"),
         F.col("entity_id").alias("true_id"),

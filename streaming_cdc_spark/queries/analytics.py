@@ -358,7 +358,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from streaming_cdc_spark.session import (
         cached_tmp_dir,
-        drain_to_memory,
+        drain_stream,
         write_mtime_pinned_splits,
     )
     from streaming_cdc_spark.streaming.windows import streaming_misra_gries
@@ -391,7 +391,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_misra_gries(
         stream, key_col="key", id_col="event_id", k=_HH_K, n_shards=8
     )
-    emitted = drain_to_memory(out, "hhst")
+    emitted = drain_stream(out, "hhst")
     last = emitted.groupBy("shard").agg(F.max("batch_idx").alias("batch_idx"))
     summ = emitted.join(last, ["shard", "batch_idx"]).select("key", "est")
     return _hh_assemble(keyed_batch.select("key"), summ)

@@ -527,7 +527,7 @@ def ep2_streaming_linker_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_cdc_spark.functions.hashing import md5_long
     from streaming_cdc_spark.session import (
         cached_tmp_dir,
-        drain_to_memory,
+        drain_stream,
         write_mtime_pinned_splits,
     )
     from streaming_cdc_spark.streaming.linker import streaming_linker
@@ -576,4 +576,4 @@ def ep2_streaming_linker_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         limit=_LINKREPLAY_LIMIT,
         strategy="backwards",
     )
-    return drain_to_memory(out, "linkreplay")
+    return drain_stream(out, "linkreplay")

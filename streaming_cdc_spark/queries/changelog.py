@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir
+from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
 
 # Op mix: ~6% deletes, the rest updates/inserts. % 17 guarantees (at
 # every sf) several users whose LATEST op is a delete — the
@@ -225,7 +225,6 @@ def cdc_streaming_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _split_dir(spark, sf_dir)
     state_dir = tempfile.mkdtemp(prefix="cdclog_state_")
-    ckpt_dir = tempfile.mkdtemp(prefix="cdclog_ckpt_")
     stream = (
         spark.readStream.schema(
             "user_id long, seq long, op string, value double, event_type string"
@@ -241,12 +240,10 @@ def cdc_streaming_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload_cols=["value", "event_type"],
     )
     try:
-        q = sink.start(stream, ckpt_dir)
-        q.awaitTermination()
+        drain_stream(stream, sink.apply_batch)
         out = _project(sink.current_state(spark)).localCheckpoint()
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return out
 
 
@@ -275,7 +272,6 @@ def cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _split_dir(spark, sf_dir)
     state_dir = tempfile.mkdtemp(prefix="cdctt_state_")
-    ckpt_dir = tempfile.mkdtemp(prefix="cdctt_ckpt_")
     stream = (
         spark.readStream.schema(
             "user_id long, seq long, op string, value double, event_type string"
@@ -292,13 +288,11 @@ def cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep_versions=4,
     )
     try:
-        q = sink.start(stream, ckpt_dir)
-        q.awaitTermination()
+        drain_stream(stream, sink.apply_batch)
         asof = sink.table_at(spark, _TT_VERSION).filter(F.col("op") != "D")
         out = _project(asof).localCheckpoint()
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return out
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators import dedup as D
 from streaming_cdc_spark.queries.registry import query
+from streaming_cdc_spark.session import drain_stream
 from streaming_cdc_spark.tables import load
 
 # Shared oracle fragments ------------------------------------------------
@@ -1128,7 +1129,6 @@ def _run_progressive_stream(
         )
         _PROGSTREAM_SPLITS[(sf_dir, n_splits)] = src
     state_dir = tempfile.mkdtemp(prefix="progstream_state_")
-    ckpt_dir = tempfile.mkdtemp(prefix="progstream_ckpt_")
     resolver = ProgressiveResolver(
         state_dir, budget=budget, df_cap=df_cap, tau=tau, compact_every=compact_every
     )
@@ -1137,28 +1137,19 @@ def _run_progressive_stream(
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/split_*/*.parquet")
     )
-    from streaming_cdc_spark.session import stream_start_conf
-
-    with stream_start_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(resolver.apply_batch)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+    try:
+        drain_stream(stream, resolver.apply_batch)
+        # pin the (tiny) result in block-manager memory so the per-run
+        # state dir can be deleted now — bench/gate call this query
+        # repeatedly and each run's dirs would otherwise pile up in
+        # /tmp for the process lifetime
+        return (
+            resolver.results(spark)
+            .select("batch_id", "cbs", "n_pairs", "n_matches")
+            .localCheckpoint()
         )
-    q.awaitTermination()
-    # pin the (tiny) result in block-manager memory so the per-run
-    # state + checkpoint dirs can be deleted now — bench/gate call
-    # this query repeatedly and each run's dirs would otherwise pile
-    # up in /tmp for the process lifetime
-    out = (
-        resolver.results(spark)
-        .select("batch_id", "cbs", "n_pairs", "n_matches")
-        .localCheckpoint()
-    )
-    shutil.rmtree(state_dir, ignore_errors=True)
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return out
+    finally:
+        shutil.rmtree(state_dir, ignore_errors=True)
 
 
 @query(
@@ -1277,9 +1268,7 @@ def streaming_bloom_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain joins. A rare thing: a probabilistic streaming operator
     under a full value-hash oracle, false-positive drops included."""
     import os
-    import shutil
     import tempfile
-    import uuid
 
     from streaming_cdc_spark.streaming.windows import streaming_bloom_dedup
 
@@ -1314,30 +1303,7 @@ def streaming_bloom_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_bloom_dedup(
         stream, key_col="kk", id_col="doc_id", n_bits=1 << 14, n_hashes=3, n_shards=8
     )
-    name = f"bloomst_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="bloomst_ckpt_")
-    try:
-        from streaming_cdc_spark.session import stream_start_conf
-
-        with stream_start_conf(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        # no timeout (sibling streaming queries likewise): a timed
-        # await returns False on a slow host and we would read a
-        # PARTIAL table and rmtree a live query's checkpoint
-        q.awaitTermination()
-        # localCheckpoint: materialize the tiny result so the ckpt/state
-        # dirs can be removed before returning (ADVICE r3 leak class)
-        res = spark.table(name).localCheckpoint()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
-    return res.select("doc_id", "shard", "status")
+    return drain_stream(out, "bloomst").select("doc_id", "shard", "status")
 
 
 @query(

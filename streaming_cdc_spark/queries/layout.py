@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from streaming_cdc_spark.operators import layout as L
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir
+from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
 
 _ZV = L.zvalue_sql("zx", "zy")
 
@@ -181,7 +181,6 @@ def zorder_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _ZSTREAM_SPLITS[sf_dir] = src
     path = tempfile.mkdtemp(prefix="zsink_table_")
-    ckpt = tempfile.mkdtemp(prefix="zsink_ckpt_")
     from streaming_cdc_spark.streaming.zorder_sink import ZOrderStreamWriter
 
     try:
@@ -193,8 +192,7 @@ def zorder_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = ZOrderStreamWriter(
             path, "x", "y", bits=16, n_buckets=16, compact_every=3, max_files=1
         )
-        q = w.start(stream, ckpt)
-        q.awaitTermination()
+        drain_stream(stream, w.apply_batch)
         out = (
             w.table.read(spark)
             .select("event_id", "zval", "zbucket")
@@ -202,7 +200,6 @@ def zorder_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from streaming_cdc_spark.operators.temporal import asof_join, time_bucket_rollup
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir
+from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
 
 # Orders are 1995-2001; shift +27 years so they interleave with the
 # 2024-01 event stream and the as-of target varies per event.
@@ -346,26 +346,24 @@ def materialized_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "value")
     )
     state_dir = tempfile.mkdtemp(prefix="matagg_state_")
-    ckpt_dir = tempfile.mkdtemp(prefix="matagg_ckpt_")
     mat = MaterializedAggregate(state_dir, ["user_id"], ["value"])
-    q = mat.start(stream, ckpt_dir)
-    q.awaitTermination()
-    # pin the (one row per user) result off the state table so both
-    # temp dirs can be deleted NOW — without this the returned plan
-    # lazily re-reads the leaked state dir and bench/gate runs
-    # accumulate dirs for the process lifetime (ADVICE r3)
-    t = (
-        mat.table(spark)
-        .select(
-            "user_id",
-            F.col("n_rows").alias("n_rows"),
-            F.round(F.col("sum_value").cast("double"), 2).alias("sum_value_r"),
+    try:
+        drain_stream(stream, mat.apply_batch)
+        # pin the (one row per user) result off the state table so the
+        # state dir can be deleted NOW — without this the returned plan
+        # lazily re-reads the leaked state dir and bench/gate runs
+        # accumulate dirs for the process lifetime (ADVICE r3)
+        return (
+            mat.table(spark)
+            .select(
+                "user_id",
+                F.col("n_rows").alias("n_rows"),
+                F.round(F.col("sum_value").cast("double"), 2).alias("sum_value_r"),
+            )
+            .localCheckpoint()
         )
-        .localCheckpoint()
-    )
-    shutil.rmtree(state_dir, ignore_errors=True)
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return t
+    finally:
+        shutil.rmtree(state_dir, ignore_errors=True)
 
 
 @query(
@@ -499,8 +497,6 @@ def watermarked_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure-zero: watermarks carry microsecond offsets, window ends
     are day-aligned. DECIMAL money sums per the registry rules."""
     import os
-    import shutil
-    import tempfile
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
     src = _WM_SPLITS.get(sf_dir)
@@ -512,7 +508,6 @@ def watermarked_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             [ev.filter(F.col("event_id") % 4 == i) for i in range(4)], src
         )
         _WM_SPLITS[sf_dir] = src
-    ckpt = tempfile.mkdtemp(prefix="wm_ckpt_")
     stream = (
         spark.readStream.schema("event_id long, ts timestamp, value double")
         .option("maxFilesPerTrigger", 1)
@@ -526,30 +521,11 @@ def watermarked_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).alias("_sv"),
         )
     )
-    from streaming_cdc_spark.session import stream_start_conf
-
-    name = f"wmdc_{abs(hash(ckpt)) % 10**9}"
-    with stream_start_conf(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    out = (
-        spark.table(name)
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd").alias("day"),
-            "n_events",
-            F.round(F.col("_sv").cast("double"), 2).alias("sum_value_r"),
-        )
-        .localCheckpoint()
+    return drain_stream(agg, "wmdc").select(
+        F.date_format("w.start", "yyyy-MM-dd").alias("day"),
+        "n_events",
+        F.round(F.col("_sv").cast("double"), 2).alias("sum_value_r"),
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 @query(
@@ -702,8 +678,6 @@ def streaming_sessions_finalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked_daily_counts (tumbling) with the MERGING window kind,
     whose state is per-(user, session), not per-bucket."""
     import os
-    import shutil
-    import tempfile
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     src = _SES_SRC.get(sf_dir)
@@ -711,46 +685,24 @@ def streaming_sessions_finalized(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = cached_tmp_dir("ses_src_")
         ev.coalesce(1).write.parquet(os.path.join(src, "all"))
         _SES_SRC[sf_dir] = src
-    ckpt = tempfile.mkdtemp(prefix="ses_ckpt_")
-    try:
-        stream = (
-            spark.readStream.schema("event_id long, user_id long, ts timestamp")
-            .parquet(f"{src}/all/*.parquet")
-        )
-        agg = (
-            stream.withWatermark("ts", "7 days")
-            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        from streaming_cdc_spark.session import stream_start_conf
-
-        name = f"sesfin_{abs(hash(ckpt)) % 10**9}"
-        with stream_start_conf(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-        out = (
-            spark.table(name)
-            .select(
-                "user_id",
-                F.unix_micros("w.start").alias("session_start_us"),
-                "n_events",
-                (
-                    F.unix_micros(F.col("w.end") - F.expr("INTERVAL 30 MINUTE"))
-                    - F.unix_micros("w.start")
-                ).alias("session_us"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    stream = (
+        spark.readStream.schema("event_id long, user_id long, ts timestamp")
+        .parquet(f"{src}/all/*.parquet")
+    )
+    agg = (
+        stream.withWatermark("ts", "7 days")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    return drain_stream(agg, "sesfin").select(
+        "user_id",
+        F.unix_micros("w.start").alias("session_start_us"),
+        "n_events",
+        (
+            F.unix_micros(F.col("w.end") - F.expr("INTERVAL 30 MINUTE"))
+            - F.unix_micros("w.start")
+        ).alias("session_us"),
+    )
 
 
 @query(
@@ -904,7 +856,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     those three rules flips the hash."""
     import os
 
-    from streaming_cdc_spark.session import drain_to_memory, write_mtime_pinned_splits
+    from streaming_cdc_spark.session import write_mtime_pinned_splits
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id")
     src = _DDW_SRC.get(sf_dir)
@@ -937,7 +889,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", f"{_DDW_D} seconds")
         .dropDuplicatesWithinWatermark(["k"])
     )
-    return drain_to_memory(ded.select("k", "sec"), "ddw").select("k", "sec")
+    return drain_stream(ded.select("k", "sec"), "ddw").select("k", "sec")
 
 
 _SSJ_SRC: dict[str, str] = {}
@@ -1171,12 +1123,10 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction: an earlier row is evicted only when no on-time
     future partner can satisfy the condition). Row multiplicities
     carry through the join on both engines."""
-    from streaming_cdc_spark.session import drain_to_memory
-
     src = _cb_fixture(spark, sf_dir, _SSJ_SRC, "ssj_src_", late_shift=2000)
     c, b = _cb_streams(spark, src)
     j = _cb_join(c, b)
-    return drain_to_memory(
+    return drain_stream(
         j.select(F.col("ck").alias("k"), "csec", "bsec"), "ssj"
     ).select("k", "csec", "bsec")
 
@@ -1283,14 +1233,12 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     blast radius while still exercising late input in the stream.
     NULL bsec is carried as the -1 sentinel on both engines
     (nullable-BIGINT NaN is the scd2 fetch-path hazard)."""
-    from streaming_cdc_spark.session import drain_to_memory
-
     src = _cb_fixture(
         spark, sf_dir, _LOJ_SRC, "loj_src_", late_shift=5000, abandoned_mod4=1
     )
     c, b = _cb_streams(spark, src)
     j = _cb_join(c, b, "leftOuter")
-    out = drain_to_memory(
+    out = drain_stream(
         j.select(F.col("ck").alias("k"), "csec", "bsec"), "loj"
     )
     return out.select(
@@ -1354,8 +1302,6 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot mask an off-by-one there — the probe test pins
     strictness instead. NULL csec/bsec carried as -1 sentinels on both
     engines (the scd2 nullable-BIGINT fetch hazard)."""
-    from streaming_cdc_spark.session import drain_to_memory
-
     src = _cb_fixture(
         spark,
         sf_dir,
@@ -1367,7 +1313,7 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c, b = _cb_streams(spark, src)
     j = _cb_join(c, b, "fullOuter")
-    out = drain_to_memory(
+    out = drain_stream(
         j.select(
             F.coalesce(F.col("ck"), F.col("bk")).alias("k"), "csec", "bsec"
         ),
@@ -1431,8 +1377,6 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic propagates CORRECTLY THROUGH the join into the
     aggregation's finalization decision — the property
     single-operator queries cannot test."""
-    from streaming_cdc_spark.session import drain_to_memory
-
     src = _cb_fixture(spark, sf_dir, _SJW_SRC, "sjw_src_", late_shift=0)
     c, b = _cb_streams(spark, src)
     j = _cb_join(c, b)
@@ -1455,7 +1399,7 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_lag_sec",
         )
     )
-    return drain_to_memory(g, "sjw").select(
+    return drain_stream(g, "sjw").select(
         "win_start_sec", "n_pairs", "sum_lag_sec"
     )
 
@@ -1634,8 +1578,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer row at every sf — pinned by
     test_sse_fixture_every_event_user_has_customer), so no rows ride
     on matched-ness."""
-    from streaming_cdc_spark.session import drain_to_memory
-
     src = _sse_fixture(spark, sf_dir)
     dim = F.broadcast(
         load(spark, sf_dir, "customer").select(
@@ -1650,7 +1592,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{src}/split_*/*.parquet")
     )
     joined = stream.join(dim, "user_id", "inner")
-    drained = drain_to_memory(
+    drained = drain_stream(
         joined.select("c_mktsegment", "event_type", "cents"), "sse"
     )
     return drained.groupBy("c_mktsegment", "event_type").agg(
@@ -1675,10 +1617,7 @@ def streaming_sessions_custom_state(spark: SparkSession, sf_dir: str) -> DataFra
     too."""
     import os
 
-    from streaming_cdc_spark.session import (
-        drain_to_memory,
-        ensure_package_on_executors,
-    )
+    from streaming_cdc_spark.session import ensure_package_on_executors
     from streaming_cdc_spark.streaming.windows import streaming_sessionizer_custom
 
     ensure_package_on_executors(spark)
@@ -1693,7 +1632,7 @@ def streaming_sessions_custom_state(spark: SparkSession, sf_dir: str) -> DataFra
         .parquet(f"{src}/all/*.parquet")
     )
     out = streaming_sessionizer_custom(stream)
-    return drain_to_memory(
+    return drain_stream(
         out.select("user_id", "session_start_us", "n_events", "session_us"),
         "sescs",
     ).select("user_id", "session_start_us", "n_events", "session_us")
@@ -1762,7 +1701,6 @@ def stream_static_enrich_evolving(spark: SparkSession, sf_dir: str) -> DataFrame
     # batch-1 state into a replay's batch 0
     dim_dir = tempfile.mkdtemp(prefix="ssee_dim_")
     out_dir = tempfile.mkdtemp(prefix="ssee_out_")
-    ckpt = tempfile.mkdtemp(prefix="ssee_ckpt_")
     try:
         cust.filter(~held).write.mode("overwrite").parquet(f"{dim_dir}/base")
         late_rows = cust.filter(held).localCheckpoint()
@@ -1800,16 +1738,7 @@ def stream_static_enrich_evolving(spark: SparkSession, sf_dir: str) -> DataFrame
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/split_*/*.parquet")
         )
-        from streaming_cdc_spark.session import stream_start_conf
-
-        with stream_start_conf(spark):
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        drain_stream(stream, handle)
         return (
             spark.read.parquet(f"{out_dir}/b*")
             .groupBy("segment", "event_type")
@@ -1820,7 +1749,6 @@ def stream_static_enrich_evolving(spark: SparkSession, sf_dir: str) -> DataFrame
             .localCheckpoint()
         )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(dim_dir, ignore_errors=True)
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -1871,8 +1799,6 @@ def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-range batches (the shared _sse_fixture); state is the
     per-type running aggregate — at 100 TB the state store holds
     |keys| rows, the mode never rescans history."""
-    from streaming_cdc_spark.session import drain_to_memory
-
     src = _sse_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(
@@ -1885,7 +1811,7 @@ def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("cents").cast("long").alias("cents_sum"),
     )
-    return drain_to_memory(agg, "updm", output_mode="update")
+    return drain_stream(agg, "updm", output_mode="update")
 
 
 _CPLM_ORACLE = """
@@ -1924,8 +1850,6 @@ def streaming_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB: re-emission cost scales with the RESULT, not the
     stream, and a result-bounded query is the only kind complete
     mode should ever serve."""
-    from streaming_cdc_spark.session import drain_to_memory
-
     src = _sse_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(
@@ -1943,7 +1867,7 @@ def streaming_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("n").desc(), "event_type")
         .limit(3)
     )
-    return drain_to_memory(top, "cplm", output_mode="complete")
+    return drain_stream(top, "cplm", output_mode="complete")
 
 
 _TTC_ORACLE = """

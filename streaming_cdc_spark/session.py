@@ -199,37 +199,45 @@ class stream_start_conf:
         return False
 
 
-def drain_to_memory(out_df, prefix: str, output_mode: str | None = None):
-    """availableNow-drain a streaming DataFrame through a memory sink
-    and return the collected table as a localCheckpointed batch
-    DataFrame. Owns the crash-safety conventions fixed piecemeal in
-    r4-r6: UNTIMED awaitTermination (a timed one can return False on
-    a slow host -> partial table + rmtree of a LIVE checkpoint),
-    checkpoint rmtree and temp-view drop in finally, fresh uuid query
-    name per call (replays must not collide). output_mode: None =
-    sink default (append); 'update' makes the memory sink ACCUMULATE
-    each batch's changed-key emissions — the returned table then
-    holds one row per (key, batch-that-touched-it), which is the
-    update-mode evidence surface."""
-    import shutil
+def drain_stream(df, sink, output_mode: str | None = None):
+    """availableNow-drain a finite streaming DataFrame: the engine's one
+    stream start. ``sink`` is either a memory-table name prefix (str)
+    or a foreachBatch handler ``(batch_df, batch_id) -> None``.
+
+    Owns:
+    - a fresh checkpoint dir per call (``<prefix>_ckpt_*``);
+    - the start under ``stream_start_conf``, with availableNow;
+    - an UNTIMED awaitTermination (a timed one can return False on a
+      slow host -> partial table + rmtree of a LIVE checkpoint); it
+      raises StreamingQueryException when the query fails, so a
+      handler's error reaches the caller;
+    - removal of the checkpoint and, for a memory sink, the temp view,
+      both in ``finally``.
+
+    Each drain runs under a fresh uuid query name (replays must not
+    collide). Memory prefix: returns the collected table
+    localCheckpointed. Handler: returns None; the handler owns whatever
+    it writes. output_mode: None = sink default (append); 'update'
+    makes the memory sink ACCUMULATE each batch's changed-key emissions
+    — the returned table then holds one row per (key,
+    batch-that-touched-it), which is the update-mode evidence
+    surface."""
     import uuid
 
-    spark = out_df.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = cached_tmp_dir(f"{prefix}_ckpt_")
+    spark = df.sparkSession
+    memory = isinstance(sink, str)
+    tag = sink if memory else "foreach_batch"
+    name = f"{tag}_{uuid.uuid4().hex[:8]}"
+    ckpt = tempfile.mkdtemp(prefix=f"{tag}_ckpt_")
     try:
-        w = out_df.writeStream.format("memory")
+        w = df.writeStream.queryName(name)
+        w = w.format("memory") if memory else w.foreachBatch(sink)
         if output_mode is not None:
             w = w.outputMode(output_mode)
         with stream_start_conf(spark):
-            q = (
-                w.queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+            q = w.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
         q.awaitTermination()
-        return spark.table(name).localCheckpoint()
+        return spark.table(name).localCheckpoint() if memory else None
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
+        spark.catalog.dropTempView(name)  # no-op for a handler sink

@@ -31,7 +31,10 @@ class GrinchStreamService:
     Within a micro-batch rows fold in ``id_col`` order; across
     batches in arrival (batch) order — identical to the reference's
     file-line order when the source delivers files in sequence
-    (maxFilesPerTrigger=1 replays it exactly).
+    (maxFilesPerTrigger=1 replays it exactly). A batch id at or below
+    the last folded one is skipped, so foreachBatch's at-least-once
+    redelivery cannot insert a leaf twice. Attach with
+    ``session.drain_stream(stream, svc.foreach_batch)``.
     """
 
     def __init__(
@@ -47,8 +50,11 @@ class GrinchStreamService:
         self.tree_params = tree_params
         self.tree: GrinchTree | None = None
         self.n_batches = 0
+        self.last_batch_id = -1
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= self.last_batch_id:
+            return  # at-least-once redelivery: already folded in
         cols = [self.id_col, self.vec_col] + ([self.label_col] if self.label_col else [])
         rows = batch_df.select(*cols).orderBy(self.id_col).collect()
         if not rows:
@@ -62,19 +68,7 @@ class GrinchStreamService:
                 label=r[self.label_col] if self.label_col else None,
             )
         self.n_batches += 1
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        """Attach to a streaming DataFrame; returns the StreamingQuery
-        (availableNow-compatible; call awaitTermination yourself)."""
-        from streaming_cdc_spark.session import stream_start_conf
-
-        with stream_start_conf(stream.sparkSession):
-            return (
-                stream.writeStream.foreachBatch(self.foreach_batch)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
+        self.last_batch_id = batch_id
 
     def flat_clusters(self, threshold: float) -> dict:
         """C14 flat cut of the accumulated tree."""

@@ -37,7 +37,6 @@ the stream volume. State on disk is one row per key.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +44,8 @@ from pyspark.sql import functions as F
 
 class _VersionedKeyedTable:
     """Versioned-publish state machinery shared by the concrete sinks:
-    pointer management, replay skip, retention, stream attachment.
+    pointer management, replay skip, retention. Attach with
+    ``session.drain_stream(stream, sink.apply_batch)``.
     Subclasses define ``_partial`` (reduce one micro-batch to one row
     per key) and ``_merge`` (combine the stored table with a partial —
     both must be commutative/idempotent so replays and merge order
@@ -111,20 +111,6 @@ class _VersionedKeyedTable:
                 shutil.rmtree(d, ignore_errors=True)
             else:
                 break
-
-    def start(self, stream: DataFrame, checkpoint_dir: str | None = None):
-        """Attach to a streaming DataFrame; availableNow drains a
-        finite stream to completion (caller awaits termination)."""
-        from streaming_cdc_spark.session import stream_start_conf
-
-        ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="matagg_ckpt_")
-        with stream_start_conf(stream.sparkSession):
-            return (
-                stream.writeStream.foreachBatch(self.apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
 
     def table(self, spark: SparkSession) -> DataFrame:
         """The current materialized table (empty-version safe)."""

@@ -75,16 +75,3 @@ class ZOrderStreamWriter:
                 target_files=self.target_files,
             )
 
-    def start(self, stream: DataFrame, checkpoint_dir: str | None = None):
-        import tempfile
-
-        from streaming_cdc_spark.session import stream_start_conf
-
-        ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="zsink_ckpt_")
-        with stream_start_conf(stream.sparkSession):
-            return (
-                stream.writeStream.foreachBatch(self.apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )

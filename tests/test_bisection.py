@@ -48,7 +48,7 @@ def test_ep2_streaming(spark, tmp_path):
     gold = spark.createDataFrame(
         [(i, lab) for i, (_, lab) in vecs.items()], "mention_index long, entity_id string"
     )
-    out = ep2_streaming(stream, gold, threshold=0.9, checkpoint_dir=str(tmp_path / "ck"))
+    out = ep2_streaming(stream, gold, threshold=0.9)
     assert out["summary"].first()["mean_f1"] == pytest.approx(1.0, abs=1e-6)
 
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators.changelog import apply_changelog, latest_ops
+from streaming_cdc_spark.session import drain_stream
 from streaming_cdc_spark.streaming.materialize import MaterializedChangelog
 
 SCHEMA = "k long, seq long, op string, v double"
@@ -66,8 +67,7 @@ def _drain(spark, tmp_path, batches):
     sink = MaterializedChangelog(
         str(tmp_path / "state"), ["k"], "seq", "op", ["v"]
     )
-    q = sink.start(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    drain_stream(stream, sink.apply_batch)
     return sink
 
 
@@ -348,8 +348,7 @@ def test_streaming_ivm_equals_recompute(spark, tmp_path):
         .json(str(src))
     )
     mat = MaterializedAggregate(str(tmp_path / "st"), ["grp"], ["dv", "dl"])
-    q = mat.start(stream, str(tmp_path / "ck"))
-    q.awaitTermination()
+    drain_stream(stream, mat.apply_batch)
     got = {
         r["grp"]: (float(r["sum_dv"]), int(r["sum_dl"]))
         for r in mat.table(spark).collect()

@@ -9,7 +9,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from streaming_cdc_spark.session import (
-    drain_to_memory,
+    drain_stream,
     ensure_package_on_executors,
     write_mtime_pinned_splits,
 )
@@ -28,7 +28,7 @@ def _drain(spark, src_glob):
     return sorted(
         map(
             tuple,
-            drain_to_memory(
+            drain_stream(
                 out.select(
                     "user_id", "session_start_us", "n_events", "session_us"
                 ),

@@ -151,6 +151,7 @@ def test_grinch_stream_service_matches_offline(spark, tmp_path):
     the SAME tree as the offline sequential build."""
     import json as _json
 
+    from streaming_cdc_spark.session import drain_stream
     from streaming_cdc_spark.streaming.grinch_service import GrinchStreamService
 
     rows = clustered_vectors()
@@ -171,8 +172,7 @@ def test_grinch_stream_service_matches_offline(spark, tmp_path):
         .json(str(src))
     )
     svc = GrinchStreamService()
-    q = svc.start(stream, str(tmp_path / "gck"))
-    q.awaitTermination(120)
+    drain_stream(stream, svc.foreach_batch)
     assert svc.n_batches == 3
 
     from streaming_cdc_spark.operators.grinch import GrinchTree
@@ -187,6 +187,31 @@ def test_grinch_stream_service_matches_offline(spark, tmp_path):
         len([1 for _, c in got.items() if c == cid]) for cid in set(got.values())
     )
     assert sizes == [8, 8, 8]
+
+
+def test_grinch_stream_service_skips_replayed_batch(spark):
+    """foreachBatch is at-least-once: delivering batch k twice must
+    leave the tree exactly as one delivery does (no leaf inserted
+    twice), and a genuinely new batch id still folds in."""
+    from streaming_cdc_spark.streaming.grinch_service import GrinchStreamService
+
+    rows = clustered_vectors()
+    df = spark.createDataFrame(
+        rows[:12], "vec_id long, embedding array<double>, label string"
+    )
+    once, twice = GrinchStreamService(), GrinchStreamService()
+    once.foreach_batch(df, 0)
+    twice.foreach_batch(df, 0)
+    twice.foreach_batch(df, 0)
+    assert twice.n_batches == once.n_batches == 1
+    assert len(twice.tree.edge_rows()) == len(once.tree.edge_rows())
+    assert twice.flat_clusters(0.9) == once.flat_clusters(0.9)
+    assert len(twice.flat_clusters(0.9)) == 12
+    rest = spark.createDataFrame(
+        rows[12:], "vec_id long, embedding array<double>, label string"
+    )
+    twice.foreach_batch(rest, 1)
+    assert twice.n_batches == 2 and len(twice.flat_clusters(0.9)) == len(rows)
 
 
 def test_grinch_per_key_purity_golden(spark):

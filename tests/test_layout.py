@@ -440,6 +440,7 @@ def test_zorder_stream_writer_matches_batch_table(spark, tmp_path):
     import json
     import time
 
+    from streaming_cdc_spark.session import drain_stream
     from streaming_cdc_spark.streaming.zorder_sink import ZOrderStreamWriter
 
     ev = _ztable_events(spark).limit(300).localCheckpoint()
@@ -464,8 +465,7 @@ def test_zorder_stream_writer_matches_batch_table(spark, tmp_path):
         str(tmp_path / "ztab"), "x", "y", bits=16, n_buckets=8,
         compact_every=2, max_files=1,
     )
-    q = w.start(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    drain_stream(stream, w.apply_batch)
     got = w.table.read(spark)
     assert got.count() == 300
     assert got.select("event_id").distinct().count() == 300

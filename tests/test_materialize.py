@@ -6,6 +6,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from streaming_cdc_spark.session import drain_stream
 from streaming_cdc_spark.streaming.materialize import MaterializedAggregate
 
 SCHEMA = "user_id long, value double"
@@ -27,8 +28,7 @@ def drain(spark, tmp_path, files):
         .json(str(src))
     )
     mat = MaterializedAggregate(str(tmp_path / "state"), ["user_id"], ["value"])
-    q = mat.start(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    drain_stream(stream, mat.apply_batch)
     return mat
 
 
@@ -80,8 +80,7 @@ def test_time_travel_table_at(spark, tmp_path):
     mat = MaterializedAggregate(
         str(tmp_path / "state"), ["user_id"], ["value"], keep_versions=3
     )
-    q = mat.start(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    drain_stream(stream, mat.apply_batch)
     assert mat.versions() == [0, 1, 2]
     # AS OF version 1 == batch aggregate over files 0..1
     got = {
@@ -153,7 +152,14 @@ def test_restart_resumes_materialization(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        q = mat.start(stream, ckpt)
+        # a FIXED checkpoint (drain_stream always starts fresh): the
+        # restart from it is what this test checks
+        q = (
+            stream.writeStream.foreachBatch(mat.apply_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination(120)
 
     for i, rs in enumerate([rows(0), rows(1)]):

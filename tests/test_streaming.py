@@ -3,6 +3,7 @@
 offline fold on identical data, incl. multi-batch state carry-over."""
 
 import json
+import os
 import time
 
 import numpy as np
@@ -540,7 +541,7 @@ def test_update_mode_emits_only_touched_keys_with_running_totals(spark, tmp_path
     # upgrade changing update-mode emission fails HERE.
     from pyspark.sql import functions as F
 
-    from streaming_cdc_spark.session import drain_to_memory, write_mtime_pinned_splits
+    from streaming_cdc_spark.session import drain_stream, write_mtime_pinned_splits
 
     def df(rows):
         return spark.createDataFrame(rows, "k string, v long")
@@ -558,7 +559,7 @@ def test_update_mode_emits_only_touched_keys_with_running_totals(spark, tmp_path
         F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
     )
     got = sorted(
-        map(tuple, drain_to_memory(agg, "updt", output_mode="update").collect())
+        map(tuple, drain_stream(agg, "updt", output_mode="update").collect())
     )
     assert got == [
         ("a", 1, 1), ("a", 2, 4), ("a", 3, 9),
@@ -659,7 +660,7 @@ def test_stream_start_conf_sizes_state_stores_and_restores(
     from pyspark.sql import functions as F
 
     from streaming_cdc_spark.session import (
-        drain_to_memory,
+        drain_stream,
         stream_start_conf,
         stream_shuffle_partitions,
         write_mtime_pinned_splits,
@@ -722,7 +723,90 @@ def test_stream_start_conf_sizes_state_stores_and_restores(
     got_default = sorted(
         map(
             tuple,
-            drain_to_memory(agg_stream(), "ssc_eq", output_mode="complete").collect(),
+            drain_stream(agg_stream(), "ssc_eq", output_mode="complete").collect(),
         )
     )
     assert got_small == got_default == [("a", 2, 4), ("b", 1, 2), ("c", 1, 4)]
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _ckpt_dirs():
+    import glob
+    import tempfile
+
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "*_ckpt_*")))
+
+
+def test_drains_leave_no_view_or_checkpoint(spark, tmp_path):
+    """Every drain removes its checkpoint dir and its memory-sink temp
+    view: ep2_streaming and the two watermarked append-mode queries
+    used to keep the view (and the sink's rows on the driver) for the
+    rest of the session."""
+    from streaming_cdc_spark.pipelines import ep2_streaming
+    from streaming_cdc_spark.queries import QUERIES
+    from streaming_cdc_spark.tables import DEFAULT_SF_DIR
+
+    views, ckpts = _temp_views(spark), _ckpt_dirs()
+    # the tests/test_bisection.py::test_ep2_streaming fixture
+    vecs = {0: ([1.0, 0.0], "A"), 1: ([0.99, 0.05], "A"),
+            2: ([0.0, 1.0], "B"), 3: ([0.03, 0.99], "B")}
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "m.jsonl").write_text(
+        "\n".join(
+            json.dumps({"category": "k", "mention_index": i, "embedding": v})
+            for i, (v, _) in vecs.items()
+        )
+    )
+    stream = spark.readStream.schema(SCHEMA).json(str(src))
+    gold = spark.createDataFrame(
+        [(i, lab) for i, (_, lab) in vecs.items()], "mention_index long, entity_id string"
+    )
+    out = ep2_streaming(stream, gold, threshold=0.9)
+    assert out["summary"].first()["mean_f1"] == pytest.approx(1.0, abs=1e-6)
+    sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    for name in ("watermarked_daily_counts", "streaming_sessions_finalized"):
+        assert QUERIES[name](spark, sf).count() > 0
+    assert _temp_views(spark) - views == set()
+    assert _ckpt_dirs() - ckpts == set()
+
+
+def test_drain_stream_handler_error_propagates_and_cleans_up(spark, tmp_path):
+    """A failing foreachBatch handler surfaces out of drain_stream (the
+    untimed await raises StreamingQueryException) and the drain's
+    checkpoint dir is still removed."""
+    from pyspark.errors import StreamingQueryException
+
+    from streaming_cdc_spark.session import drain_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "f0.jsonl").write_text(json.dumps(mention_rows()[0]))
+    stream = spark.readStream.schema(SCHEMA).json(str(src))
+    before, during = _ckpt_dirs(), set()
+
+    def handler(batch_df, batch_id):
+        during.update(_ckpt_dirs() - before)
+        raise ValueError("handler boom")
+
+    with pytest.raises(StreamingQueryException, match="handler boom"):
+        drain_stream(stream, handler)
+    assert len(during) == 1
+    assert not any(os.path.exists(d) for d in during)
+
+
+def test_stream_starts_only_in_session():
+    """Every engine stream start goes through session.drain_stream: no
+    other module under streaming_cdc_spark/ may hand-roll one."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "streaming_cdc_spark"
+    hits = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "writeStream" in p.read_text() or "stream_start_conf(" in p.read_text()
+    )
+    assert hits == ["session.py"]
