@@ -117,6 +117,19 @@ def get_spark(
         # collapsing back to their isolated-run times at 48g.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
+    # Only force a master when none is configured (driver may set its own).
+    if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
+        # Python workers start through _pyworker/pyspark_scs_worker.py,
+        # which stops every task re-reading each zip's directory (see
+        # its docstring). Local master only: this path exists on this
+        # host. The dir holds only that module, so engine code in tasks
+        # still loads from the addPyFile snapshot.
+        pyworker = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pyworker")
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.python.worker.module", "pyspark_scs_worker")
+            .config("spark.executorEnv.PYTHONPATH", pyworker)
+        )
     # extra_conf lands last so callers can override any default above;
     # it only takes effect when this call actually CREATES the session
     # (getOrCreate reuses an existing JVM's confs) — tools that need a
@@ -124,9 +137,6 @@ def get_spark(
     # the UI REST API) must run in a fresh process.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    # Only force a master when none is configured (driver may set its own).
-    if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -51,8 +51,15 @@ class ProgressiveResolver:
     Parameters mirror the batch query: ``df_cap`` bounds shingle
     document frequency (computed over the corpus visible at each
     batch), ``budget`` is the per-batch verified-pair cap, ``tau`` the
-    capped-Jaccard match threshold.
+    capped-Jaccard match threshold. Batches carry ``doc_id bigint,
+    text string, bucket int``.
     """
+
+    # the schemas of the three tables this class writes; every read
+    # passes its schema, so no read runs a schema-inference job
+    POSTINGS_SCHEMA = "doc_id bigint, shingle bigint"
+    DF_SCHEMA = "shingle bigint, df bigint"
+    RESULT_SCHEMA = "batch_id int, cbs bigint, n_pairs bigint, n_matches bigint"
 
     def __init__(
         self,
@@ -113,7 +120,7 @@ class ProgressiveResolver:
         ]
         return live
 
-    def _seen(self, spark, root: str, exclude_from: int) -> DataFrame | None:
+    def _seen(self, spark, root: str, schema: str, exclude_from: int) -> DataFrame | None:
         """State rows under ``root``, EXCLUDING every bucket with id
         >= ``exclude_from``. Bucket ids are monotone in arrival order,
         so when (re)processing bucket k the visible corpus is exactly
@@ -130,7 +137,7 @@ class ProgressiveResolver:
         ]
         if not subdirs:
             return None
-        return spark.read.parquet(*subdirs)
+        return spark.read.schema(schema).parquet(*subdirs)
 
     def compact(self, spark, keep_last: int = 2, protect_from: int | None = None) -> None:
         """Fold old per-bucket state dirs into one compacted
@@ -162,7 +169,10 @@ class ProgressiveResolver:
         generation — double-counted on replay)."""
         import shutil
 
-        for root, agg in ((self.state_root, False), (self.df_root, True)):
+        for root, schema, agg in (
+            (self.state_root, self.POSTINGS_SCHEMA, False),
+            (self.df_root, self.DF_SCHEMA, True),
+        ):
             live = self._live_dirs(root)
             # numeric order: lexical sort would place b10 before b2
             buckets = sorted(
@@ -179,7 +189,9 @@ class ProgressiveResolver:
                 int(n.rsplit("v", 1)[1]) for n in live if n.startswith("compact_v")
             ]
             new_name = f"compact_v{(max(gens) + 1) if gens else 0}"
-            merged = spark.read.parquet(*[os.path.join(root, n) for n in inputs])
+            merged = spark.read.schema(schema).parquet(
+                *[os.path.join(root, n) for n in inputs]
+            )
             if agg:
                 merged = merged.groupBy("shingle").agg(
                     F.sum("df").cast("long").alias("df")
@@ -249,7 +261,9 @@ class ProgressiveResolver:
         # cached (lazily): they feed the probe union, the partial
         # aggregates, AND the state write.
         post_batch = exploded_shingles(batch, hashed=True).persist()
-        post_seen = self._seen(spark, self.state_root, exclude_from=bucket)
+        post_seen = self._seen(
+            spark, self.state_root, self.POSTINGS_SCHEMA, exclude_from=bucket
+        )
         sh = (
             post_seen.unionByName(post_batch) if post_seen is not None else post_batch
         ).persist()
@@ -273,7 +287,7 @@ class ProgressiveResolver:
         df_batch = post_batch.groupBy("shingle").agg(
             F.count(F.lit(1)).alias("df")
         )
-        df_seen = self._seen(spark, self.df_root, exclude_from=bucket)
+        df_seen = self._seen(spark, self.df_root, self.DF_SCHEMA, exclude_from=bucket)
         df_all = (
             df_seen.unionByName(df_batch) if df_seen is not None else df_batch
         )
@@ -300,11 +314,12 @@ class ProgressiveResolver:
             .agg(F.count(F.lit(1)).alias("cbs"))
         )
         # pin the ≤budget winning edges so the verify below doesn't
-        # re-run the whole candidate pipeline per consumer. LAZY
-        # (optimization r9): plan truncation is unchanged; the result
-        # write below is the materializing action (its broadcast of
-        # top_ids computes and caches the RDD first), so each bucket
-        # pays one fewer sequential driver job.
+        # re-run the whole candidate pipeline per consumer. eager=False
+        # defers only the final top-B job to the result write: under
+        # AQE, building the checkpoint RDD calls physicalPlan.execute(),
+        # which runs every upstream shuffle stage (df-cap aggregate,
+        # probe join, edge aggregate) right here, while the plan is
+        # built, before the three writes below start.
         top = (
             edges.orderBy(F.desc("cbs"), "doc_a", "doc_b")
             .limit(self.budget)
@@ -373,8 +388,6 @@ class ProgressiveResolver:
         finally:
             shc.unpersist()
 
-    RESULT_SCHEMA = "batch_id int, cbs bigint, n_pairs bigint, n_matches bigint"
-
     def results(self, spark) -> DataFrame:
         subdirs = [
             os.path.join(self.result_root, d)
@@ -383,4 +396,4 @@ class ProgressiveResolver:
         ]
         if not subdirs:  # empty stream: no batch ever published
             return spark.createDataFrame([], self.RESULT_SCHEMA)
-        return spark.read.parquet(*subdirs)
+        return spark.read.schema(self.RESULT_SCHEMA).parquet(*subdirs)

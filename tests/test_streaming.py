@@ -274,6 +274,43 @@ def test_progressive_multibucket_replay_df_cap(spark, tmp_path):
     assert {tuple(x) for x in r.results(spark).collect()} == first
 
 
+def test_progressive_state_reads_declare_written_schemas(spark, tmp_path):
+    """Every state read passes the schema the resolver writes: building
+    the reads runs no schema-inference job, and each declared schema
+    equals the one Spark infers from the written files."""
+    import os
+
+    from streaming_cdc_spark.streaming.progressive import ProgressiveResolver
+
+    docs = spark.createDataFrame(
+        [(i, "alpha beta gamma delta shared run %d %d" % (i % 4, i), i // 5)
+         for i in range(10)],
+        "doc_id long, text string, bucket int",
+    )
+    r = ProgressiveResolver(str(tmp_path / "st"), budget=5, df_cap=50, tau=0.05)
+    r.apply_batch(docs, 0)
+    tables = (
+        (r.state_root, r.POSTINGS_SCHEMA),
+        (r.df_root, r.DF_SCHEMA),
+        (r.result_root, r.RESULT_SCHEMA),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("progressive_reads", "progressive_reads")
+    try:
+        reads = [
+            r._seen(spark, root, schema, exclude_from=2) for root, schema in tables[:2]
+        ] + [r.results(spark)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("progressive_reads") == []
+    for df, (root, _schema) in zip(reads, tables):
+        inferred = spark.read.parquet(os.path.join(root, "b0")).schema
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in inferred
+        ]
+
+
 def test_progressive_compaction_preserves_results(spark, tmp_path):
     """compact() folds old bucket state into one generation without
     changing anything the resolver computes: a run compacted between
