@@ -1,16 +1,19 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...,
+ "cpus": ..., "loadavg": [...], "git_sha": ...}
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from streaming_cdc_spark.queries import QUERIES  # noqa: E402
 from streaming_cdc_spark.session import get_spark  # noqa: E402
@@ -334,6 +337,19 @@ HEADLINE = [
 ]
 
 
+def run_info(cpus: int, repo: str = ROOT) -> dict:
+    """Host context recorded with every run: the local core count the
+    session resolved, the 1/5/15-minute load average, and the
+    checkout's commit (None when ``repo`` is not a git repository)."""
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=repo, capture_output=True, text=True, timeout=10
+        ).stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        sha = None
+    return {"cpus": cpus, "loadavg": [round(x, 2) for x in os.getloadavg()], "git_sha": sha}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
@@ -453,6 +469,7 @@ def main() -> None:
         sum(t for n, t in timings.items() if n in streaming_names and t >= 0), 3
     )
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    info = run_info(spark.sparkContext.defaultParallelism)
     # Full per-query record goes to a SIDECAR (BENCH_DETAIL.jsonl,
     # appended per run): the driver captures stdout through a window
     # that truncated r4's one-liner once the registry grew past ~70
@@ -471,11 +488,9 @@ def main() -> None:
         "streaming_fixed_overhead_sec": streaming_overhead,
         "n_streaming_queries": len(streaming_names),
         "sf": sf_val,
+        **info,
     }
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.jsonl"),
-        "a",
-    ) as f:
+    with open(os.path.join(ROOT, "BENCH_DETAIL.jsonl"), "a") as f:
         f.write(json.dumps(detail) + "\n")
     if os.environ.get("SPARK_GRAFT_BENCH_FULL"):
         # machine-to-machine path (run_gates): full per-query map on
@@ -503,6 +518,7 @@ def main() -> None:
                 "streaming_fixed_overhead_sec": streaming_overhead,
                 "n_streaming_queries": len(streaming_names),
                 "sf": sf_val,
+                **info,
             }
         )
     )

@@ -96,12 +96,6 @@ class GrinchTree:
         self._act_seq = seq
         self._cap = new_cap
 
-    @property
-    def sums(self):
-        """Per-node vector sums (row-indexed view; kept for API parity
-        with callers/tests that inspect the raw state)."""
-        return self._sums
-
     def _activate(self, nid: int) -> None:
         self.is_active_leaf[nid] = True
         self._cent[nid] = self.centroid(nid)
@@ -200,9 +194,6 @@ class GrinchTree:
 
     def _sim(self, a: np.ndarray, b: np.ndarray) -> float:
         return float(a @ b)
-
-    def active_leaf_ids(self) -> list[int]:
-        return [i for i, a in enumerate(self.is_active_leaf) if a]
 
     def _nn_leaf(self, vec: np.ndarray, exclude: set[int] = frozenset()) -> int | None:
         """Vectorized 1-NN over active-leaf centroids (C9 cknn): one

@@ -186,61 +186,7 @@ def files_overlapping(stats: list[dict], box: dict) -> int:
     return n
 
 
-# --- Z-ordered table maintenance (init / append / compact) ---------------
-
-
-def _bounds_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_zbounds.json")
-
-
-def zorder_table_init(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    path: str,
-    bits: int = ZBITS,
-    n_buckets: int = 64,
-) -> dict:
-    """Create a z-ordered table: freeze the normalization bounds in a
-    `_zbounds.json` manifest and write the data hive-partitioned by
-    `zbucket` (tile id), each tile sorted by the stored `zval`.
-
-    Freezing bounds is the load-bearing decision: if appends re-derived
-    min/max, a single out-of-range row would RE-TILE the whole table
-    (every zbucket changes meaning). Instead appends clamp into the
-    frozen range — out-of-range rows land in edge tiles, and a bounds
-    refresh is an explicit full rewrite (init again), exactly how
-    Delta/Iceberg treat re-clustering."""
-    import json
-
-    _tile_shift(bits, n_buckets)  # validate n_buckets up front
-    bounds_row = df.agg(
-        F.min(x_col).cast("long").alias("xmin"),
-        F.max(x_col).cast("long").alias("xmax"),
-        F.min(y_col).cast("long").alias("ymin"),
-        F.max(y_col).cast("long").alias("ymax"),
-    ).first()
-    if bounds_row["xmin"] is None or bounds_row["ymin"] is None:
-        raise ValueError(
-            "zorder_table_init: input has no rows (or all-NULL keys) — "
-            "bounds cannot be frozen from an empty batch"
-        )
-    bounds = {
-        "x_col": x_col,
-        "y_col": y_col,
-        "bits": bits,
-        "n_buckets": n_buckets,
-        "xmin": int(bounds_row["xmin"]),
-        "xmax": int(bounds_row["xmax"]),
-        "ymin": int(bounds_row["ymin"]),
-        "ymax": int(bounds_row["ymax"]),
-    }
-    _write_tiles(df, bounds, path, mode="overwrite")
-    with open(_bounds_path(path), "w") as f:
-        json.dump(bounds, f)
-    return bounds
+# --- Manifest-indirected z-ordered table (init / append / compact) --------
 
 
 def _keys_with_bounds(df: DataFrame, b: dict) -> DataFrame:
@@ -262,105 +208,16 @@ def _keys_with_bounds(df: DataFrame, b: dict) -> DataFrame:
     )
 
 
-def _write_tiles(df: DataFrame, bounds: dict, path: str, mode: str) -> None:
-    keyed = _keys_with_bounds(df, bounds)
-    (
-        keyed.repartition("zbucket")
-        .sortWithinPartitions("zbucket", "zval")
-        .write.partitionBy("zbucket")
-        .mode(mode)
-        .parquet(path)
-    )
-
-
-def zorder_table_append(df: DataFrame, path: str) -> None:
-    """Append a batch into an existing z-ordered table: keys derive
-    from the FROZEN manifest bounds (clamped), rows land in their
-    tiles as new files — cheap (one partitioned write, batch-sized),
-    leaving small files for compact() to fold. The daily-ingest
-    shape: append often, compact on a schedule."""
-    import json
-
-    with open(_bounds_path(path)) as f:
-        bounds = json.load(f)
-    _write_tiles(df, bounds, path, mode="append")
-
-
-def zorder_table_compact(
-    spark, path: str, max_files: int = 4, target_files: int = 1
-) -> dict[int, int]:
-    """Fold tiles that accumulated more than ``max_files`` parquet
-    files back to ``target_files`` sorted files, tile by tile via a
-    rename pair (write to `<tile>.__compact__`, swap). No reader can
-    ever observe a PARTIAL tile; a reader listing files in the brief
-    window between the two renames would miss that tile entirely, so
-    run compaction in a maintenance window (or behind a table lock /
-    manifest indirection) if readers race it. Crash-safe: a crash
-    between the renames leaves the tile's rows in `.__old__` /
-    `.__compact__`, and the RECOVERY pass below restores the base
-    tile from them before anything is swept — data is never lost.
-    Returns {zbucket: files_before} for the tiles it rewrote. At
-    100 TB each tile compacts independently (parallelize across
-    tiles); only oversized tiles pay a rewrite."""
-    import os
-    import shutil
-
-    # recovery BEFORE sweeping: if the base tile is missing, a prior
-    # run crashed between its two renames — restore it (prefer the
-    # pre-compact .__old__ copy); only temp dirs whose base EXISTS
-    # are debris safe to remove
-    for suffix in (".__old__", ".__compact__"):
-        for name in sorted(os.listdir(path)):
-            if not (name.startswith("zbucket=") and name.endswith(suffix)):
-                continue
-            base = os.path.join(path, name[: -len(suffix)])
-            tmp_dir = os.path.join(path, name)
-            if os.path.exists(base):
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-            else:
-                os.replace(tmp_dir, base)
-
-    rewritten: dict[int, int] = {}
-    for name in sorted(os.listdir(path)):
-        if not name.startswith("zbucket=") or "__" in name:
-            continue
-        tile = os.path.join(path, name)
-        files = [f for f in os.listdir(tile) if f.endswith(".parquet")]
-        if len(files) <= max_files:
-            continue
-        bucket = int(name.split("=", 1)[1])
-        tmp = tile + ".__compact__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            spark.read.parquet(tile)
-            .sort("zval")
-            .coalesce(target_files)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        old = tile + ".__old__"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(tile, old)
-        os.replace(tmp, tile)
-        shutil.rmtree(old, ignore_errors=True)
-        rewritten[bucket] = len(files)
-    return rewritten
-
-
-# --- Manifest-indirected z-ordered table (readers never miss a tile) ------
-
-
 class ZOrderTable:
     """Z-ordered table whose readers resolve tile directories through a
     one-file JSON manifest (`_zmanifest.json`, flipped atomically with
-    ``os.replace``) instead of listing the directory tree — the fix for
-    the documented race in ``zorder_table_compact``: its rename-pair
-    swap has a brief window where a lister misses the tile entirely.
-    Here compaction writes the NEW tile version beside the old one,
-    flips the manifest, and RETAINS the previous version for one more
-    maintenance cycle (readers holding a pre-flip manifest keep
-    scanning files that still exist); only versions two generations
-    old are swept. This is the parquet-on-FS analogue of an ACID
+    ``os.replace``) instead of listing the directory tree, so a reader
+    never misses a tile: swapping a tile dir in place would leave a
+    window where a lister sees no dir at all. Instead compaction writes
+    the NEW tile version beside the old one, flips the manifest, and
+    RETAINS the previous version for one more maintenance cycle
+    (readers holding a pre-flip manifest keep scanning files that still
+    exist); only versions two generations old are swept. This is the parquet-on-FS analogue of an ACID
     format's snapshot isolation, same pattern as
     streaming/materialize.py's versioned pointer.
 
@@ -429,9 +286,15 @@ class ZOrderTable:
         n_buckets: int = 64,
         batch_id: int | None = None,
     ) -> dict:
-        """Create the table: freeze normalization bounds (same
-        rationale as zorder_table_init — appends clamp, never re-tile)
-        and publish version-0 tiles through the manifest."""
+        """Create the table: freeze the normalization bounds and
+        publish version-0 tiles through the manifest.
+
+        Freezing bounds is the load-bearing decision: if appends
+        re-derived min/max, a single out-of-range row would RE-TILE the
+        whole table (every zbucket changes meaning). Instead appends
+        clamp into the frozen range — out-of-range rows land in edge
+        tiles, and a bounds refresh is an explicit full rewrite (init
+        again), exactly how Delta/Iceberg treat re-clustering."""
         import os
         import shutil
 

@@ -112,8 +112,7 @@ def block_dendrogram(
     re-scored cut (children-centroid cosines + threshold walk,
     cut_tree.py:41-103 semantics) becomes SQL-replayable: this is the
     fixture tree the full-oracle ``tree_cut_clusters`` query cuts
-    (VERDICT r3 #2; the GRINCH-built tree stays rows-only as
-    ``tree_cut_grinch``). Sparse id ranges simply yield single-child
+    (VERDICT r3 #2). Sparse id ranges simply yield single-child
     chain nodes, which the cut recurses through (they never score).
     Distributed shape: one explode to n*L block rows, one distinct —
     no collect."""

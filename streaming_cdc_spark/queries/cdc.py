@@ -583,8 +583,7 @@ def tree_cut_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (MAX(l)) — exactly the top-down walk's first hit. Float margin at
     tau=0.12: min |score - tau| = 1.5e-4 (sf0.001) / 5.6e-4 (sf0.01)
     / 1.8e-4 (sf0.1), ~11 orders above sum-order drift; re-verify if
-    testdata regenerates. GRINCH-built tree cut stays rows-only as
-    tree_cut_grinch."""
+    testdata regenerates."""
     from streaming_cdc_spark.operators.treecut import block_dendrogram, cut_dendrogram
 
     emb = load(spark, sf_dir, "embeddings")
@@ -653,21 +652,6 @@ def dendrogram_purity_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the explode+distinct dendrogram build again.
     edges = block_dendrogram(emb, id_col="vec_id", label_col="label").localCheckpoint()
     return dendrogram_purity_df(edges)
-
-
-@query("tree_cut_grinch")  # sequential GRINCH build; rows-only check
-def tree_cut_grinch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C15 on the REAL pipeline tree: build the GRINCH dendrogram in
-    stream order (sequential, hence rows-only), then re-cut at a
-    different threshold with the same distributed re-score operator
-    that tree_cut_clusters oracle-verifies on the fixture tree."""
-    from streaming_cdc_spark.operators.grinch import grinch_dendrogram
-    from streaming_cdc_spark.operators.treecut import cut_dendrogram
-
-    emb = load(spark, sf_dir, "embeddings")
-    edges = grinch_dendrogram(emb, id_col="vec_id", vec_col="embedding", label_col="label")
-    leaf_vecs = emb.selectExpr("cast(vec_id as string) as uid", "embedding")
-    return cut_dendrogram(edges, leaf_vecs, threshold=0.5)
 
 
 @query("grinch_per_key_trees")  # per-key online trees; rows-only check

@@ -186,44 +186,6 @@ class MaterializedAggregate(_VersionedKeyedTable):
         ]
         return both.groupBy(*self.key_cols).agg(*aggs)
 
-    # -- ACID-table backend ------------------------------------------------
-    def merge_into_sql(self, target: str, source: str = "_batch_partial") -> str:
-        """The MERGE INTO statement this sink's _merge() is the
-        parquet-on-FS stand-in for. On a cluster with an ACID table
-        format (Delta, Iceberg), apply_batch becomes: partial-aggregate
-        the micro-batch (same _partial), register it as ``source``,
-        and run this statement against ``target`` — the format's
-        transaction log then provides the atomic publish and
-        concurrent-reader isolation that the versioned-directory flip
-        emulates here, and the replay guard moves into the commit
-        (Delta: txn appId/version; Iceberg: snapshot summary
-        properties) instead of the _LATEST pointer. Counts and sums
-        are commutative monoids, so the merge is order-free either
-        way. Kept as generated SQL (unit-tested for shape) because
-        this environment ships neither format's jars."""
-        on = " AND ".join(f"t.{k} <=> s.{k}" for k in self.key_cols)
-        acc = ["n_rows"] + [f"sum_{c}" for c in self.sum_cols]
-        sets = ", ".join(f"t.{a} = t.{a} + s.{a}" for a in acc)
-        cols = ", ".join(self.key_cols + acc)
-        vals = ", ".join(f"s.{c}" for c in self.key_cols + acc)
-        return (
-            f"MERGE INTO {target} t USING {source} s ON {on} "
-            f"WHEN MATCHED THEN UPDATE SET {sets} "
-            f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
-        )
-
-    def apply_batch_merge(
-        self, batch_df: DataFrame, batch_id: int, target: str
-    ) -> None:
-        """foreachBatch body for the ACID-table backend: partial
-        aggregate -> temp view -> MERGE INTO ``target``. Requires a
-        catalog whose tables support MERGE (Delta/Iceberg) — raises
-        whatever the catalog raises otherwise; use apply_batch for
-        the parquet stand-in."""
-        partial = self._partial(batch_df)
-        partial.createOrReplaceTempView("_batch_partial")
-        batch_df.sparkSession.sql(self.merge_into_sql(target))
-
 
 class MaterializedChangelog(_VersionedKeyedTable):
     """CDC change-log apply, streaming form: fold an I/U/D op stream
@@ -280,24 +242,3 @@ class MaterializedChangelog(_VersionedKeyedTable):
     def current_state(self, spark: SparkSession) -> DataFrame:
         """The materialized current state: tombstoned keys absent."""
         return self.table(spark).filter(F.col(self.op_col) != self.delete_op)
-
-    def merge_into_sql(self, target: str, source: str = "_batch_latest") -> str:
-        """The CDC MERGE INTO this sink's _merge() emulates on a
-        Delta/Iceberg table: ``source`` is the batch's per-key latest
-        op (same _partial); last-writer-wins is the seq guard on the
-        MATCHED clause. Tombstones are UPDATEs here (state keeps
-        them); a variant that physically deletes would add
-        ``WHEN MATCHED AND s.op = 'D' THEN DELETE`` only once the
-        upstream replay horizon has passed (see class docstring)."""
-        on = " AND ".join(f"t.{k} <=> s.{k}" for k in self.key_cols)
-        cols = self.key_cols + [self.seq_col, self.op_col] + self.payload_cols
-        sets = ", ".join(
-            f"t.{c} = s.{c}" for c in [self.seq_col, self.op_col] + self.payload_cols
-        )
-        vals = ", ".join(f"s.{c}" for c in cols)
-        return (
-            f"MERGE INTO {target} t USING {source} s ON {on} "
-            f"WHEN MATCHED AND s.{self.seq_col} > t.{self.seq_col} "
-            f"THEN UPDATE SET {sets} "
-            f"WHEN NOT MATCHED THEN INSERT ({', '.join(cols)}) VALUES ({vals})"
-        )

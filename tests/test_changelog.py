@@ -111,14 +111,6 @@ def test_replayed_batch_is_skipped(spark, tmp_path):
     assert got == {1: (2, 2.0)}
 
 
-def test_merge_into_sql_shape():
-    sink = MaterializedChangelog("/tmp/x", ["k"], "seq", "op", ["v"])
-    sql = sink.merge_into_sql("tgt")
-    assert "MERGE INTO tgt t USING _batch_latest s ON t.k <=> s.k" in sql
-    assert "WHEN MATCHED AND s.seq > t.seq THEN UPDATE SET" in sql
-    assert "WHEN NOT MATCHED THEN INSERT (k, seq, op, v) VALUES (s.k, s.seq, s.op, s.v)" in sql
-
-
 @pytest.mark.parametrize("n_parts", [1, 5])
 def test_partitioning_invariance(spark, n_parts):
     """The apply is one keyed argmax — any input partitioning gives

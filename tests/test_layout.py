@@ -132,130 +132,6 @@ def test_zorder_keys_survive_wide_epoch_spans(spark):
         assert got[i] == want, i
 
 
-def test_zorder_table_init_append_compact(spark, tmp_path):
-    """The maintenance loop: frozen bounds keep tile ids stable across
-    appends (out-of-range rows clamp into edge tiles), compaction
-    folds multi-file tiles atomically, and no row is ever lost."""
-    import json
-    import os
-
-    events = load(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id",
-        F.col("user_id").cast("long").alias("uid"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    path = str(tmp_path / "ztab")
-    bounds = L.zorder_table_init(events, "uid", "ts_us", path, n_buckets=16)
-    n0 = spark.read.parquet(path).count()
-    assert n0 == events.count()
-
-    # appends: in-range batch + a batch with out-of-range uid/ts
-    b1 = events.withColumn("event_id", F.col("event_id") + 1_000_000)
-    b2 = (
-        events.limit(50)
-        .withColumn("event_id", F.col("event_id") + 2_000_000)
-        .withColumn("uid", F.col("uid") + 10_000)  # beyond frozen xmax
-    )
-    L.zorder_table_append(b1, path)
-    L.zorder_table_append(b2, path)
-    total = spark.read.parquet(path).count()
-    assert total == n0 * 2 + 50
-
-    # frozen bounds: the same physical row keys to the same tile in
-    # init and append (b1 duplicates every original row)
-    tiles = {
-        r["event_id"] - 1_000_000: r["zbucket"]
-        for r in spark.read.parquet(path)
-        .filter((F.col("event_id") >= 1_000_000) & (F.col("event_id") < 2_000_000))
-        .select("event_id", "zbucket")
-        .collect()
-    }
-    orig = {
-        r["event_id"]: r["zbucket"]
-        for r in spark.read.parquet(path)
-        .filter(F.col("event_id") < 1_000_000)
-        .select("event_id", "zbucket")
-        .collect()
-    }
-    assert tiles == orig
-    # clamped batch landed in max-x edge tiles, not new ones
-    mx = max(
-        r["zbucket"]
-        for r in spark.read.parquet(path).select("zbucket").distinct().collect()
-    )
-    assert mx < 16
-
-    # simulate crash debris, then compact
-    os.makedirs(os.path.join(path, "zbucket=0.__compact__"), exist_ok=True)
-    before = {
-        d: len([f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")])
-        for d in os.listdir(path)
-        if d.startswith("zbucket=") and "__" not in d
-    }
-    rewritten = L.zorder_table_compact(spark, path, max_files=2)
-    assert rewritten, "appends should have pushed some tile past 2 files"
-    for b, nf in rewritten.items():
-        assert before[f"zbucket={b}"] == nf > 2
-        now = len(
-            [
-                f
-                for f in os.listdir(os.path.join(path, f"zbucket={b}"))
-                if f.endswith(".parquet")
-            ]
-        )
-        assert now == 1
-    assert not os.path.exists(os.path.join(path, "zbucket=0.__compact__"))
-    assert spark.read.parquet(path).count() == total
-    # manifest survived everything
-    assert json.load(open(os.path.join(path, "_zbounds.json")))["x_col"] == "uid"
-
-
-def test_zorder_compact_recovers_from_rename_crash(spark, tmp_path):
-    """A crash BETWEEN the two renames leaves the base tile missing
-    and its rows only in .__old__ — the next compact must RESTORE it,
-    never sweep it (data loss)."""
-    import os
-    import shutil
-
-    events = load(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id",
-        F.col("user_id").cast("long").alias("uid"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    path = str(tmp_path / "ztab")
-    L.zorder_table_init(events, "uid", "ts_us", path, n_buckets=16)
-    total = spark.read.parquet(path).count()
-    victim = next(
-        d for d in sorted(os.listdir(path)) if d.startswith("zbucket=")
-    )
-    tile = os.path.join(path, victim)
-    # simulate the mid-swap crash state: base gone, data in .__old__,
-    # plus a half-written .__compact__ for the same tile
-    os.replace(tile, tile + ".__old__")
-    os.makedirs(tile + ".__compact__", exist_ok=True)
-    L.zorder_table_compact(spark, path, max_files=10_000)  # no rewrites
-    assert os.path.isdir(tile)
-    assert not os.path.exists(tile + ".__old__")
-    assert not os.path.exists(tile + ".__compact__")
-    assert spark.read.parquet(path).count() == total
-
-
-def test_zorder_table_init_guards(spark, tmp_path):
-    import pytest
-
-    events = load(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id",
-        F.col("user_id").cast("long").alias("uid"),
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    with pytest.raises(ValueError, match="power of two"):
-        L.zorder_table_init(events, "uid", "ts_us", str(tmp_path / "a"), n_buckets=48)
-    with pytest.raises(ValueError, match="no rows"):
-        L.zorder_table_init(
-            events.filter("event_id < 0"), "uid", "ts_us", str(tmp_path / "b")
-        )
-
-
 # --- manifest-indirected ZOrderTable --------------------------------------
 
 
@@ -289,11 +165,59 @@ def test_ztable_roundtrip_rows(spark, tmp_path):
     assert ev.select("event_id").exceptAll(after.select("event_id")).count() == 0
 
 
+def test_zorder_table_init_append_compact(spark, tmp_path):
+    """The maintenance loop: frozen bounds keep tile ids stable across
+    appends (out-of-range rows clamp into edge tiles), compaction folds
+    each over-threshold tile to ``target_files``, and no row is ever
+    lost or duplicated."""
+    import os
+
+    t, ev = _mk_ztable(spark, tmp_path)
+    n_total = ev.count()
+    assert t.read(spark).count() == n_total
+    # a shifted-id copy of every row, plus a batch beyond frozen xmax
+    t.append(ev.withColumn("event_id", F.col("event_id") + 1_000_000))
+    t.append(
+        ev.limit(50)
+        .withColumn("event_id", F.col("event_id") + 2_000_000)
+        .withColumn("x", F.col("x") + 10_000)
+    )
+    n_all = n_total * 2 + 50
+    snap = t.read(spark)
+    assert snap.count() == n_all
+    # frozen bounds: the same physical row keys to the same tile in
+    # init/append and in the later append
+    tile_of = {
+        r["event_id"]: r["zbucket"] for r in snap.select("event_id", "zbucket").collect()
+    }
+    for eid in ev.select("event_id").toPandas()["event_id"]:
+        assert tile_of[eid + 1_000_000] == tile_of[eid], eid
+    # the clamped batch landed in edge tiles, not new ones
+    assert max(tile_of.values()) < 8
+
+    def n_files(dirname):
+        tile = os.path.join(t.path, dirname)
+        return len([f for f in os.listdir(tile) if f.endswith(".parquet")])
+
+    before = {int(b): n_files(d) for b, d in t._load()["tiles"].items()}
+    rewritten = t.compact(spark, max_files=2, target_files=1)
+    assert rewritten, "appends should have pushed some tile past 2 files"
+    tiles = t._load()["tiles"]
+    for b, nf in rewritten.items():
+        assert before[b] == nf > 2
+        assert n_files(tiles[str(b)]) == 1
+    after = t.read(spark)
+    assert after.count() == n_all
+    # exact same ids, no loss/duplication through the whole lifecycle
+    base = after.filter(F.col("event_id") < 1_000_000).select("event_id")
+    assert base.exceptAll(ev.select("event_id")).count() == 0
+    assert ev.select("event_id").exceptAll(base).count() == 0
+
+
 def test_ztable_racing_reader_keeps_complete_snapshot(spark, tmp_path):
     """A reader that resolved the manifest BEFORE a compaction must
     still see every row: compaction retires old tile versions for one
-    full cycle instead of deleting them at swap time (the documented
-    race in the rename-pair zorder_table_compact)."""
+    full cycle instead of deleting them at swap time."""
     import os
 
     t, ev = _mk_ztable(spark, tmp_path)
@@ -371,6 +295,21 @@ def test_ztable_reinit_over_crash_debris(spark, tmp_path):
     # re-init over a LIVE table also works (full rewrite semantics)
     t2.init(ev.limit(100), "x", "y", bits=16, n_buckets=8)
     assert t2.read(spark).count() == 100
+
+
+def test_zorder_table_init_guards(spark, tmp_path):
+    """A rejected init (bucket count not a power of two, or no rows to
+    freeze bounds from) raises before touching the live table."""
+    import pytest
+
+    ev = _ztable_events(spark)
+    t = L.ZOrderTable(str(tmp_path / "zt_guards"))
+    t.init(ev.limit(100), "x", "y", bits=16, n_buckets=8)
+    with pytest.raises(ValueError, match="power of two"):
+        t.init(ev, "x", "y", bits=16, n_buckets=48)
+    with pytest.raises(ValueError, match="empty input"):
+        t.init(ev.filter("event_id < 0"), "x", "y", bits=16, n_buckets=8)
+    assert t.read(spark).count() == 100
 
 
 def test_ztable_batch_append_replay_idempotent(spark, tmp_path):

@@ -186,19 +186,3 @@ def test_restart_resumes_materialization(spark, tmp_path):
     )
     want = {r["user_id"]: (r["n"], float(r["s"])) for r in batch.collect()}
     assert got == want
-
-
-def test_merge_into_sql_shape(tmp_path):
-    """The generated MERGE statement must accumulate every monoid
-    column on match, insert all columns on miss, and null-safe-match
-    the keys (a NULL grouping key is one group, like groupBy)."""
-    m = MaterializedAggregate(str(tmp_path), ["user_id", "day"], ["value"])
-    sql = m.merge_into_sql("warehouse.user_value")
-    assert sql == (
-        "MERGE INTO warehouse.user_value t USING _batch_partial s "
-        "ON t.user_id <=> s.user_id AND t.day <=> s.day "
-        "WHEN MATCHED THEN UPDATE SET t.n_rows = t.n_rows + s.n_rows, "
-        "t.sum_value = t.sum_value + s.sum_value "
-        "WHEN NOT MATCHED THEN INSERT (user_id, day, n_rows, sum_value) "
-        "VALUES (s.user_id, s.day, s.n_rows, s.sum_value)"
-    )

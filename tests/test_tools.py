@@ -1,6 +1,6 @@
 """Gate-tooling tests (no Spark): the bench_trend regression gate
-(VERDICT r5 #5 — promoted from FYI to a failing gate) and its
-run_gates wiring."""
+(VERDICT r5 #5 — promoted from FYI to a failing gate), its run_gates
+wiring, and the run info bench.py records."""
 
 import json
 import os
@@ -182,3 +182,21 @@ def test_trend_drift_normalizes_uniform_slowdown(tmp_path):
     p = _run(["--history", str(p2), "--gate", "--factor", "2.0"])
     assert p.returncode == 0
     assert "host-window drift" in p.stdout
+
+
+def test_bench_run_info_keys(tmp_path):
+    """bench.py records the host context of every run: the resolved
+    core count, the load average, and the checkout's commit (null
+    outside a git repository)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("bench", os.path.join(ROOT, "bench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    info = bench.run_info(4)
+    assert set(info) == {"cpus", "loadavg", "git_sha"}
+    assert info["cpus"] == 4
+    assert len(info["loadavg"]) == 3 and all(x >= 0 for x in info["loadavg"])
+    assert info["git_sha"] is None or len(info["git_sha"]) == 40
+    assert bench.run_info(4, repo=str(tmp_path))["git_sha"] is None
+    assert len(json.dumps(info)) < 200  # leaves the <2 KB stdout line room
