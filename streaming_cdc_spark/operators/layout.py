@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from streaming_cdc_spark.streaming.commit import CommitPointer
+
 ZBITS = 16  # bits per dimension; z-value = 2*ZBITS bits
 
 
@@ -209,52 +211,45 @@ def _keys_with_bounds(df: DataFrame, b: dict) -> DataFrame:
 
 
 class ZOrderTable:
-    """Z-ordered table whose readers resolve tile directories through a
-    one-file JSON manifest (`_zmanifest.json`, flipped atomically with
-    ``os.replace``) instead of listing the directory tree, so a reader
-    never misses a tile: swapping a tile dir in place would leave a
-    window where a lister sees no dir at all. Instead compaction writes
-    the NEW tile version beside the old one, flips the manifest, and
-    RETAINS the previous version for one more maintenance cycle
-    (readers holding a pre-flip manifest keep scanning files that still
-    exist); only versions two generations old are swept. This is the parquet-on-FS analogue of an ACID
-    format's snapshot isolation, same pattern as
-    streaming/materialize.py's versioned pointer.
+    """Z-ordered table whose readers resolve tile directories through
+    the table's manifest — its commit pointer (``streaming/commit.py``)
+    — instead of listing the directory tree, so a reader never misses
+    a tile: swapping a tile dir in place would leave a window where a
+    lister sees no dir at all. Instead compaction writes the NEW tile
+    version beside the old one, flips the manifest, and RETAINS the
+    previous version for one more maintenance cycle (readers holding a
+    pre-flip manifest keep scanning files that still exist); only
+    versions two generations old are swept. This is the parquet-on-FS
+    analogue of an ACID format's snapshot isolation.
 
-    Physical layout: ``tiles`` maps zbucket -> versioned dir name
-    (``t0007_v2``); ``zval``/``zbucket`` are stored as DATA columns
-    (zbucket constant per file, so min==max footer stats prune as well
-    as a hive partition would, without losing the column on
+    Physical layout: the manifest's ``tiles`` maps zbucket -> versioned
+    dir name (``t0007_v2``); ``zval``/``zbucket`` are stored as DATA
+    columns (zbucket constant per file, so min==max footer stats prune
+    as well as a hive partition would, without losing the column on
     manifest-directed reads). Appends move files INTO the current tile
-    dir (per-file rename — a concurrent reader sees the old set or
-    old+some-new, never a missing tile).
+    dir (per-file rename, never a missing tile) under their batch's
+    ``b{k}_`` prefix; readers skip files of batches past the manifest's
+    ``last_batch``, so an append is invisible until its flip.
     """
-
-    MANIFEST = "_zmanifest.json"
 
     def __init__(self, path: str):
         self.path = path
+        self.pointer = CommitPointer(path)
 
-    # -- manifest ----------------------------------------------------------
-    def _manifest_path(self) -> str:
+    def _tile_files(self, m: dict, dirname: str) -> list[str]:
+        """The committed parquet files of one tile dir: a ``b{k}_``
+        file with k past ``last_batch`` belongs to an append that has
+        not flipped (yet — its redelivery sweeps and re-moves it)."""
         import os
 
-        return os.path.join(self.path, self.MANIFEST)
-
-    def _load(self) -> dict:
-        import json
-
-        with open(self._manifest_path()) as f:
-            return json.load(f)
-
-    def _flip(self, manifest: dict) -> None:
-        import json
-        import os
-
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # atomic on POSIX
+        last = m.get("last_batch", -1)
+        tile = os.path.join(self.path, dirname)
+        return [
+            os.path.join(tile, fn)
+            for fn in sorted(os.listdir(tile))
+            if fn.endswith(".parquet")
+            and not (fn.startswith("b") and int(fn[1 : fn.index("_")]) > last)
+        ]
 
     # -- write paths ---------------------------------------------------------
     def _staged_tiles(self, df: DataFrame, bounds: dict, stage: str) -> dict[int, str]:
@@ -317,16 +312,15 @@ class ZOrderTable:
             "ymin": int(row["ymin"]),
             "ymax": int(row["ymax"]),
         }
-        os.makedirs(self.path, exist_ok=True)
         # init is a destructive full rewrite: clear tile/stage debris
         # from a previous table or a CRASHED earlier init (a published
         # t*_v0 dir would otherwise make os.replace throw ENOTEMPTY
-        # on re-init — code-review r5). The manifest is removed LAST-
+        # on re-init — code-review r5). The manifest is replaced LAST-
         # minute by the flip below, so a racing reader holding the old
         # manifest is the documented single-writer caveat, same as a
         # full table rewrite anywhere.
         for name in os.listdir(self.path):
-            if name != self.MANIFEST:
+            if name != CommitPointer.NAME:
                 shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
         stage = os.path.join(self.path, ".stage_init")
         staged = self._staged_tiles(df, bounds, stage)
@@ -336,7 +330,7 @@ class ZOrderTable:
             os.replace(src, os.path.join(self.path, dst))
             tiles[str(bucket)] = dst
         shutil.rmtree(stage, ignore_errors=True)
-        self._flip(
+        self.pointer.publish(
             {
                 "bounds": bounds,
                 "tiles": tiles,
@@ -356,21 +350,21 @@ class ZOrderTable:
         manifest flip.
 
         ``batch_id`` makes the append EXACTLY-ONCE under streaming
-        replay (foreachBatch is at-least-once): a batch at or below
-        the manifest's ``last_batch`` is skipped outright, and a batch
-        interrupted MID-append (some files moved, pointer not yet
-        advanced) is replayed idempotently — its files carry a
-        deterministic ``b{batch_id}_`` prefix, which the replay sweeps
-        from every tile before re-moving. Compaction can't have folded
-        a half-appended batch: apply order is append -> pointer flip
-        -> compact, single-writer."""
+        replay (foreachBatch is at-least-once): a committed batch is
+        skipped outright, and a batch interrupted MID-append (some
+        files moved, manifest not yet flipped — readers skip them) is
+        replayed idempotently — its files carry a deterministic
+        ``b{batch_id}_`` prefix, which the replay sweeps from every
+        tile before re-moving. Compaction can't have folded a
+        half-appended batch: apply order is append -> flip -> compact,
+        single-writer."""
         import os
         import shutil
         import uuid
 
-        m = self._load()
-        if batch_id is not None and batch_id <= m.get("last_batch", -1):
+        if batch_id is not None and self.pointer.applied(batch_id):
             return  # replayed batch after restart: already applied
+        m = self.pointer.read()
         prefix = (
             f"b{batch_id:06d}_" if batch_id is not None
             else f"app_{uuid.uuid4().hex[:8]}_"
@@ -414,10 +408,10 @@ class ZOrderTable:
         if batch_id is not None:
             m["tiles"] = new_tiles
             m["last_batch"] = batch_id
-            self._flip(m)
+            self.pointer.publish(m)
         elif changed:
             m["tiles"] = new_tiles
-            self._flip(m)
+            self.pointer.publish(m)
 
     def compact(self, spark, max_files: int = 4, target_files: int = 1) -> dict[int, int]:
         """Fold tiles that accumulated more than ``max_files`` files
@@ -428,27 +422,24 @@ class ZOrderTable:
         (crash-between-write-and-flip) dirs. Returns
         {bucket: files_before}."""
         import os
-        import shutil
-
         from concurrent.futures import ThreadPoolExecutor
 
-        m = self._load()
+        m = self.pointer.read()
         rewritten: dict[int, int] = {}
         new_tiles = dict(m["tiles"])
-        todo: list[tuple[str, str, str, int]] = []
+        todo: list[tuple[str, list[str], str]] = []
         for bucket_s, dirname in sorted(m["tiles"].items()):
-            tile = os.path.join(self.path, dirname)
-            files = [f for f in os.listdir(tile) if f.endswith(".parquet")]
+            files = self._tile_files(m, dirname)
             if len(files) <= max_files:
                 continue
             version = int(dirname.rsplit("_v", 1)[1])
             new_dir = f"t{int(bucket_s):04d}_v{version + 1}"
-            todo.append((bucket_s, tile, new_dir, len(files)))
+            todo.append((bucket_s, files, new_dir))
 
-        def _rewrite(job: tuple[str, str, str, int]) -> None:
-            _, tile, new_dir, _ = job
+        def _rewrite(job: tuple[str, list[str], str]) -> None:
+            _, files, new_dir = job
             (
-                spark.read.parquet(tile)
+                spark.read.parquet(*files)
                 .sort("zval")
                 .coalesce(target_files)
                 .write.mode("overwrite")
@@ -463,40 +454,29 @@ class ZOrderTable:
         if todo:
             with ThreadPoolExecutor(max_workers=min(8, len(todo))) as ex:
                 list(ex.map(_rewrite, todo))
-        for bucket_s, _tile, new_dir, n_files in todo:
+        for bucket_s, files, new_dir in todo:
             new_tiles[bucket_s] = new_dir
-            rewritten[int(bucket_s)] = n_files
+            rewritten[int(bucket_s)] = len(files)
         retired = {b: m["tiles"][b] for b in map(str, rewritten) if b in m["tiles"]}
         published = dict(m)  # preserve last_batch + any future keys
         published["tiles"] = new_tiles
         published["retired"] = retired
-        self._flip(published)
-        # sweep: (a) dirs retired by the PREVIOUS cycle — any reader
-        # still holding that manifest has had a full maintenance cycle
-        # to finish; (b) orphans (written but never published: a crash
-        # between the tile write and the flip)
-        live = set(new_tiles.values()) | set(retired.values())
-        for name in os.listdir(self.path):
-            if name in (self.MANIFEST, self.MANIFEST + ".tmp"):
-                continue
-            # .stage_* dirs here are debris from a CRASHED append
-            # (a live append's stage can't coexist with compact —
-            # maintenance ops are single-writer, like every table
-            # format's); unpublished, so safe to sweep
-            if name not in live:
-                # the PREVIOUS cycle's retired dirs fall out of `live`
-                # unless re-published — this sweeps exactly the
-                # two-generations-old set plus crash orphans
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        self.pointer.publish(published)
+        # sweep everything unnamed: (a) dirs retired by the PREVIOUS
+        # cycle — any reader still holding that manifest has had a full
+        # maintenance cycle to finish; (b) orphans (a crash between the
+        # tile write and the flip); (c) .stage_* debris of a CRASHED
+        # append (maintenance ops are single-writer, like every table
+        # format's, so no live stage coexists with compact)
+        self.pointer.cleanup(self.path, set(new_tiles.values()) | set(retired.values()))
         return rewritten
 
     def read(self, spark) -> DataFrame:
-        """The current table snapshot: the manifest's tile dirs, read
-        as one DataFrame (zval/zbucket are data columns)."""
-        import os
-
-        m = self._load()
-        dirs = [os.path.join(self.path, d) for d in m["tiles"].values()]
-        if not dirs:
+        """The current table snapshot: the committed files of the
+        manifest's tile dirs, read as one DataFrame (zval/zbucket are
+        data columns)."""
+        m = self.pointer.read() or {"tiles": {}}
+        files = [f for d in m["tiles"].values() for f in self._tile_files(m, d)]
+        if not files:
             raise FileNotFoundError("ZOrderTable has no tiles")
-        return spark.read.parquet(*dirs)
+        return spark.read.parquet(*files)

@@ -1183,7 +1183,7 @@ def progressive_longstream_compacted(spark: SparkSession, sf_dir: str) -> DataFr
     r3 #9): eight micro-batches with state compaction SCHEDULED
     INSIDE the stream (compact_every=3, keep_last=2) — after bucket 5
     the resolver folds its oldest per-bucket postings/df dirs into one
-    manifest-gated generation mid-run, the OPTIMIZE step a 24/7
+    generation published by its commit pointer mid-run, the OPTIMIZE step a 24/7
     deployment runs so probe-side listing cost stays bounded by the
     compaction cadence instead of growing with stream age. Compaction
     is results-invariant (crash-safety + equivalence pinned by

@@ -9,10 +9,10 @@ as a ``foreachBatch`` merge with the two properties a production sink
 needs:
 
 - **Atomic publish**: each merge writes a NEW versioned directory and
-  then flips a one-line ``_LATEST`` pointer with ``os.replace`` —
-  readers never observe a half-written table. (Parquet-on-FS stand-in
-  for a table format's ACID commit; on a cluster the same shape backs
-  onto Delta/Iceberg ``MERGE INTO``.)
+  then commits it through the sink's pointer
+  (``streaming/commit.py``) — readers never observe a half-written
+  table. (Parquet-on-FS stand-in for a table format's ACID commit; on
+  a cluster the same shape backs onto Delta/Iceberg ``MERGE INTO``.)
 - **Exactly-once under replay**: the pointer records the last applied
   micro-batch id; a batch re-delivered after a crash-restart
   (foreachBatch is at-least-once) is detected and skipped, so state
@@ -41,10 +41,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streaming_cdc_spark.streaming.commit import CommitPointer
+
 
 class _VersionedKeyedTable:
     """Versioned-publish state machinery shared by the concrete sinks:
-    pointer management, replay skip, retention. Attach with
+    commit, replay skip, retention. Attach with
     ``session.drain_stream(stream, sink.apply_batch)``.
     Subclasses define ``_partial`` (reduce one micro-batch to one row
     per key) and ``_merge`` (combine the stored table with a partial —
@@ -55,24 +57,12 @@ class _VersionedKeyedTable:
         self.state_dir = state_dir
         self.key_cols = list(key_cols)
         self.keep_versions = max(1, keep_versions)
-        os.makedirs(state_dir, exist_ok=True)
+        self.pointer = CommitPointer(state_dir)
 
-    # -- pointer management ------------------------------------------------
-    def _pointer(self) -> tuple[int, int]:
-        """(version, last_applied_batch_id); (-1, -1) when empty."""
-        p = os.path.join(self.state_dir, "_LATEST")
-        if not os.path.exists(p):
-            return -1, -1
-        with open(p, encoding="ascii") as fh:
-            v, b = fh.read().split()
-        return int(v), int(b)
-
-    def _flip(self, version: int, batch_id: int) -> None:
-        p = os.path.join(self.state_dir, "_LATEST")
-        tmp = p + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(f"{version} {batch_id}")
-        os.replace(tmp, p)  # atomic on POSIX
+    def _version(self) -> int:
+        """The committed version; -1 before the first commit."""
+        p = self.pointer.read()
+        return -1 if p is None else p["version"]
 
     def _version_dir(self, version: int) -> str:
         return os.path.join(self.state_dir, f"v{version:06d}")
@@ -87,9 +77,9 @@ class _VersionedKeyedTable:
     # -- sink --------------------------------------------------------------
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body: partial-reduce, merge, publish."""
-        version, last_applied = self._pointer()
-        if batch_id <= last_applied:
+        if self.pointer.applied(batch_id):
             return  # replayed batch after restart: already folded in
+        version = self._version()
         partial = self._partial(batch_df)
         if version >= 0:
             spark = batch_df.sparkSession
@@ -99,22 +89,18 @@ class _VersionedKeyedTable:
             merged = partial
         new_version = version + 1
         merged.write.mode("overwrite").parquet(self._version_dir(new_version))
-        self._flip(new_version, batch_id)
+        self.pointer.publish({"version": new_version, "last_batch": batch_id})
         # retention: an unbounded stream writes one version per batch;
         # keep the last few (concurrent readers may hold the previous
-        # pointer) and drop the rest
-        import shutil
-
-        for old in range(new_version - self.keep_versions, -1, -1):
-            d = self._version_dir(old)
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
-            else:
-                break
+        # pointer) and drop every other dir
+        self.pointer.cleanup(
+            self.state_dir,
+            (os.path.basename(self._version_dir(v)) for v in self.versions()),
+        )
 
     def table(self, spark: SparkSession) -> DataFrame:
         """The current materialized table (empty-version safe)."""
-        version, _ = self._pointer()
+        version = self._version()
         if version < 0:
             raise FileNotFoundError("materialized table has no committed version")
         return spark.read.parquet(self._version_dir(version))
@@ -123,7 +109,7 @@ class _VersionedKeyedTable:
         """Retained, readable version numbers (ascending). The window
         is bounded by ``keep_versions`` — one version per applied
         batch, older ones reclaimed at publish time."""
-        version, _ = self._pointer()
+        version = self._version()
         return [
             v
             for v in range(max(0, version - self.keep_versions + 1), version + 1)

@@ -28,8 +28,11 @@ Scale shape (every stage bounded per batch, none by stream length):
 - the budget cut is a per-batch top-B (total order: weight desc, ids)
   so each micro-batch verifies at most B pairs regardless of arrival
   volume;
-- per-bucket result/state writes are whole-directory overwrites, so a
-  replayed micro-batch (foreachBatch is at-least-once) is idempotent.
+- exactly-once under foreachBatch's at-least-once replay through the
+  sink's commit pointer (streaming/commit.py): per-bucket result/state
+  dirs are written unnamed, each micro-batch commits once, readers
+  resolve only committed dirs, and a committed batch's redelivery is
+  skipped.
 
 Determinism: with id-range splits admitted in mtime order, a pair's
 discovery batch is a pure function of its larger doc id, so the whole
@@ -43,6 +46,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from streaming_cdc_spark.streaming.commit import CommitPointer
 
 
 class ProgressiveResolver:
@@ -68,9 +73,8 @@ class ProgressiveResolver:
         df_cap: int = 50,
         tau: float = 0.2,
         compact_every: int | None = None,
-        compact_keep_last: int = 2,
     ):
-        # two per-bucket state tables, both written idempotently:
+        # two per-bucket state tables:
         # corpus  — posting lists (doc_id, hashed shingle): the probe index
         # df      — per-bucket partial shingle document frequencies
         #           (counts are monoids; visible df = sum of partials)
@@ -79,116 +83,61 @@ class ProgressiveResolver:
         self.result_root = os.path.join(state_dir, "results")
         for d in (self.state_root, self.df_root, self.result_root):
             os.makedirs(d, exist_ok=True)
+        # the commit record: last_batch, the committed result dirs, and
+        # the live dirs of both state tables (the current compaction
+        # generation plus every unfolded bucket — the tables fold
+        # together, so one list names both)
+        self.pointer = CommitPointer(state_dir)
         self.budget = budget
         self.df_cap = df_cap
         self.tau = tau
-        # scheduled compaction: fold old per-bucket state every N
-        # buckets, keeping the newest ``compact_keep_last`` unfolded
-        # (a replayed bucket must still find its own dir to overwrite
-        # — keep_last >= 1 is required for at-least-once safety, >= 2
-        # leaves slack for a redelivered multi-bucket batch)
-        if compact_every is not None and compact_keep_last < 1:
-            raise ValueError("compact_keep_last must be >= 1 for replay safety")
+        # scheduled compaction: fold old per-bucket state every N buckets
         self.compact_every = compact_every
-        self.compact_keep_last = compact_keep_last
+
+    def _committed(self) -> dict:
+        return self.pointer.read() or {"last_batch": -1, "results": [], "state": []}
 
     @staticmethod
-    def _live_dirs(root: str) -> list[str]:
-        """Dir names under ``root`` that are CURRENT state: every
-        bucket dir plus the newest compaction generation, minus any
-        bucket already merged into that generation (its _MANIFEST
-        lists them — so a crash between a compaction's atomic rename
-        and its input cleanup can never double-count)."""
-        names = sorted(
-            d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))
-        )
-        compacts = sorted(
-            (n for n in names if n.startswith("compact_v")),
-            key=lambda n: int(n.rsplit("v", 1)[1]),
-        )
-        merged: set[str] = set()
-        live = []
-        if compacts:
-            latest = compacts[-1]
-            with open(os.path.join(root, latest, "_MANIFEST"), encoding="ascii") as fh:
-                merged = set(fh.read().split())
-            live.append(latest)
-        live += [
-            n
-            for n in names
-            if n.startswith("b") and not n.startswith("compact") and n not in merged
-        ]
-        return live
-
-    def _seen(self, spark, root: str, schema: str, exclude_from: int) -> DataFrame | None:
-        """State rows under ``root``, EXCLUDING every bucket with id
-        >= ``exclude_from``. Bucket ids are monotone in arrival order,
-        so when (re)processing bucket k the visible corpus is exactly
-        the buckets < k: the current bucket's own rows (a replayed
-        micro-batch already wrote them) AND any later buckets of the
-        same multi-bucket micro-batch (written by its first
-        application) must both be invisible, or an at-least-once
-        redelivery of a multi-bucket batch would shift the df cap and
-        overwrite bucket k's results dir with different content."""
-        subdirs = [
-            os.path.join(root, d)
-            for d in self._live_dirs(root)
-            if not (d.startswith("b") and int(d[1:]) >= exclude_from)
-        ]
-        if not subdirs:
+    def _seen(spark, root: str, schema: str, live: list[str]) -> DataFrame | None:
+        """The state rows under ``root`` that ``live`` names: the
+        committed dirs plus the buckets of the current micro-batch
+        processed so far. Unnamed dirs (a crashed attempt's buckets,
+        inputs already folded into a generation) are never read."""
+        if not live:
             return None
-        return spark.read.schema(schema).parquet(*subdirs)
+        return spark.read.schema(schema).parquet(*[os.path.join(root, d) for d in live])
 
-    def compact(self, spark, keep_last: int = 2, protect_from: int | None = None) -> None:
+    def compact(self, spark, keep_last: int = 2) -> None:
         """Fold old per-bucket state dirs into one compacted
         generation per state table. A 24/7 stream writes one dir per
         micro-batch; after thousands of batches the probe's listing +
         file-open cost dominates, so real deployments compact — this
         is the OPTIMIZE/rewrite step table formats run, expressed on
-        the same layout.
+        the same layout. The newest ``keep_last`` bucket dirs stay
+        unfolded.
 
-        The newest ``keep_last`` bucket dirs are left alone: an
-        at-least-once replay overwrites its own bucket dir, which is
-        only safe while that dir still exists (a replayed bucket that
-        had been merged would double-count). Crash safety: the merged
-        data + a _MANIFEST of its inputs are written to a temp name
-        and renamed into place atomically; readers always take the
-        newest complete generation and skip manifest-listed inputs,
-        so a crash before input cleanup changes nothing.
+        Commit protocol: the new generation is written under an
+        unnamed dir, one pointer flip makes it replace the folded
+        inputs, and cleanup deletes them afterwards — a crash anywhere
+        leaves readers on a complete, never double-counted state.
 
         df partials are re-aggregated during the merge (counts are
         monoids), so the compacted df table is one row per shingle —
-        compaction SHRINKS it, not just concatenates.
-
-        ``protect_from``: additionally never fold buckets with id >=
-        this value, REGARDLESS of keep_last — in-stream compaction
-        passes the current micro-batch's minimum bucket id, because a
-        redelivered multi-bucket batch must still find every one of
-        its own bucket dirs unfolded (a folded sibling would be
-        invisible to _seen's >=-cut AND baked into the compacted
-        generation — double-counted on replay)."""
-        import shutil
-
+        compaction SHRINKS it, not just concatenates."""
+        p = self.pointer.read()
+        if p is None:
+            return
+        live = p["state"]
+        gens = [n for n in live if n.startswith("compact_v")]
+        buckets = [n for n in live if not n.startswith("compact_v")]
+        inputs = gens + buckets[: max(0, len(buckets) - keep_last)]
+        if len(inputs) < 2:
+            return  # nothing worth folding
+        new_name = f"compact_v{int(gens[0].removeprefix('compact_v')) + 1 if gens else 0}"
         for root, schema, agg in (
             (self.state_root, self.POSTINGS_SCHEMA, False),
             (self.df_root, self.DF_SCHEMA, True),
         ):
-            live = self._live_dirs(root)
-            # numeric order: lexical sort would place b10 before b2
-            buckets = sorted(
-                (n for n in live if not n.startswith("compact_v")),
-                key=lambda n: int(n[1:]),
-            )
-            foldable = buckets[: max(0, len(buckets) - keep_last)]
-            if protect_from is not None:
-                foldable = [n for n in foldable if int(n[1:]) < protect_from]
-            inputs = [n for n in live if n.startswith("compact_v")] + foldable
-            if len(inputs) < 2:
-                continue  # nothing worth folding
-            gens = [
-                int(n.rsplit("v", 1)[1]) for n in live if n.startswith("compact_v")
-            ]
-            new_name = f"compact_v{(max(gens) + 1) if gens else 0}"
             merged = spark.read.schema(schema).parquet(
                 *[os.path.join(root, n) for n in inputs]
             )
@@ -196,22 +145,13 @@ class ProgressiveResolver:
                 merged = merged.groupBy("shingle").agg(
                     F.sum("df").cast("long").alias("df")
                 )
-            tmp = os.path.join(root, "_tmp_" + new_name)
-            shutil.rmtree(tmp, ignore_errors=True)  # stale crash leftover
-            merged.coalesce(4).write.mode("overwrite").parquet(tmp)
-            # record inputs BEFORE publishing: readers of the new
-            # generation must know which bucket dirs it subsumes
-            prior_merged: set[str] = set()
-            for n in inputs:
-                mpath = os.path.join(root, n, "_MANIFEST")
-                if os.path.exists(mpath):
-                    with open(mpath, encoding="ascii") as fh:
-                        prior_merged |= set(fh.read().split())
-            with open(os.path.join(tmp, "_MANIFEST"), "w", encoding="ascii") as fh:
-                fh.write(" ".join(sorted(prior_merged | set(inputs))))
-            os.replace(tmp, os.path.join(root, new_name))  # atomic publish
-            for n in inputs:  # cleanup; safe to crash anywhere in here
-                shutil.rmtree(os.path.join(root, n), ignore_errors=True)
+            merged.coalesce(4).write.mode("overwrite").parquet(
+                os.path.join(root, new_name)
+            )
+        state = [new_name] + [n for n in live if n not in inputs]
+        self.pointer.publish({**p, "state": state})
+        for root in (self.state_root, self.df_root):
+            self.pointer.cleanup(root, state)
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body. A micro-batch may carry MORE than one
@@ -219,7 +159,11 @@ class ProgressiveResolver:
         every file at once): buckets are processed independently in
         ascending id order, which is exactly the fold the one-bucket-
         per-trigger stream performs — results are identical either
-        way."""
+        way. The micro-batch commits once, after all of its buckets
+        are written."""
+        if self.pointer.applied(batch_id):
+            return  # replayed batch after restart: already committed
+        p = self._committed()
         # LAZY checkpoint (optimization r9): the bucket-list collect
         # below is the action that materializes it, so admission costs
         # one driver job per trigger instead of two; later per-bucket
@@ -233,22 +177,24 @@ class ProgressiveResolver:
             r[0] for r in batch_all.select("bucket").distinct().collect()
         )
         for bucket in buckets:
-            self._apply_bucket(batch_all.filter(F.col("bucket") == bucket), bucket)
-            if self.compact_every and (bucket + 1) % self.compact_every == 0:
-                # in-stream OPTIMIZE: results are invariant (tested),
-                # only the state layout folds — the long-stream shape
-                # where listing + file-open cost would otherwise grow
-                # with stream age. protect_from = this micro-batch's
-                # lowest bucket: an at-least-once redelivery of the
-                # WHOLE batch must find all of its own bucket dirs
-                # unfolded (code-review r4 finding)
-                self.compact(
-                    batch_df.sparkSession,
-                    keep_last=self.compact_keep_last,
-                    protect_from=buckets[0],
-                )
+            # bucket k sees the committed state plus this batch's
+            # earlier buckets — never a crashed attempt's later ones
+            self._apply_bucket(
+                batch_all.filter(F.col("bucket") == bucket), bucket, p["state"]
+            )
+            p["state"] = p["state"] + [f"b{bucket}"]
+            p["results"] = p["results"] + [f"b{bucket}"]
+        self.pointer.publish({**p, "last_batch": batch_id})
+        if self.compact_every and any(
+            (b + 1) % self.compact_every == 0 for b in buckets
+        ):
+            # in-stream OPTIMIZE after the commit: results are
+            # invariant (tested), only the state layout folds — the
+            # long-stream shape where listing + file-open cost would
+            # otherwise grow with stream age
+            self.compact(batch_df.sparkSession)
 
-    def _apply_bucket(self, batch: DataFrame, bucket: int) -> None:
+    def _apply_bucket(self, batch: DataFrame, bucket: int, live: list[str]) -> None:
         from streaming_cdc_spark.operators.dedup import exploded_shingles
 
         spark = batch.sparkSession
@@ -261,20 +207,23 @@ class ProgressiveResolver:
         # cached (lazily): they feed the probe union, the partial
         # aggregates, AND the state write.
         post_batch = exploded_shingles(batch, hashed=True).persist()
-        post_seen = self._seen(
-            spark, self.state_root, self.POSTINGS_SCHEMA, exclude_from=bucket
-        )
+        post_seen = self._seen(spark, self.state_root, self.POSTINGS_SCHEMA, live)
         sh = (
             post_seen.unionByName(post_batch) if post_seen is not None else post_batch
         ).persist()
         try:
-            self._resolve_and_publish(sh, post_batch, batch, bucket)
+            self._resolve_and_publish(sh, post_batch, batch, bucket, live)
         finally:
             sh.unpersist()
             post_batch.unpersist()
 
     def _resolve_and_publish(
-        self, sh: DataFrame, post_batch: DataFrame, batch: DataFrame, bucket: int
+        self,
+        sh: DataFrame,
+        post_batch: DataFrame,
+        batch: DataFrame,
+        bucket: int,
+        live: list[str],
     ) -> None:
         spark = batch.sparkSession
         # shingle document frequencies come from MERGED PARTIAL
@@ -287,7 +236,7 @@ class ProgressiveResolver:
         df_batch = post_batch.groupBy("shingle").agg(
             F.count(F.lit(1)).alias("df")
         )
-        df_seen = self._seen(spark, self.df_root, self.DF_SCHEMA, exclude_from=bucket)
+        df_seen = self._seen(spark, self.df_root, self.DF_SCHEMA, live)
         df_all = (
             df_seen.unionByName(df_batch) if df_seen is not None else df_batch
         )
@@ -358,8 +307,8 @@ class ProgressiveResolver:
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum(F.col("_m").cast("int")).cast("long").alias("n_matches"),
         ).select(F.lit(int(bucket)).cast("int").alias("batch_id"), "*")
-        # idempotent per-bucket publishes: a replayed batch overwrites
-        # its own directories with identical content. The three writes
+        # per-bucket writes land in dirs the pointer does not name yet
+        # (a crashed attempt's leftovers are overwritten). The three writes
         # are independent (results; postings; df partials — the state
         # tables derive from the CACHED batch postings, not from the
         # results), so they run as concurrent Spark jobs: per-job
@@ -389,11 +338,8 @@ class ProgressiveResolver:
             shc.unpersist()
 
     def results(self, spark) -> DataFrame:
-        subdirs = [
-            os.path.join(self.result_root, d)
-            for d in sorted(os.listdir(self.result_root))
-            if os.path.isdir(os.path.join(self.result_root, d))
-        ]
-        if not subdirs:  # empty stream: no batch ever published
+        """The committed buckets' results."""
+        subdirs = [os.path.join(self.result_root, d) for d in self._committed()["results"]]
+        if not subdirs:  # empty stream: no batch ever committed
             return spark.createDataFrame([], self.RESULT_SCHEMA)
         return spark.read.schema(self.RESULT_SCHEMA).parquet(*subdirs)

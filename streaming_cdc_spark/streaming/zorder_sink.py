@@ -6,16 +6,17 @@ analogue runs IN the ingest path on a batch schedule instead of as an
 offline job (same mid-stream-compaction stance as the progressive
 resolver).
 
-Exactly-once under foreachBatch's at-least-once replay:
+Exactly-once under foreachBatch's at-least-once replay, through the
+table's commit pointer (streaming/commit.py — the manifest):
 - batch 0 initializes the table (bounds frozen from it — later batches
   clamp; a crash before the manifest exists re-runs init, which is a
   full rewrite and therefore idempotent);
-- batch k > 0 appends with ``batch_id`` — the manifest's ``last_batch``
-  pointer skips already-applied replays, and a batch interrupted
-  mid-append is swept by its deterministic ``b{k}_`` file prefix
+- batch k > 0 appends with ``batch_id`` — committed batches are
+  skipped, and a batch interrupted mid-append (invisible to readers
+  until its flip) is swept by its deterministic ``b{k}_`` file prefix
   before re-applying;
-- compaction runs AFTER the batch pointer advances (single-writer), so
-  a replayed batch can never be double-folded.
+- compaction runs AFTER the batch's flip (single-writer), so a
+  replayed batch can never be double-folded.
 
 Scale: per batch one clustered partitioned write (batch-sized);
 compaction folds only tiles past the file-count threshold, tiles
@@ -52,9 +53,7 @@ class ZOrderStreamWriter:
         self.target_files = target_files
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        if not os.path.exists(self.table._manifest_path()):
+        if self.table.pointer.read() is None:
             self.table.init(
                 batch_df,
                 self.x_col,

@@ -104,9 +104,9 @@ def test_replayed_batch_is_skipped(spark, tmp_path):
     b1 = spark.createDataFrame([(1, 2, "U", 2.0)], SCHEMA)
     sink.apply_batch(b0, 0)
     sink.apply_batch(b1, 1)
-    v_before, _ = sink._pointer()
+    before = sink.pointer.read()
     sink.apply_batch(b1, 1)  # at-least-once redelivery: no new version
-    assert sink._pointer() == (v_before, 1)
+    assert sink.pointer.read() == before == {"version": 1, "last_batch": 1}
     got = {r["k"]: (r["seq"], r["v"]) for r in sink.current_state(spark).collect()}
     assert got == {1: (2, 2.0)}
 

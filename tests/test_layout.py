@@ -199,10 +199,10 @@ def test_zorder_table_init_append_compact(spark, tmp_path):
         tile = os.path.join(t.path, dirname)
         return len([f for f in os.listdir(tile) if f.endswith(".parquet")])
 
-    before = {int(b): n_files(d) for b, d in t._load()["tiles"].items()}
+    before = {int(b): n_files(d) for b, d in t.pointer.read()["tiles"].items()}
     rewritten = t.compact(spark, max_files=2, target_files=1)
     assert rewritten, "appends should have pushed some tile past 2 files"
-    tiles = t._load()["tiles"]
+    tiles = t.pointer.read()["tiles"]
     for b, nf in rewritten.items():
         assert before[b] == nf > 2
         assert n_files(tiles[str(b)]) == 1
@@ -222,7 +222,7 @@ def test_ztable_racing_reader_keeps_complete_snapshot(spark, tmp_path):
 
     t, ev = _mk_ztable(spark, tmp_path)
     n_total = ev.count()
-    pre = t._load()
+    pre = t.pointer.read()
     pre_dirs = [os.path.join(t.path, d) for d in pre["tiles"].values()]
     t.compact(spark, max_files=1, target_files=1)
     # post-flip: the pre-compact reader's dirs all still exist and
@@ -245,7 +245,7 @@ def test_ztable_crash_before_flip_sweeps_orphan(spark, tmp_path):
     t, ev = _mk_ztable(spark, tmp_path)
     n_total = ev.count()
     # simulate the crash: write an orphan next version for one tile
-    m = t._load()
+    m = t.pointer.read()
     bucket_s, dirname = sorted(m["tiles"].items())[0]
     orphan = f"t{int(bucket_s):04d}_v9"
     spark.read.parquet(os.path.join(t.path, dirname)).limit(3).write.parquet(
@@ -265,13 +265,13 @@ def test_ztable_append_new_bucket_publishes(spark, tmp_path):
     # init on a corner of the space (low x, low y) so high buckets are
     # empty, but bounds cover the full range via manual clamp targets
     t.init(ev, "x", "y", bits=16, n_buckets=8)
-    n_tiles_full = len(t._load()["tiles"])
+    n_tiles_full = len(t.pointer.read()["tiles"])
     t2 = L.ZOrderTable(str(tmp_path / "zt3"))
     low = ev.orderBy("event_id").limit(50)
     t2.init(low, "x", "y", bits=16, n_buckets=8)
-    before = len(t2._load()["tiles"])
+    before = len(t2.pointer.read()["tiles"])
     t2.append(ev)
-    after = len(t2._load()["tiles"])
+    after = len(t2.pointer.read()["tiles"])
     assert after >= before
     assert t2.read(spark).count() == 50 + ev.count()
     assert n_tiles_full >= 1
@@ -288,7 +288,7 @@ def test_ztable_reinit_over_crash_debris(spark, tmp_path):
     t = L.ZOrderTable(str(path))
     t.init(ev, "x", "y", bits=16, n_buckets=8)
     # crash simulation: manifest gone, populated tile dirs remain
-    os.remove(t._manifest_path())
+    os.remove(t.pointer.path)
     t2 = L.ZOrderTable(str(path))
     t2.init(ev, "x", "y", bits=16, n_buckets=8)
     assert t2.read(spark).count() == ev.count()
@@ -317,9 +317,6 @@ def test_ztable_batch_append_replay_idempotent(spark, tmp_path):
     (manifest pointer), and a batch interrupted MID-append (files
     moved, pointer NOT advanced) re-applies cleanly via its b{k}_
     prefix sweep — no double rows."""
-    import json
-    import os
-
     ev = _ztable_events(spark)
     t = L.ZOrderTable(str(tmp_path / "zt_replay"))
     t.init(ev.filter(F.col("event_id") % 4 == 0), "x", "y",
@@ -332,16 +329,16 @@ def test_ztable_batch_append_replay_idempotent(spark, tmp_path):
     # crash simulation: batch 2's files land but the pointer doesn't
     b2 = ev.filter(F.col("event_id") % 4 == 2)
     t.append(b2, batch_id=2)
-    m = t._load()
+    m = t.pointer.read()
     m["last_batch"] = 1  # rewind the pointer as if the flip was lost
-    t._flip(m)
+    t.pointer.publish(m)
+    assert t.read(spark).count() == n_after_b1  # uncommitted files unread
     t.append(b2, batch_id=2)  # replay after the "crash"
     got = t.read(spark)
     want = ev.filter(F.col("event_id") % 4 != 3)
     assert got.count() == want.count()
     assert got.select("event_id").exceptAll(want.select("event_id")).count() == 0
-    assert json.loads(open(t._manifest_path()).read())["last_batch"] == 2
-    del os
+    assert t.pointer.read()["last_batch"] == 2
 
 
 def test_ztable_replay_sweeps_new_bucket_debris(spark, tmp_path):
@@ -357,15 +354,15 @@ def test_ztable_replay_sweeps_new_bucket_debris(spark, tmp_path):
     # lands in NEW tiles
     t.init(ev.orderBy("event_id").limit(5), "x", "y",
            bits=16, n_buckets=8, batch_id=0)
-    m_before = t._load()
+    m_before = t.pointer.read()
     b1 = ev.subtract(ev.orderBy("event_id").limit(5))
     t.append(b1, batch_id=1)
-    m_after = t._load()
+    m_after = t.pointer.read()
     new_buckets = set(m_after["tiles"]) - set(m_before["tiles"])
     assert new_buckets, "fixture must exercise the new-bucket path"
     # crash simulation: the flip was lost — pointer AND tile map revert,
     # but the moved files (incl. whole new-bucket dirs) stay on disk
-    t._flip(m_before)
+    t.pointer.publish(m_before)
     t.append(b1, batch_id=1)  # replay
     got = t.read(spark)
     assert got.count() == ev.count()
@@ -409,7 +406,7 @@ def test_zorder_stream_writer_matches_batch_table(spark, tmp_path):
     assert got.count() == 300
     assert got.select("event_id").distinct().count() == 300
     # compaction fired (batch 1): no tile holds more than ~2 files
-    m = w.table._load()
+    m = w.table.pointer.read()
     assert m["last_batch"] == 2
 
 
@@ -424,7 +421,7 @@ def test_ztable_tiles_prune_like_hive_partitions(spark, tmp_path):
     t = L.ZOrderTable(str(tmp_path / "zt_prune"))
     t.init(ev, "x", "y", bits=16, n_buckets=8)
     t.compact(spark, max_files=0, target_files=1)  # one file per tile
-    m = t._load()
+    m = t.pointer.read()
     files = []
     for d in m["tiles"].values():
         tile = os.path.join(t.path, d)

@@ -52,8 +52,7 @@ def test_multibatch_merge_equals_batch_aggregate(spark, tmp_path):
     assert got == want
     # three micro-batches applied -> pointer at v2; retention keeps
     # only the last keep_versions dirs (default 2: v1, v2)
-    version, last_batch = mat._pointer()
-    assert version == 2 and last_batch == 2
+    assert mat.pointer.read() == {"version": 2, "last_batch": 2}
     import os
 
     dirs = sorted(d for d in os.listdir(mat.state_dir) if d.startswith("v"))
@@ -166,10 +165,10 @@ def test_restart_resumes_materialization(spark, tmp_path):
         (src / f"f{i}.jsonl").write_text("\n".join(json.dumps(r) for r in rs))
         time.sleep(0.05)
     drain()
-    v1, _ = mat._pointer()
+    v1 = mat.pointer.read()["version"]
     (src / "f2.jsonl").write_text("\n".join(json.dumps(r) for r in rows(2)))
     drain()
-    v2, _ = mat._pointer()
+    v2 = mat.pointer.read()["version"]
     assert v2 == v1 + 1  # exactly ONE new batch applied after restart
     got = {
         r["user_id"]: (r["n_rows"], float(r["sum_value"]))

@@ -202,22 +202,25 @@ def test_progressive_stream_budget_and_idempotency(spark, tmp_path):
     r2 = ProgressiveResolver(str(tmp_path / "st2"), budget=5, df_cap=50, tau=0.05)
     r2.apply_batch(docs, 0)
     assert {tuple(x) for x in r2.results(spark).collect()} == first
-    # REPLAY of the multi-bucket batch: bucket 0's reprocessing must
-    # not see bucket 1's state written by the first application (the
-    # _seen cut is "all buckets >= current", not just "current") —
-    # otherwise the df cap shifts and b0's results dir is overwritten
-    # with different content
+    # REPLAY of the committed multi-bucket batch: skipped whole
     r2.apply_batch(docs, 0)
     assert {tuple(x) for x in r2.results(spark).collect()} == first
 
 
-def test_progressive_multibucket_replay_df_cap(spark, tmp_path):
-    """Adversarial multi-bucket replay: bucket 1 duplicates bucket 0's
-    texts so the visible shingle df doubles once b1's partials exist.
-    With df_cap between the two, a replayed bucket 0 that could see
-    b1's state would cut every shingle and publish an EMPTY b0
-    results dir — the exact at-least-once violation from ADVICE r3.
-    The >=-bucket exclusion must keep the replay byte-identical."""
+def test_progressive_multibucket_replay_df_cap(spark, tmp_path, monkeypatch):
+    """Adversarial multi-bucket redelivery: bucket 1 duplicates bucket
+    0's texts so the visible shingle df doubles once b1's partials
+    exist. With df_cap between the two, a reprocessed bucket 0 that
+    could see b1's state would cut every shingle and publish an EMPTY
+    b0 results dir — the exact at-least-once violation from ADVICE r3.
+    The first delivery crashes after writing both buckets, before its
+    commit: the redelivery must read only committed state and equal a
+    clean run."""
+    import os
+
+    import pytest
+
+    from streaming_cdc_spark.streaming.commit import CommitPointer
     from streaming_cdc_spark.streaming.progressive import ProgressiveResolver
 
     text = "alpha beta gamma delta epsilon zeta"
@@ -225,11 +228,23 @@ def test_progressive_multibucket_replay_df_cap(spark, tmp_path):
         [(i, text, 0) for i in range(5)] + [(10 + i, text, 1) for i in range(5)],
         "doc_id long, text string, bucket int",
     )
-    r = ProgressiveResolver(str(tmp_path / "st"), budget=50, df_cap=7, tau=0.05)
-    r.apply_batch(docs, 0)  # one micro-batch carrying BOTH buckets
-    first = {tuple(x) for x in r.results(spark).collect()}
+    clean = ProgressiveResolver(str(tmp_path / "clean"), budget=50, df_cap=7, tau=0.05)
+    clean.apply_batch(docs, 0)  # one micro-batch carrying BOTH buckets
+    first = {tuple(x) for x in clean.results(spark).collect()}
     b0_rows = [t for t in first if t[0] == 0]
     assert b0_rows, "bucket 0 produced no rows (df_cap bound too early)"
+
+    def crash(self, pointer):
+        raise RuntimeError("crash before the commit")
+
+    r = ProgressiveResolver(str(tmp_path / "st"), budget=50, df_cap=7, tau=0.05)
+    with monkeypatch.context() as m:
+        m.setattr(CommitPointer, "publish", crash)
+        with pytest.raises(RuntimeError):
+            r.apply_batch(docs, 0)
+    # the crashed attempt's b1 state is on disk, but nothing is committed
+    assert os.path.isdir(os.path.join(r.df_root, "b1"))
+    assert r.results(spark).count() == 0
     r.apply_batch(docs, 0)  # at-least-once redelivery of the whole batch
     assert {tuple(x) for x in r.results(spark).collect()} == first
 
@@ -258,7 +273,8 @@ def test_progressive_state_reads_declare_written_schemas(spark, tmp_path):
     sc.setJobGroup("progressive_reads", "progressive_reads")
     try:
         reads = [
-            r._seen(spark, root, schema, exclude_from=2) for root, schema in tables[:2]
+            r._seen(spark, root, schema, r.pointer.read()["state"])
+            for root, schema in tables[:2]
         ] + [r.results(spark)]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -312,8 +328,9 @@ def test_progressive_compaction_preserves_results(spark, tmp_path):
 
 def test_progressive_compaction_crash_between_publish_and_cleanup(spark, tmp_path):
     """If compaction crashes AFTER publishing compact_v0 but BEFORE
-    deleting its inputs, the manifest must make readers skip the
-    still-present subsumed bucket dirs — no double counting."""
+    deleting its inputs, readers resolve only what the pointer names:
+    the next bucket skips the still-present subsumed bucket dirs — no
+    double counting."""
     import os
     import shutil
 
@@ -321,23 +338,26 @@ def test_progressive_compaction_crash_between_publish_and_cleanup(spark, tmp_pat
 
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta shared run %d %d" % (i % 4, i), i // 5)
-         for i in range(15)],
+         for i in range(20)],
         "doc_id long, text string, bucket int",
     )
-    batches = [docs.filter(f"bucket = {b}") for b in range(3)]
-    r = ProgressiveResolver(str(tmp_path / "st"), budget=5, df_cap=50, tau=0.05)
+    batches = [docs.filter(f"bucket = {b}") for b in range(4)]
+    plain = ProgressiveResolver(str(tmp_path / "plain"), budget=5, df_cap=50, tau=0.05)
     for i, b in enumerate(batches):
+        plain.apply_batch(b, i)
+    expected = {tuple(x) for x in plain.results(spark).collect()}
+    r = ProgressiveResolver(str(tmp_path / "st"), budget=5, df_cap=50, tau=0.05)
+    for i, b in enumerate(batches[:3]):
         r.apply_batch(b, i)
-    expected = {tuple(x) for x in r.results(spark).collect()}
     # snapshot b0's postings, compact, then "un-delete" b0 to simulate
-    # a crash after the atomic rename
+    # a crash after the pointer flip
     b0 = os.path.join(r.state_root, "b0")
     saved = str(tmp_path / "b0_saved")
     shutil.copytree(b0, saved)
     r.compact(spark, keep_last=1)
     shutil.copytree(saved, b0)  # crash left the subsumed dir behind
-    assert "b0" not in ProgressiveResolver._live_dirs(r.state_root)
-    r.apply_batch(batches[2], 2)  # replay reads state: must skip b0
+    assert "b0" not in r.pointer.read()["state"]
+    r.apply_batch(batches[3], 3)  # reads state: must skip b0
     assert {tuple(x) for x in r.results(spark).collect()} == expected
 
 
@@ -362,10 +382,23 @@ def test_progressive_compaction_edge_cases(spark, tmp_path):
     assert {tuple(x) for x in r.results(spark).collect()} == before
 
 
+def _tree_bytes(root):
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(d, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
 def test_progressive_scheduled_compaction(spark, tmp_path):
     """compact_every folds state INSIDE the stream: after 6 buckets
-    with compact_every=3/keep_last=2, a compacted generation exists,
-    old bucket dirs are gone, and results equal the uncompacted run."""
+    with compact_every=3, a compacted generation exists, old bucket
+    dirs are gone, results equal the uncompacted run, and a
+    redelivery of the last batch leaves the results byte-identical."""
     import os
 
     from streaming_cdc_spark.streaming.progressive import ProgressiveResolver
@@ -378,8 +411,7 @@ def test_progressive_scheduled_compaction(spark, tmp_path):
     batches = [docs.filter(f"bucket = {b}") for b in range(6)]
     plain = ProgressiveResolver(str(tmp_path / "plain"), budget=5, df_cap=50, tau=0.05)
     comp = ProgressiveResolver(
-        str(tmp_path / "comp"), budget=5, df_cap=50, tau=0.05,
-        compact_every=3, compact_keep_last=2,
+        str(tmp_path / "comp"), budget=5, df_cap=50, tau=0.05, compact_every=3
     )
     for i, b in enumerate(batches):
         plain.apply_batch(b, i)
@@ -388,26 +420,20 @@ def test_progressive_scheduled_compaction(spark, tmp_path):
     assert any(d.startswith("compact_v") for d in state), state
     assert "b0" not in state  # folded
     assert "b5" in state  # keep_last protects the newest
-    assert {tuple(x) for x in comp.results(spark).collect()} == {
-        tuple(x) for x in plain.results(spark).collect()
-    }
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="keep_last"):
-        ProgressiveResolver(str(tmp_path / "bad"), compact_every=2, compact_keep_last=0)
+    expected = {tuple(x) for x in plain.results(spark).collect()}
+    assert {tuple(x) for x in comp.results(spark).collect()} == expected
+    before = _tree_bytes(comp.result_root)
+    comp.apply_batch(batches[5], 5)  # at-least-once redelivery
+    assert _tree_bytes(comp.result_root) == before
+    assert {tuple(x) for x in comp.results(spark).collect()} == expected
 
 
 def test_scheduled_compaction_protects_current_batch(spark, tmp_path):
-    """In-stream compaction during a MULTI-bucket micro-batch must
-    never fold that batch's own buckets: with compact_every=2 /
-    keep_last=1, batch B=[2..5] triggers a fold after bucket 3 that
-    would otherwise swallow b2 — then a redelivery of the whole batch
-    would see its own first-application state inside the compacted
-    generation (invisible to _seen's >=-cut) and double-count. The
-    protect_from floor keeps every current-batch bucket unfolded and
-    the full-batch replay byte-identical (code-review r4)."""
-    import os
-
+    """An in-stream compaction during a MULTI-bucket micro-batch folds
+    buckets of that same batch (compact_every=2 fires after bucket 5
+    of batch [2..5] and folds b0..b3); a redelivery of the whole batch
+    afterwards must leave the results byte-identical and equal to the
+    uncompacted run (code-review r4)."""
     from streaming_cdc_spark.streaming.progressive import ProgressiveResolver
 
     docs = spark.createDataFrame(
@@ -417,20 +443,21 @@ def test_scheduled_compaction_protects_current_batch(spark, tmp_path):
     )
     a = docs.filter("bucket < 2")
     b = docs.filter("bucket >= 2")
+    plain = ProgressiveResolver(str(tmp_path / "plain"), budget=5, df_cap=50, tau=0.05)
     r = ProgressiveResolver(
-        str(tmp_path / "st"), budget=5, df_cap=50, tau=0.05,
-        compact_every=2, compact_keep_last=1,
+        str(tmp_path / "st"), budget=5, df_cap=50, tau=0.05, compact_every=2
     )
-    r.apply_batch(a, 0)
-    r.apply_batch(b, 1)
-    state = sorted(os.listdir(r.state_root))
-    # b0/b1 (previous batch) folded; every current-batch bucket kept
-    assert any(d.startswith("compact_v") for d in state), state
-    for k in (2, 3, 4, 5):
-        assert f"b{k}" in state, state
-    first = {tuple(x) for x in r.results(spark).collect()}
+    for res in (plain, r):
+        res.apply_batch(a, 0)
+        res.apply_batch(b, 1)
+    state = r.pointer.read()["state"]
+    assert state[0].startswith("compact_v") and "b2" not in state, state
+    expected = {tuple(x) for x in plain.results(spark).collect()}
+    assert {tuple(x) for x in r.results(spark).collect()} == expected
+    before = _tree_bytes(r.result_root)
     r.apply_batch(b, 1)  # at-least-once redelivery of the whole batch
-    assert {tuple(x) for x in r.results(spark).collect()} == first
+    assert _tree_bytes(r.result_root) == before
+    assert {tuple(x) for x in r.results(spark).collect()} == expected
 
 
 def test_streaming_bloom_dedup_multibatch(spark, tmp_path):
