@@ -25,14 +25,89 @@ Physical strategy for CC is adaptive, like AQE join selection:
   at the least root any partition gave it. Components that one
   partition sees whole (cliques, stars) are then already final, and
   the loop's first round only confirms the fixpoint.
+
+Every graph operator here reads its edges through ``sym_edges`` and
+materializes its result before that cache is released.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators.similarity import cosine_self_edges
+
+
+def _long_pairs(edges: DataFrame) -> DataFrame:
+    """(u, v) as longs, input self-edges dropped."""
+    return edges.select(F.col("u").cast("long"), F.col("v").cast("long")).filter(
+        F.col("u") != F.col("v")
+    )
+
+
+# below this many input edges sym_edges caches ONE partition: the
+# sf0.1 graph queries (tens of thousands of edges) ran ~25% slower on
+# 8-16 partitions, where task scheduling outweighs the work
+_SMALL_GRAPH_EDGES = 50_000
+
+
+@contextmanager
+def sym_edges(edges: DataFrame, self_loops: bool = False):
+    """The symmetric edge set of an undirected edge list (u, v), for
+    the duration of a ``with`` block: both orientations of every
+    input edge, deduplicated, input self-edges dropped, plus the
+    self-loops (u, u) and (v, v) of every touched vertex when
+    ``self_loops`` (connected_components folds "keep own label" into
+    its neighbor-min through them).
+
+    The input is read once: it is persisted and counted, and each
+    edge is exploded into its orientations (``e.union(e.flipped)``
+    would plan the edge subtree, often a similarity kernel, twice).
+    The result is cached PRE-PARTITIONED on the probe key u (a cached
+    plan keeps its output partitioning,
+    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false,
+    pinned in tests/test_plans.py), so a per-round join on u shuffles
+    only the O(V) side, never the O(E) edges, and ``groupBy("u")``
+    needs no shuffle. A localCheckpoint would drop that partitioning.
+    The planner reuses it only from spark.sql.shuffle.partitions
+    partitions up, and sees it only once the cache is built (a plan
+    meeting an unbuilt cache builds it once per reference), so a
+    graph of ``_SMALL_GRAPH_EDGES`` or more edges is cached over that
+    many partitions, a smaller one as ONE partition (one task per
+    stage), and the cache is built before the block starts. It is
+    released when the block exits: anything returned from inside must
+    be materialized first (localCheckpoint)."""
+    e = _long_pairs(edges).persist()
+    pairs = [
+        F.struct(F.col("u"), F.col("v")),
+        F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+    ]
+    if self_loops:
+        pairs += [
+            F.struct(F.col("u"), F.col("u").alias("v")),
+            F.struct(F.col("v").alias("u"), F.col("v")),
+        ]
+    try:
+        n_parts = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        if e.count() < _SMALL_GRAPH_EDGES:
+            n_parts = 1
+        sym = (
+            e.select(F.explode(F.array(*pairs)).alias("_p"))
+            .select("_p.u", "_p.v")
+            .repartition(n_parts, "u")
+            .distinct()
+            .persist()
+        )
+        try:
+            sym.write.format("noop").mode("overwrite").save()
+            e.unpersist()
+            yield sym
+        finally:
+            sym.unpersist()
+    finally:
+        e.unpersist()
 
 
 def _driver_union_find(vertices: DataFrame, edge_pairs: list, id_col: str) -> DataFrame:
@@ -90,9 +165,7 @@ def connected_components(
     the component — deterministic regardless of execution order.
     """
     vs = vertices.select(F.col(id_col).cast("long").alias("v"))
-    e = edges.select(F.col("u").cast("long"), F.col("v").cast("long")).filter(
-        F.col("u") != F.col("v")
-    )
+    e = _long_pairs(edges)
     if driver_cutoff:
         # Size the graph with ONE fully-parallel pass over a persisted
         # edge set. take(cutoff+1) looks cheaper but wave-scans the
@@ -113,39 +186,31 @@ def connected_components(
                 return _driver_union_find(vs, pairs, "v").withColumnRenamed("v", id_col)
             finally:
                 e.unpersist()
-    # Symmetrize with ONE reference to the edge set (optimization r9
-    # residual sweep): e.union(e.flipped) plans the edge subtree — a
-    # full similarity kernel for the threshold-CC queries — TWICE when
-    # e is not already cached (driver_cutoff=0 path); exploding each
-    # edge into both directions keeps a single pipelined evaluation.
-    # The same explode also emits both SELF-LOOPS (u, u), (v, v), so
-    # the touched-vertex set never has to be derived from the edge
-    # subtree a second time (optimization r10, guide §2.4): the loop's
-    # self-loop row folds "keep own label" into the neighbor-min
-    # aggregate — min over (neighbors ∪ self) IS least(own, nbr min) —
-    # so no per-iteration join on the label relation is needed.
-    # The relation is cached PRE-PARTITIONED on the probe key u (the
-    # cached plan keeps its output partitioning:
-    # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false,
-    # pinned in tests/test_plans.py), so each iteration shuffles only
-    # the label relation (O(V) rows), never the edges (O(E) rows); the
-    # distinct on (u, v) reuses that partitioning — one shuffle.
-    sym = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                    F.struct(F.col("u"), F.col("u").alias("v")),
-                    F.struct(F.col("v").alias("u"), F.col("v")),
-                )
-            ).alias("_p")
-        )
-        .select("_p.u", "_p.v")
-        .repartition("u")
-        .distinct()
-        .persist()
+    # The self-loops make the touched-vertex set come from the cached
+    # edges instead of a second pass over the edge subtree, and the
+    # loop's self-loop row folds "keep own label" into the
+    # neighbor-min aggregate — min over (neighbors ∪ self) IS
+    # least(own, nbr min) — so no per-round join on the label relation
+    # is needed; each round shuffles only the labels.
+    with sym_edges(e, self_loops=True) as sym:
+        lbl = _min_labels(sym, max_iter)
+    e.unpersist()
+    # the final labels cover exactly the edge-touched vertices; the
+    # rest of `vs` are singletons. Edges may reference ids absent from
+    # `vertices`, so labelled rows are kept only for the requested
+    # vertex set (matches the driver-union-find path).
+    isolated = vs.join(lbl, "v", "leftanti").select("v", F.col("v").alias("l"))
+    return (
+        lbl.join(vs, "v", "leftsemi")
+        .union(isolated)
+        .select(F.col("v").alias(id_col), F.col("l").alias("cluster_id"))
     )
+
+
+def _min_labels(sym: DataFrame, max_iter: int) -> DataFrame:
+    """(v, l): l = least vertex id of v's component, over a
+    ``sym_edges(self_loops=True)`` relation; the returned labels are
+    materialized (the convergence probe is the action)."""
 
     def local_roots(batches):
         # union-find over ONE partition's edges: vectorized min-label
@@ -226,18 +291,7 @@ def connected_components(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    sym.unpersist()
-    e.unpersist()
-    # the final labels cover exactly the edge-touched vertices; the
-    # rest of `vs` are singletons. Edges may reference ids absent from
-    # `vertices`, so labelled rows are kept only for the requested
-    # vertex set (matches the driver-union-find path).
-    isolated = vs.join(lbl, "v", "leftanti").select("v", F.col("v").alias("l"))
-    return (
-        lbl.join(vs, "v", "leftsemi")
-        .union(isolated)
-        .select(F.col("v").alias(id_col), F.col("l").alias("cluster_id"))
-    )
+    return lbl
 
 
 def _label_sum(lbl: DataFrame):
@@ -344,7 +398,7 @@ def find_threshold(
     return best
 
 
-def triangle_counts(edges: DataFrame, assume_dedup: bool = False) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts via DEGREE-ORIENTED
     wedge closing (Schank/Wagner '05; the MapReduce form is Suri &
     Vassilvitskii WWW'11 "node iterator++") — the join order that
@@ -359,35 +413,18 @@ def triangle_counts(edges: DataFrame, assume_dedup: bool = False) -> DataFrame:
     corner. Both stages are plain equi-joins: wedges on apex, closure
     against the undirected edge list on the canonical (min, max) key.
 
-    Input: undirected edges (u, v), u < v, no duplicates. Output:
-    (vec_id, n_triangles) for every node in at least one triangle.
+    Input: undirected edges (u, v). Output: (vec_id, n_triangles) for
+    every node in at least one triangle."""
+    with sym_edges(edges) as sym:
+        return _triangles(sym).localCheckpoint()
 
-    ``assume_dedup``: the caller vouches the input is already unique
-    AND already materialized (localCheckpointed) — skips the distinct
-    shuffle and the second checkpoint (review r7s3: a caller that
-    checkpoints for its own degree pass was paying both twice).
-    """
-    if assume_dedup:
-        e = edges.select(F.col("u").cast("long"), F.col("v").cast("long"))
-    else:
-        # the edge set is referenced ~5x in this plan (degree union
-        # x2, the orientation join, the closure semi-join) and
-        # typically comes off an expensive kernel — materialize it
-        # once instead of letting Catalyst recompute the kernel per
-        # reference (the connected_components persist convention)
-        e = (
-            edges.select(F.col("u").cast("long"), F.col("v").cast("long"))
-            .distinct()
-            .localCheckpoint()
-        )
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionAll(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ed = e.join(deg.select(F.col("x").alias("u"), F.col("d").alias("du")), "u").join(
-        deg.select(F.col("x").alias("v"), F.col("d").alias("dv")), "v"
+
+def _triangles(sym: DataFrame) -> DataFrame:
+    """triangle_counts over a prepared ``sym_edges`` relation."""
+    e = sym.filter(F.col("u") < F.col("v"))
+    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    ed = e.join(deg.select("u", F.col("d").alias("du")), "u").join(
+        deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v"
     )
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
@@ -410,6 +447,38 @@ def triangle_counts(edges: DataFrame, assume_dedup: bool = False) -> DataFrame:
     )
 
 
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
+    """LOCAL CLUSTERING COEFFICIENT per node, 2*tri(v) /
+    (deg(v)*(deg(v)-1)) (Watts-Strogatz), for every node of degree
+    >= 2. Triangles come from the triangle_counts kernel and degrees
+    from a keyed count over the same prepared edge set; nodes with
+    zero triangles emit 0 through the LEFT join (an inner join would
+    silently drop exactly the open-neighborhood nodes). The
+    denominator is exact integer; the coefficient is one fixed-order
+    double division, rounded 6dp. Output:
+    (vec_id, degree, n_triangles, lcc_r)."""
+    nt = F.coalesce(F.col("n_triangles"), F.lit(0).cast("long"))
+    with sym_edges(edges) as sym:
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("degree"))
+        return (
+            deg.filter(F.col("degree") >= 2)
+            .select(F.col("u").alias("vec_id"), "degree")
+            .join(_triangles(sym), "vec_id", "left")
+            .select(
+                "vec_id",
+                "degree",
+                nt.alias("n_triangles"),
+                F.round(
+                    F.lit(2.0)
+                    * nt.cast("double")
+                    / (F.col("degree") * (F.col("degree") - 1)).cast("double"),
+                    6,
+                ).alias("lcc_r"),
+            )
+            .localCheckpoint()
+        )
+
+
 def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     """K-CORE PEELING, ``rounds`` synchronous rounds (the parallel
     peeling step of Matula & Beck '83's core decomposition, as run
@@ -421,40 +490,34 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     until a round removes nothing", and on bounded-degeneracy near-dup
     graphs the peel converges in a handful of rounds.
 
-    Scale shape per round: one keyed count (degrees) + two semi-joins
-    of the edge list against the survivor set — all equi-joins on node
-    ids, nothing quadratic, no driver state. Input: undirected edges
-    (u, v) with u < v, no duplicates. Output: (vec_id, deg) for every
-    node still alive after ``rounds`` peels, with its degree in the
+    Scale shape per round: ONE probe key. The surviving node set is
+    semi-joined against the u-partitioned edges on u (the edges stay
+    put; only the O(V) node set moves), and each surviving edge counts
+    toward its v endpoint — a keyed count whose partial aggregate is
+    what shuffles — so "both endpoints alive" needs no second probe of
+    the edges on v: a node's current degree is its number of alive
+    neighbors, kept only while the node itself is alive. Input:
+    undirected edges (u, v). Output: (vec_id, deg) for every node
+    still alive after ``rounds`` peels, with its degree in the
     surviving subgraph — the standard triage signal for "densely
     interlinked near-duplicate mass" (a template family survives the
     peel; incidental pairwise matches do not)."""
-    sym = (
-        edges.selectExpr("u", "v")
-        .union(edges.selectExpr("v AS u", "u AS v"))
-        .localCheckpoint()
-    )
-    alive = sym
-    for _ in range(rounds):
-        deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("u")
-        # alive is referenced 3x per round (degrees + both semi-join
-        # probes) and feeds the next round — without a per-round
-        # materialization the recompute tree grows 3^rounds (the
-        # r4 "referenced ~5x -> recomputes per reference" lesson).
-        # LAZY checkpoint (optimization r9): truncation of the plan
-        # tree happens at checkpoint-call time either way; deferring
-        # materialization to the final action removes one driver job
-        # per round (the RDD is cached at first compute inside the
-        # one real job, and later references read the cache).
-        alive = (
-            alive.join(keep, "u", "left_semi")
-            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    return alive.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg")).select(
-        F.col("u").alias("vec_id"), "deg"
-    )
+    with sym_edges(edges) as sym:
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+        for _ in range(rounds):
+            # LAZY checkpoint: the node set is referenced twice per
+            # round and feeds the next; materialization rides the
+            # final action (one driver job, not one per round)
+            alive = deg.filter(F.col("d") >= k).select("u").localCheckpoint(eager=False)
+            deg = (
+                sym.join(alive, "u", "left_semi")
+                .groupBy(F.col("v").alias("u"))
+                .agg(F.count(F.lit(1)).alias("d"))
+                .join(alive, "u", "left_semi")
+            )
+        return deg.select(
+            F.col("u").alias("vec_id"), F.col("d").cast("long").alias("deg")
+        ).localCheckpoint()
 
 
 def resource_allocation_links(
@@ -482,43 +545,37 @@ def resource_allocation_links(
     the two-pass global rank. Output:
     (u, v, score_micro, linked, rank), top_n rows under the total
     (score DESC, u, v) order."""
-    e = (
-        edges.select(F.col("u").cast("long"), F.col("v").cast("long"))
-        .distinct()
-        .localCheckpoint()
-    )
-    sym = e.union(e.selectExpr("v AS u", "u AS v"))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    centers = deg if max_center_degree is None else deg.filter(
-        F.col("d") <= max_center_degree
-    )
-    n1 = sym.join(centers.select("u"), "u", "left_semi")
-    wedges = (
-        n1.select(F.col("u").alias("_w"), F.col("v").alias("_a"))
-        .join(n1.select(F.col("u").alias("_w"), F.col("v").alias("_b")), "_w")
-        .filter(F.col("_a") < F.col("_b"))
-    )
-    contrib = wedges.join(deg.withColumnRenamed("u", "_w"), "_w").select(
-        "_a", "_b", F.expr(f"{unit} div d").alias("_c")
-    )
-    sc = contrib.groupBy("_a", "_b").agg(
-        F.sum("_c").cast("long").alias("score_micro")
-    )
-    flagged = sc.join(
-        e.select(F.col("u").alias("_a"), F.col("v").alias("_b"), F.lit(1).alias("_l")),
-        ["_a", "_b"],
-        "left",
-    ).select(
-        F.col("_a").alias("u"),
-        F.col("_b").alias("v"),
-        "score_micro",
-        F.coalesce(F.col("_l"), F.lit(0)).cast("long").alias("linked"),
-    )
     from streaming_cdc_spark.operators.ranking import row_number_global
 
-    return row_number_global(
-        flagged, [F.desc("score_micro"), F.asc("u"), F.asc("v")], "rank"
-    ).filter(F.col("rank") <= top_n)
+    with sym_edges(edges) as sym:
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+        centers = deg if max_center_degree is None else deg.filter(
+            F.col("d") <= max_center_degree
+        )
+        n1 = sym.join(centers.select("u"), "u", "left_semi")
+        wedges = (
+            n1.select(F.col("u").alias("_w"), F.col("v").alias("_a"))
+            .join(n1.select(F.col("u").alias("_w"), F.col("v").alias("_b")), "_w")
+            .filter(F.col("_a") < F.col("_b"))
+        )
+        contrib = wedges.join(deg.withColumnRenamed("u", "_w"), "_w").select(
+            "_a", "_b", F.expr(f"{unit} div d").alias("_c")
+        )
+        sc = contrib.groupBy("_a", "_b").agg(
+            F.sum("_c").cast("long").alias("score_micro")
+        )
+        linked = sym.filter(F.col("u") < F.col("v")).select(
+            F.col("u").alias("_a"), F.col("v").alias("_b"), F.lit(1).alias("_l")
+        )
+        flagged = sc.join(linked, ["_a", "_b"], "left").select(
+            F.col("_a").alias("u"),
+            F.col("_b").alias("v"),
+            "score_micro",
+            F.coalesce(F.col("_l"), F.lit(0)).cast("long").alias("linked"),
+        )
+        return row_number_global(
+            flagged, [F.desc("score_micro"), F.asc("u"), F.asc("v")], "rank"
+        ).filter(F.col("rank") <= top_n).localCheckpoint()
 
 
 def label_propagation(
@@ -526,14 +583,13 @@ def label_propagation(
     iterations: int = 3,
 ) -> DataFrame:
     """Semi-synchronous LABEL PROPAGATION community detection
-    (Raghavan et al. 2007) over an undirected edge list (u < v;
-    symmetrized internally), made fully deterministic: labels start
-    as node ids; each iteration every node adopts its neighbors'
-    MODE label with the tie broken by the SMALLEST label (count
-    DESC, label ASC — a total order, so the classic random
-    tie-break's nondeterminism is gone). Distinct from connected
-    components: the mode vote splits dense subregions a MIN-label
-    propagation would merge.
+    (Raghavan et al. 2007) over an undirected edge list, made fully
+    deterministic: labels start as node ids; each iteration every
+    node adopts its neighbors' MODE label with the tie broken by the
+    SMALLEST label (count DESC, label ASC — a total order, so the
+    classic random tie-break's nondeterminism is gone). Distinct
+    from connected components: the mode vote splits dense
+    subregions a MIN-label propagation would merge.
 
     Fixed ``iterations`` keeps it SQL-replayable (unrolled CTE
     pairs, like pagerank_exact). Scale shape per iteration: one
@@ -543,25 +599,23 @@ def label_propagation(
     least one edge."""
     from pyspark.sql import Window as W
 
-    sym = (
-        edges.selectExpr("u", "v")
-        .union(edges.selectExpr("v AS u", "u AS v"))
-        .localCheckpoint()
-    )
-    labels = sym.select("u").distinct().withColumn("lbl", F.col("u"))
-    for _ in range(iterations):
-        votes = (
-            sym.join(labels.withColumnRenamed("u", "_n"), sym["u"] == F.col("_n"))
-            .groupBy("v", "lbl")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        w = W.partitionBy("v").orderBy(F.desc("_c"), F.asc("lbl"))
-        labels = (
-            votes.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("v").alias("u"), "lbl")
-        )
-    return labels.select(F.col("u").alias("vec_id"), F.col("lbl").alias("community"))
+    with sym_edges(edges) as sym:
+        labels = sym.select("u").distinct().withColumn("lbl", F.col("u"))
+        for _ in range(iterations):
+            votes = (
+                sym.join(labels.withColumnRenamed("u", "_n"), sym["u"] == F.col("_n"))
+                .groupBy("v", "lbl")
+                .agg(F.count(F.lit(1)).alias("_c"))
+            )
+            w = W.partitionBy("v").orderBy(F.desc("_c"), F.asc("lbl"))
+            labels = (
+                votes.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .select(F.col("v").alias("u"), "lbl")
+            )
+        return labels.select(
+            F.col("u").alias("vec_id"), F.col("lbl").alias("community")
+        ).localCheckpoint()
 
 
 def pagerank_exact(
@@ -571,13 +625,13 @@ def pagerank_exact(
     unit: int = 1_000_000,
     seed_pred=None,
 ) -> DataFrame:
-    """Damped PageRank over an UNDIRECTED edge list (u < v pairs;
-    symmetrized internally), in INTEGER MICRO-UNITS so every step is
-    exact and order-free — the same trick as the PQ ADC integer LUTs:
-    float PageRank sums contributions in whatever order partitions
-    merge, which breaks cross-engine/cross-partitioning hash parity;
-    integer sums and integer division are associative and identical
-    in Spark (`div`) and DuckDB (`//`).
+    """Damped PageRank over an UNDIRECTED edge list, in INTEGER
+    MICRO-UNITS so every step is exact and order-free — the same
+    trick as the PQ ADC integer LUTs: float PageRank sums
+    contributions in whatever order partitions merge, which breaks
+    cross-engine/cross-partitioning hash parity; integer sums and
+    integer division are associative and identical in Spark (`div`)
+    and DuckDB (`//`).
 
     rank_0 = unit per node; per iteration
     rank'(v) = (100-d)% * unit // 100  +  d% * SUM_u(rank(u) // deg(u)) // 100.
@@ -589,24 +643,6 @@ def pagerank_exact(
     are computed once. No driver-side state. Returns
     (vec_id, rank_micro) with rank in micro-units (BIGINT).
     """
-    # materialize the (possibly expensive — e.g. a cosine kernel)
-    # edge input ONCE: each iteration references it through the
-    # previous iteration's lineage, so an unchecked plan recomputes
-    # the kernel per iteration (the r4 code-review recompute trap)
-    sym = (
-        edges.selectExpr("u", "v")
-        .union(edges.selectExpr("v AS u", "u AS v"))
-        .localCheckpoint()
-    )
-    # lazy: deg derives from the eagerly-materialized sym — deferring
-    # its own materialization to the final action drops a driver job
-    # (optimization r9); its 2-refs-per-iteration reuse is unchanged
-    # (cached at first compute inside the one real job)
-    deg = (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)
-    )
     base = (100 - damping_pct) * unit // 100
     # PERSONALIZED variant (random walk with restart, Jeh & Widom
     # '03): ``seed_pred`` is a boolean Column over the node id `u` —
@@ -617,25 +653,35 @@ def pagerank_exact(
     else:
         init_r = F.when(seed_pred, F.lit(unit)).otherwise(F.lit(0))
         base_col = F.when(seed_pred, F.lit(base)).otherwise(F.lit(0))
-    # every node of the symmetrized graph has deg >= 1 and at least
-    # one in-neighbor (in = out), so no dangling-mass handling needed
-    ranks = deg.select("u", init_r.cast("long").alias("r"))
-    for _ in range(iterations):
-        contrib = (
-            sym.join(ranks, "u")
-            .join(deg, "u")
-            .select("v", F.expr("r div d").alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
+    with sym_edges(edges) as sym:
+        # lazy: computed once inside the final checkpoint, then its
+        # 2-per-iteration references read it
+        deg = (
+            sym.groupBy("u")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .localCheckpoint(eager=False)
         )
-        ranks = deg.join(contrib, deg["u"] == contrib["v"], "left").select(
-            deg["u"],
-            (
-                base_col
-                + F.expr(f"({damping_pct} * coalesce(s, 0)) div 100")
-            ).cast("long").alias("r"),
-        )
-    return ranks.select(F.col("u").alias("vec_id"), F.col("r").alias("rank_micro"))
+        # every node of the symmetrized graph has deg >= 1 and at least
+        # one in-neighbor (in = out), so no dangling-mass handling needed
+        ranks = deg.select("u", init_r.cast("long").alias("r"))
+        for _ in range(iterations):
+            contrib = (
+                sym.join(ranks, "u")
+                .join(deg, "u")
+                .select("v", F.expr("r div d").alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("s"))
+            )
+            ranks = deg.join(contrib, deg["u"] == contrib["v"], "left").select(
+                deg["u"],
+                (
+                    base_col
+                    + F.expr(f"({damping_pct} * coalesce(s, 0)) div 100")
+                ).cast("long").alias("r"),
+            )
+        return ranks.select(
+            F.col("u").alias("vec_id"), F.col("r").alias("rank_micro")
+        ).localCheckpoint()
 
 
 def bfs_distances(
@@ -652,30 +698,23 @@ def bfs_distances(
     scale-shape: no driver-side frontier, no global sort, per-round
     cost linear in |edges|. Fixed round count keeps it SQL-replayable
     (the unrolled-CTE oracle family: kcore_peel_rounds,
-    label_propagation). Inputs are localCheckpointed so the edge
-    kernel isn't recomputed per round and the plan tree stays flat
-    (the pagerank_exact lesson). Returns (id_col, dist) for every
-    node within ``rounds`` hops of a seed; dist is exact BIGINT, so
-    the min-reduction is order-free under any partitioning."""
-    und = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint()
-    )
-    # per-round checkpoints are LAZY (optimization r9, the kcore_peel
-    # note): plan truncation is immediate, materialization rides the
-    # final action — rounds driver jobs become one.
+    label_propagation). Returns (id_col, dist) for every node within
+    ``rounds`` hops of a seed; dist is exact BIGINT, so the
+    min-reduction is order-free under any partitioning."""
+    # per-round checkpoints are LAZY: plan truncation is immediate,
+    # materialization rides the final checkpoint — one driver job
     dist = seeds.select(
         F.col(id_col).alias("node"), F.lit(0).cast("long").alias("dist")
     ).localCheckpoint(eager=False)
-    for _ in range(rounds):
-        prop = und.join(dist, und.u == dist.node).select(
-            F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        dist = (
-            dist.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return dist.select(F.col("node").alias(id_col), "dist")
+    with sym_edges(edges) as sym:
+        for _ in range(rounds):
+            prop = sym.join(dist, sym.u == dist.node).select(
+                F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
+            )
+            dist = (
+                dist.unionByName(prop)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint(eager=False)
+            )
+        return dist.select(F.col("node").alias(id_col), "dist").localCheckpoint()

@@ -117,6 +117,22 @@ def exact_dedup_groups(
     )
 
 
+def minhash_columns(shingles: Column, num_hashes: int, prefix: str) -> list[Column]:
+    """MinHash signature columns ``{prefix}0..{prefix}{K-1}`` over a
+    shingle ARRAY column: hash i is the least md5_long of the shingles
+    salted with '{i}|' — one array_min over a transform, no explode."""
+
+    def hasher(salt):
+        # single-argument lambda: F.transform would pass the array
+        # index into any second (even defaulted) parameter
+        return lambda g: md5_long(g, salt=salt)
+
+    return [
+        F.array_min(F.transform(shingles, hasher(f"{i}|"))).alias(f"{prefix}{i}")
+        for i in range(num_hashes)
+    ]
+
+
 def minhash_signatures(
     docs: DataFrame,
     num_hashes: int = 4,
@@ -133,19 +149,7 @@ def minhash_signatures(
 
     base = fan_out(docs.select(F.col(id_col), tokens(text_col).alias("_t")))
     base = base.select(id_col, F.array_distinct(word_shingles(F.col("_t"))).alias("_sh"))
-
-    def hasher(salt):
-        # single-argument lambda: F.transform would pass the array
-        # index into any second (even defaulted) parameter
-        return lambda g: md5_long(g, salt=salt)
-
-    return base.select(
-        id_col,
-        *[
-            F.array_min(F.transform(F.col("_sh"), hasher(f"{i}|"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-    )
+    return base.select(id_col, *minhash_columns(F.col("_sh"), num_hashes, "h"))
 
 
 def _band_keys(num_hashes: int, rows_per_band: int) -> list[Column]:
@@ -991,18 +995,7 @@ def minhash_dedup(
         .persist()
     )
 
-    def hasher(salt):
-        # single-argument lambda: a second (even defaulted) parameter
-        # would receive the ARRAY INDEX
-        return lambda g: md5_long(g, salt=salt)
-
-    sig = shset.select(
-        id_col,
-        *[
-            F.array_min(F.transform(F.col("_sh"), hasher(f"{i}|"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-    )
+    sig = shset.select(id_col, *minhash_columns(F.col("_sh"), num_hashes, "h"))
     cand = _band_join(sig, num_hashes, rows_per_band, id_col, bucket_cap)
     # the verify join ships each candidate's full shingle SET — hash
     # strings to 60-bit longs first so the shuffled arrays are 8 B per
@@ -1068,19 +1061,7 @@ def incremental_minhash_dedup(
         .persist()
     )
 
-    def hasher(salt):
-        # single-argument lambda (a second parameter would receive the
-        # array index — see CLAUDE.md)
-        return lambda g: md5_long(g, salt=salt)
-
-    sig = shset.select(
-        id_col,
-        "_side",
-        *[
-            F.array_min(F.transform(F.col("_sh"), hasher(f"{i}|"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-    )
+    sig = shset.select(id_col, "_side", *minhash_columns(F.col("_sh"), num_hashes, "h"))
     band_keys = _band_keys(num_hashes, rows_per_band)
     buckets = sig.select(
         F.col(id_col), "_side", F.explode(F.array(*band_keys)).alias("bucket")

@@ -1074,46 +1074,12 @@ def clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deg(v)*(deg(v)-1)), the per-node cohesion diagnostic next to the
     global triangle counts (Watts-Strogatz; on near-dup graphs low
     LCC at high degree flags template/boilerplate hubs, high LCC
-    flags true duplicate cliques). Triangles come from the
-    degree-oriented wedge join (skew-proof, each triangle once at
-    its min-degree apex) reused from triangle_counts; degrees from
-    one keyed count over the undirected edge list; nodes with
-    degree >= 2 but zero triangles emit 0 via the left join (an
-    inner join would silently drop exactly the interesting
-    open-neighborhood nodes — the grinch_forest_invariants lesson).
-    The denominator deg*(deg-1) is exact integer; the coefficient
-    is one fixed-order double division, rounded 6dp. The oracle
-    recounts triangles with the naive three-way join — the
+    flags true duplicate cliques; operators/clustering.py:
+    clustering_coefficients, off the degree-oriented triangle kernel).
+    The oracle recounts triangles with the naive three-way join — the
     independent formulation."""
-    from streaming_cdc_spark.operators.clustering import triangle_counts as tc
+    from streaming_cdc_spark.operators.clustering import clustering_coefficients as lcc
     from streaming_cdc_spark.operators.similarity import cosine_self_edges
 
     emb = load(spark, sf_dir, "embeddings")
-    # one materialization serves both the degree pass and the triangle
-    # kernel: cosine_self_edges emits unique u<v pairs, so the
-    # operator's own distinct+checkpoint would be pure duplicated
-    # shuffle/IO (assume_dedup skips it — review r7s3)
-    edges = cosine_self_edges(emb, 0.3).select("u", "v").localCheckpoint()
-    deg = (
-        edges.select(F.col("u").alias("vec_id"))
-        .unionAll(edges.select(F.col("v").alias("vec_id")))
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
-    tri = tc(edges, assume_dedup=True)
-    nt = F.coalesce(F.col("n_triangles"), F.lit(0).cast("long"))
-    return (
-        deg.filter(F.col("degree") >= 2)
-        .join(tri, "vec_id", "left")
-        .select(
-            "vec_id",
-            "degree",
-            nt.alias("n_triangles"),
-            F.round(
-                F.lit(2.0)
-                * nt.cast("double")
-                / (F.col("degree") * (F.col("degree") - 1)).cast("double"),
-                6,
-            ).alias("lcc_r"),
-        )
-    )
+    return lcc(cosine_self_edges(emb, 0.3).select("u", "v"))

@@ -216,28 +216,15 @@ def streaming_minhash_dedup(
     minhash-collides with an earlier one inside the watermark horizon
     is dropped. State is one row per distinct signature with a TTL —
     bounded, key-partitioned, unbounded-stream safe."""
-    from streaming_cdc_spark.functions.hashing import md5_long
-    from streaming_cdc_spark.operators.dedup import tokens, word_shingles
+    from streaming_cdc_spark.operators.dedup import minhash_columns, tokens, word_shingles
 
-    sig_src = F.array_distinct(word_shingles(tokens(text_col)))
-    out = stream.withColumn("_sh", sig_src)
-
-    def hasher(salt):
-        # MUST be a single-argument lambda: F.transform hands a
-        # 2-arg callable (element, index) — a defaulted second
-        # parameter would silently receive the array index
-        return lambda g: md5_long(g, salt=salt)
-
-    sig_cols = []
-    for i in range(num_hashes):
-        out = out.withColumn(
-            f"mh{i}", F.array_min(F.transform(F.col("_sh"), hasher(f"{i}|")))
-        )
-        sig_cols.append(f"mh{i}")
+    sig = minhash_columns(F.col("_sh"), num_hashes, "mh")
     return (
-        out.drop("_sh")
+        stream.withColumn("_sh", F.array_distinct(word_shingles(tokens(text_col))))
+        .select("*", *sig)
+        .drop("_sh")
         .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(sig_cols)
+        .dropDuplicatesWithinWatermark([f"mh{i}" for i in range(num_hashes)])
     )
 
 

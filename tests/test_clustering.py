@@ -1,11 +1,14 @@
 """Clustering operators: greedy exact replay (reference fixture) and
 connected components vs a hand union-find."""
 
+from functools import partial
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from streaming_cdc_spark.operators import clustering as C
 from streaming_cdc_spark.operators.clustering import connected_components, threshold_clusters
 from streaming_cdc_spark.operators.greedy import greedy_cluster_numpy, greedy_clusters
 
@@ -123,6 +126,14 @@ def _cc(spark, n, edges, **kw):
     return {r["v"]: r["cluster_id"] for r in connected_components(vertices, e, **kw).collect()}
 
 
+def _all_partitions():
+    """Cache sym_edges over spark.sql.shuffle.partitions partitions even
+    for a test-sized graph, which its size would put in one."""
+    from unittest import mock
+
+    return mock.patch.object(C, "_SMALL_GRAPH_EDGES", 0)
+
+
 def _group_jobs(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -146,7 +157,8 @@ def test_connected_components_seeded_loop_equals_union_find(spark, parts, graph)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
-        got = _cc(spark, n, edges, driver_cutoff=0)
+        with _all_partitions():
+            got = _cc(spark, n, edges, driver_cutoff=0)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert got == _cc(spark, n, edges)
@@ -158,9 +170,10 @@ def test_connected_components_cliques_converge_in_one_round(spark):
     allowed 50 rounds runs exactly the jobs of a call allowed one."""
     edges = [(a, b) for g in range(5) for a in range(6 * g, 6 * g + 6) for b in range(a + 1, 6 * g + 6)]
     truth = {v: v - v % 6 if v < 30 else v for v in range(32)}  # 30, 31 isolated
-    assert _cc(spark, 32, edges, driver_cutoff=0, max_iter=1) == truth
-    one = _group_jobs(spark, "cc_one_round", lambda: _cc(spark, 32, edges, driver_cutoff=0, max_iter=1))
-    fifty = _group_jobs(spark, "cc_fifty_rounds", lambda: _cc(spark, 32, edges, driver_cutoff=0))
+    with _all_partitions():
+        assert _cc(spark, 32, edges, driver_cutoff=0, max_iter=1) == truth
+        one = _group_jobs(spark, "cc_one_round", lambda: _cc(spark, 32, edges, driver_cutoff=0, max_iter=1))
+        fifty = _group_jobs(spark, "cc_fifty_rounds", lambda: _cc(spark, 32, edges, driver_cutoff=0))
     assert fifty == one
 
 
@@ -175,12 +188,38 @@ def test_connected_components_empty_edges_distributed_stops(spark):
     assert jobs <= 10
 
 
-def test_connected_components_distributed_reads_edges_once(spark):
-    """driver_cutoff=0 evaluates the edge relation exactly once: the
-    seed, the touched set and the isolated vertices all come from the
-    cached symmetric edges or the final labels, never from a second
-    pass over the (for the threshold-CC queries, kernel-sized) edge
-    subtree. An accumulator counts the rows the edge source emits."""
+# every graph entry point as (spark, edges) -> DataFrame; CC runs its
+# distributed path, BFS starts from nodes 0 and 7
+GRAPH_OPS = {
+    "connected_components": lambda spark, e: C.connected_components(
+        spark.range(50).select(F.col("id").alias("v")), e, driver_cutoff=0
+    ),
+    "triangle_counts": lambda spark, e: C.triangle_counts(e),
+    "kcore_peel": lambda spark, e: C.kcore_peel(e, k=2, rounds=3),
+    "resource_allocation_links": lambda spark, e: C.resource_allocation_links(e, top_n=10),
+    "label_propagation": lambda spark, e: C.label_propagation(e, 3),
+    "pagerank_exact": lambda spark, e: C.pagerank_exact(e, 3),
+    "bfs_distances": lambda spark, e: C.bfs_distances(
+        e, spark.createDataFrame([(0,), (7,)], "node long"), rounds=3
+    ),
+    "clustering_coefficients": lambda spark, e: C.clustering_coefficients(e),
+}
+# a chain of pairs plus a triangle (0, 1, 2) and a long link
+GRAPH_RAW = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (0, 2), (7, 30)]
+
+
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("op", list(GRAPH_OPS))
+def test_graph_op_reads_edges_once(spark, op):
+    """Every graph entry point evaluates its edge relation exactly once,
+    across two collects of its result, and leaves no cached relation
+    behind: the symmetric edges are read from one cache, and the result
+    is materialized before that cache is released. An accumulator counts
+    the rows the edge source emits; the cache is spread over every
+    shuffle partition, as for a large graph."""
     seen = spark.sparkContext.accumulator(0)
 
     def count_rows(batches):
@@ -188,12 +227,57 @@ def test_connected_components_distributed_reads_edges_once(spark):
             seen.add(len(b))
             yield b
 
-    raw = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (7, 30)]
-    edges = spark.createDataFrame(raw, "u long, v long").mapInPandas(count_rows, "u long, v long")
-    vertices = spark.range(50).select(F.col("id").alias("v"))
-    got = {r["v"]: r["cluster_id"] for r in connected_components(vertices, edges, driver_cutoff=0).collect()}
-    assert got == _cc(spark, 50, raw)
-    assert seen.value == len(raw)
+    plain = spark.createDataFrame(GRAPH_RAW, "u long, v long")
+    edges = plain.mapInPandas(count_rows, "u long, v long")
+    run = partial(GRAPH_OPS[op], spark)
+    spark.catalog.clearCache()
+    with _all_partitions():
+        out = run(edges)
+    assert _cache_empty(spark)
+    first, second = sorted(out.collect()), sorted(out.collect())
+    assert seen.value == len(GRAPH_RAW)
+    assert first == second == sorted(run(plain).collect())
+    assert first
+
+
+_EMPTY_RESULT = {
+    "connected_components": [(v, v) for v in range(50)],
+    "bfs_distances": [(0, 0), (7, 0)],  # the seeds, at distance 0
+}
+
+
+@pytest.mark.parametrize("op", list(GRAPH_OPS))
+def test_graph_op_degenerate_inputs(spark, op):
+    """An empty edge set gives each operator its defined result (CC: all
+    singletons; BFS: the seeds alone; empty elsewhere), and a
+    single-partition run (one input partition, one shuffle partition)
+    gives the same result as the default layout — both within a small
+    fixed job bound, with no cached relation left behind. The default
+    layout is spread over every shuffle partition for the comparison."""
+    run = partial(GRAPH_OPS[op], spark)
+    spark.catalog.clearCache()
+    out = []
+    empty = spark.createDataFrame([], "u long, v long")
+    jobs = _group_jobs(spark, f"{op}_empty", lambda: out.extend(run(empty).collect()))
+    assert sorted(map(tuple, out)) == _EMPTY_RESULT.get(op, [])
+    assert jobs <= 15
+    assert _cache_empty(spark)
+
+    edges = spark.createDataFrame(GRAPH_RAW, "u long, v long")
+    with _all_partitions():
+        want = sorted(run(edges).collect())
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        got = []
+        jobs = _group_jobs(
+            spark, f"{op}_one_part", lambda: got.extend(run(edges.coalesce(1)).collect())
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert sorted(got) == want
+    assert jobs <= 40
+    assert _cache_empty(spark)
 
 
 def test_threshold_clusters_matches_union_find(spark):

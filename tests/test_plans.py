@@ -324,8 +324,8 @@ def test_parquet_aggregate_pushdown_serves_from_footers(spark):
 
 
 def test_cached_plan_keeps_output_partitioning(spark):
-    """connected_components caches its symmetrized edges as
-    repartition("u") so each loop round shuffles only the labels. That
+    """operators/clustering.py:sym_edges caches the symmetrized edges as
+    repartition(n, "u") so each loop round shuffles only the labels. That
     relies on a Spark default, pinned here:
     spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false
     keeps AQE from re-planning (coalescing) the cached plan's output

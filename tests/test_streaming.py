@@ -834,3 +834,56 @@ def test_stream_starts_only_in_session():
         if "writeStream" in p.read_text() or "stream_start_conf(" in p.read_text()
     )
     assert hits == ["session.py"]
+
+
+def _renames(call):
+    """(src, dst) column renames among a call's direct arguments:
+    ``F.col("v").alias("u")`` and ``"v AS u"`` both give ("v", "u")."""
+    import ast
+    import re
+
+    out = set()
+    for a in call.args:
+        if isinstance(a, ast.Constant) and isinstance(a.value, str):
+            m = re.fullmatch(r"\s*(\w+)\s+AS\s+(\w+)\s*", a.value, re.IGNORECASE)
+            if m:
+                out.add((m.group(1), m.group(2)))
+        elif (
+            isinstance(a, ast.Call)
+            and isinstance(a.func, ast.Attribute)
+            and a.func.attr == "alias"
+            and isinstance(a.func.value, ast.Call)
+            and a.func.value.args
+        ):
+            src, dst = a.func.value.args[0], a.args[0] if a.args else None
+            if isinstance(src, ast.Constant) and isinstance(dst, ast.Constant):
+                out.add((src.value, dst.value))
+    return out
+
+
+def test_edges_symmetrized_only_in_sym_edges():
+    """Every graph operator gets its symmetric edges from
+    operators/clustering.py::sym_edges: no other code under
+    streaming_cdc_spark/operators/ may build a flipped (v AS u, u AS v)
+    copy of an edge list."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "streaming_cdc_spark" / "operators"
+    hits = []
+    for p in sorted(root.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        allowed = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "sym_edges" and p.name == "clustering.py"
+            for n in ast.walk(f)
+        }
+        hits += [
+            f"{p.name}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and id(n) not in allowed
+            and {("v", "u"), ("u", "v")} <= _renames(n)
+        ]
+    assert hits == []
