@@ -161,47 +161,49 @@ def write_mtime_pinned_splits(parts, base_dir: str, names=None) -> None:
                 os.utime(os.path.join(root, f_), (1_000_000 + i, 1_000_000 + i))
 
 
-def stream_shuffle_partitions() -> int:
-    """Shuffle-partition count captured by a STREAMING query at start —
-    which in Structured Streaming also fixes the number of state-store
-    instances per stateful operator for the query's whole lifetime
-    (it is baked into the checkpoint). The session default sizes
-    shuffle partitions to the core count for BATCH compute, but a
-    stateful micro-batch pays a fixed per-instance open+commit cost
-    every trigger: at 16 partitions a stream-stream join touches 64
-    store instances per batch, and a per-trigger decomposition
-    (OPTIMIZATION_r09.md, sixth session) measured 12-67 s of cumulative
-    state-commit time per batch under co-tenant load vs 1.2-3.6 s at 4
-    partitions — wall time 12.6-30.1 s vs a stable 8.5-9.0 s for the
-    same drain, identical output. The engine's availableNow drains hold
-    KB-MB of state, so the store count should follow STATE SIZE, not
-    the compute core count (guide §2: derive partitioning from the
-    data, don't inherit a constant tuned for something else).
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides for real deployments,
-    where the right value scales with state volume and trigger
-    throughput (e.g. cores or higher for TB-scale state; it must be
-    chosen before the first checkpoint commit)."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
-
-
 class stream_start_conf:
-    """Context manager that pins ``spark.sql.shuffle.partitions`` to
-    stream_shuffle_partitions() while a streaming query STARTS, then
-    restores the session value. StreamExecution clones the session
-    state synchronously inside start(), so the reduced value is
-    captured by the stream (and by every micro-batch plan and
-    foreachBatch handler job, which run on the clone) while batch
-    queries planned after the ``with`` block keep the session default.
+    """Context manager that pins ``spark.sql.shuffle.partitions`` while
+    a streaming query STARTS, then restores the session value.
+    StreamExecution clones the session state synchronously inside
+    start(), so the pinned value is captured by the stream (and by
+    every micro-batch plan and foreachBatch handler job, which run on
+    the clone; AQE stays on there, so handler shuffles still coalesce
+    by data) while batch queries planned after the ``with`` block keep
+    the session default.
+
+    In a stateful stream the same value fixes the number of state-store
+    instances per operator for the checkpoint's whole life (a restart
+    keeps the count its checkpoint recorded). Each store pays a fixed
+    file create + commit per trigger whatever its size (SCALING.md,
+    Streaming), so the count comes from the stream, in this order:
+
+    1. ``SPARK_GRAFT_STREAM_SHUFFLE`` when set: the deployment override,
+       for state volumes that need more stores than the operators ask;
+    2. the largest ``state_shards`` declared in the metadata of a column
+       of ``df`` (the sharded sketches in ``streaming/windows.py`` tag
+       their ``shard`` column), so their shard groups run in parallel
+       tasks; capped at ``defaultParallelism``, since stores beyond the
+       task slots add per-store cost and no parallelism. Only columns
+       of the started ``df`` are read: a projection that drops the
+       declaring column drops the declaration;
+    3. otherwise 1.
     """
 
-    def __init__(self, spark: SparkSession):
+    def __init__(self, spark: SparkSession, df=None):
         self.spark = spark
+        self.df = df
+
+    def partitions(self) -> int:
+        env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
+        if env:
+            return int(env)
+        fields = self.df.schema.fields if self.df is not None else []
+        shards = [f.metadata["state_shards"] for f in fields if "state_shards" in f.metadata]
+        return min(max(shards), self.spark.sparkContext.defaultParallelism) if shards else 1
 
     def __enter__(self):
         self._old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_shuffle_partitions())
-        )
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.partitions()))
         return self
 
     def __exit__(self, *exc):
@@ -216,7 +218,7 @@ def drain_stream(df, sink, output_mode: str | None = None):
 
     Owns:
     - a fresh checkpoint dir per call (``<prefix>_ckpt_*``);
-    - the start under ``stream_start_conf``, with availableNow;
+    - the start under ``stream_start_conf(spark, df)``, with availableNow;
     - an UNTIMED awaitTermination (a timed one can return False on a
       slow host -> partial table + rmtree of a LIVE checkpoint); it
       raises StreamingQueryException when the query fails, so a
@@ -244,7 +246,7 @@ def drain_stream(df, sink, output_mode: str | None = None):
         w = w.format("memory") if memory else w.foreachBatch(sink)
         if output_mode is not None:
             w = w.outputMode(output_mode)
-        with stream_start_conf(spark):
+        with stream_start_conf(spark, df):
             q = w.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
         q.awaitTermination()
         return spark.table(name).localCheckpoint() if memory else None

@@ -284,7 +284,9 @@ def streaming_bloom_dedup(
     stateful operator — the Python processor only tests/sets bits.
     Per shard, rows process in ``id_col`` order, so output status is
     deterministic given the micro-batch sequence. Output (append):
-    (id_col, shard, status) with status 'fresh' | 'dup'.
+    (id_col, shard, status) with status 'fresh' | 'dup'. The ``shard``
+    column's metadata declares ``state_shards`` = n_shards, which
+    ``session.stream_start_conf`` sizes the stream's state stores by.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -315,7 +317,7 @@ def streaming_bloom_dedup(
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
-            StructField("shard", LongType()),
+            StructField("shard", LongType(), metadata={"state_shards": n_shards}),
             StructField("status", StringType()),
         ]
     )
@@ -389,7 +391,8 @@ def streaming_misra_gries(
     Emits (append mode), after every micro-batch, each updated
     shard's CURRENT counters tagged with a per-shard batch index:
     (shard, batch_idx, key, est). The final summary is the max
-    batch_idx row-set per shard."""
+    batch_idx row-set per shard. ``shard`` declares ``state_shards``
+    as in streaming_bloom_dedup."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
@@ -414,7 +417,7 @@ def streaming_misra_gries(
     ).filter(F.col("_k").isNotNull())
     out_schema = StructType(
         [
-            StructField("shard", LongType()),
+            StructField("shard", LongType(), metadata={"state_shards": n_shards}),
             StructField("batch_idx", LongType()),
             StructField("key", StringType()),
             StructField("est", LongType()),

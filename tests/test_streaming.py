@@ -673,84 +673,143 @@ def test_linkreplay_fixture_geometry_exercises_both_branches(spark):
     assert n_breaks >= 10, n_breaks
 
 
-def test_stream_start_conf_sizes_state_stores_and_restores(
-    spark, tmp_path, monkeypatch
-):
-    """stream_start_conf pins shuffle partitions (= the state-store
-    instance count a stateful stream bakes into its checkpoint) to
-    stream_shuffle_partitions() for the stream's lifetime, restores
-    the session value, and — partition invariance — leaves the drained
-    RESULT byte-identical to a session-default drain."""
-    from pyspark.sql import functions as F
-
-    from streaming_cdc_spark.session import (
-        drain_stream,
-        stream_start_conf,
-        stream_shuffle_partitions,
-        write_mtime_pinned_splits,
-    )
-
-    def df(rows):
-        return spark.createDataFrame(rows, "k string, v long")
-
-    write_mtime_pinned_splits(
-        [df([("a", 1), ("b", 2)]), df([("a", 3), ("c", 4)])],
-        str(tmp_path / "src"),
-    )
-
-    def agg_stream():
-        s = (
-            spark.readStream.schema("k string, v long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(tmp_path / "src" / "split_*") + "/*.parquet")
-        )
-        return s.groupBy("k").agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
+def _drain_stores(spark, df, ckpt, mode="append"):
+    """availableNow-drain ``df`` into a memory table under
+    stream_start_conf(spark, df), hand-started to read its progress.
+    Returns (sorted rows, set of numShufflePartitions over every
+    stateful operator of every trigger)."""
+    from streaming_cdc_spark.session import stream_start_conf
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-
-    # 1) the shared drain path captures the reduced count and restores:
-    #    hand-start inside the manager to read stateOperators metrics.
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "2")
-    assert stream_shuffle_partitions() == 2
-    ckpt = str(tmp_path / "ckpt1")
-    with stream_start_conf(spark):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+    with stream_start_conf(spark, df) as conf:
+        n = conf.partitions()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
         q = (
-            agg_stream()
-            .writeStream.format("memory")
+            df.writeStream.format("memory")
             .queryName("ssc_probe")
-            .outputMode("complete")
+            .outputMode(mode)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-    # restored immediately after start(), while the stream still runs
+    # restored right after start(), while the stream still runs
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     q.awaitTermination()
-    st = (q.recentProgress[-1].get("stateOperators") or [{}])[0]
-    assert st.get("numShufflePartitions") == 2, st
-    got_small = sorted(map(tuple, spark.table("ssc_probe").collect()))
+    stores = {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p.get("stateOperators") or []
+    }
+    rows = sorted(map(tuple, spark.table("ssc_probe").collect()))
     spark.catalog.dropTempView("ssc_probe")
+    return rows, stores
 
-    # 2) restore on exception inside the with-block
-    try:
-        with stream_start_conf(spark):
+
+def test_stream_start_conf_sizes_state_stores_and_restores(
+    spark, tmp_path, monkeypatch
+):
+    """stream_start_conf sizes the state-store count (= the shuffle
+    partitions a stateful stream bakes into its checkpoint) from the
+    stream: 1 for an undeclared stateful operator, min(state_shards,
+    defaultParallelism) for the sharded sketches, the
+    SPARK_GRAFT_STREAM_SHUFFLE override over both. It restores the
+    session value on exit and on exception, and the drained rows do
+    not depend on the count."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from streaming_cdc_spark.session import stream_start_conf, write_mtime_pinned_splits
+    from streaming_cdc_spark.streaming.windows import (
+        streaming_bloom_dedup,
+        streaming_misra_gries,
+    )
+
+    schema = "event_id long, key string, text string, v long"
+    rows = [(i, f"k{i % 5}", f"t{i % 7}", i) for i in range(40)]
+    write_mtime_pinned_splits(
+        [spark.createDataFrame(rows[:20], schema), spark.createDataFrame(rows[20:], schema)],
+        str(tmp_path / "src"),
+    )
+
+    def stream():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(tmp_path / "src" / "split_*") + "/*.parquet")
+        )
+
+    def agg():
+        return stream().groupBy("key").agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
+
+    dp = spark.sparkContext.defaultParallelism
+
+    def drain(df, mode="append"):
+        return _drain_stores(spark, df, tempfile.mkdtemp(dir=tmp_path), mode)
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+    agg_1, stores = drain(agg(), "complete")
+    assert stores == {1}
+    assert agg_1 == [(f"k{j}", 8, sum(range(j, 40, 5))) for j in range(5)]
+    bloom = {}
+    for n_shards in (3, 8):
+        bloom[n_shards], stores = drain(streaming_bloom_dedup(stream(), n_shards=n_shards))
+        assert stores == {min(n_shards, dp)}
+    mg_3, stores = drain(streaming_misra_gries(stream(), k=4, n_shards=3))
+    assert stores == {min(3, dp)}
+
+    # the deployment override wins over the default and the declaration
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "2")
+    agg_2, stores = drain(agg(), "complete")
+    assert stores == {2} and agg_2 == agg_1
+    bloom_2, stores = drain(streaming_bloom_dedup(stream(), n_shards=8))
+    assert stores == {2} and bloom_2 == bloom[8]
+    mg_2, stores = drain(streaming_misra_gries(stream(), k=4, n_shards=3))
+    assert stores == {2} and mg_2 == mg_3
+    assert [r[2] for r in bloom[8]].count("fresh") == 7
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(RuntimeError, match="boom"):
+        with stream_start_conf(spark, agg()):
             raise RuntimeError("boom")
-    except RuntimeError:
-        pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
-    # 3) result equality vs a session-default drain (env cleared ->
-    #    default 4; different store count, same rows)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE")
-    assert stream_shuffle_partitions() == 4
-    got_default = sorted(
-        map(
-            tuple,
-            drain_stream(agg_stream(), "ssc_eq", output_mode="complete").collect(),
+
+def test_restart_keeps_checkpoint_state_store_count(spark, tmp_path, monkeypatch):
+    """Spark takes a restarted stateful stream's state-store count from
+    its checkpoint, not from the conf at start: a checkpoint written at
+    4 stores keeps 4 when stream_start_conf now picks 1. Checkpoints
+    written under an older count therefore stay readable."""
+    from pyspark.sql import functions as F
+
+    from streaming_cdc_spark.session import stream_start_conf
+
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+
+    def put(i, rows):
+        (src / f"f{i}.jsonl").write_text(
+            "\n".join(json.dumps({"k": k, "v": v}) for k, v in rows)
         )
-    )
-    assert got_small == got_default == [("a", 2, 4), ("b", 1, 2), ("c", 1, 4)]
+        time.sleep(0.05)
+
+    def agg():
+        s = spark.readStream.schema("k string, v long").option("maxFilesPerTrigger", 1).json(str(src))
+        return s.groupBy("k").agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
+
+    put(0, [("a", 1), ("b", 2)])
+    put(1, [("a", 3)])
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "4")
+    first, stores = _drain_stores(spark, agg(), ckpt, "complete")
+    assert stores == {4} and first == [("a", 2, 4), ("b", 1, 2)]
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE")
+    put(2, [("b", 5), ("c", 7)])
+    assert stream_start_conf(spark, agg()).partitions() == 1
+    resumed, stores = _drain_stores(spark, agg(), ckpt, "complete")
+    assert stores == {4}
+    assert resumed == [("a", 2, 4), ("b", 2, 7), ("c", 1, 7)]
 
 
 def _temp_views(spark):
@@ -824,16 +883,22 @@ def test_drain_stream_handler_error_propagates_and_cleans_up(spark, tmp_path):
 
 def test_stream_starts_only_in_session():
     """Every engine stream start goes through session.drain_stream: no
-    other module under streaming_cdc_spark/ may hand-roll one."""
+    other module under streaming_cdc_spark/ may hand-roll one. The
+    stream's state-store count has one decision point too: only
+    session.py reads SPARK_GRAFT_STREAM_SHUFFLE or sets
+    spark.sql.shuffle.partitions."""
     import pathlib
+    import re
 
     root = pathlib.Path(__file__).resolve().parents[1] / "streaming_cdc_spark"
-    hits = sorted(
-        str(p.relative_to(root))
-        for p in root.rglob("*.py")
-        if "writeStream" in p.read_text() or "stream_start_conf(" in p.read_text()
-    )
-    assert hits == ["session.py"]
+    sets_partitions = re.compile(r"\.set\(\s*[\"']spark\.sql\.shuffle\.partitions")
+
+    def hits(pred):
+        return sorted(str(p.relative_to(root)) for p in root.rglob("*.py") if pred(p.read_text()))
+
+    assert hits(lambda t: "writeStream" in t or "stream_start_conf(" in t) == ["session.py"]
+    assert hits(lambda t: "SPARK_GRAFT_STREAM_SHUFFLE" in t) == ["session.py"]
+    assert hits(sets_partitions.search) == ["session.py"]
 
 
 def _renames(call):
