@@ -7,9 +7,14 @@ Arrow enabled) are the right defaults — only master/memory change.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import re
 import shutil
+import subprocess
 import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -98,6 +103,8 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    extra_conf = dict(extra_conf or {})
+    driver_memory = extra_conf.get("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -115,8 +122,9 @@ def get_spark(
         # 3-5x per query from GC churn — measured 77.6s -> 51.5s
         # total, with the 8-10s outliers (tfidf_blend, pricing) all
         # collapsing back to their isolated-run times at 48g.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory)
     )
+    cds = None
     # Only force a master when none is configured (driver may set its own).
     if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
         # Python workers start through _pyworker/pyspark_scs_worker.py,
@@ -130,16 +138,240 @@ def get_spark(
             .config("spark.python.worker.module", "pyspark_scs_worker")
             .config("spark.executorEnv.PYTHONPATH", pyworker)
         )
+        cds = _driver_cds(driver_memory)
+        if cds is not None:
+            # Spark puts defaultJavaOptions before extraJavaOptions, so a
+            # caller's own JVM flags still apply; a caller's defaults follow ours.
+            opts = " ".join(filter(None, [cds.java_opts, extra_conf.pop("spark.driver.defaultJavaOptions", "")]))
+            builder = builder.config("spark.driver.defaultJavaOptions", opts)
     # extra_conf lands last so callers can override any default above;
     # it only takes effect when this call actually CREATES the session
     # (getOrCreate reuses an existing JVM's confs) — tools that need a
     # non-default conf (e.g. the shuffle-measure harness re-enabling
     # the UI REST API) must run in a fresh process.
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _conf_dir_for_launch(cds and cds.conf_dir):
+        spark = builder.getOrCreate()
+    if cds is not None and cds.dump_to:
+        import atexit
+
+        from pyspark import SparkContext
+
+        atexit.register(_finish_cds_dump, SparkContext._gateway.proc, cds.dump_to, os.getpid())
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Driver JVM class-data sharing. Loading Spark's classes dominates a
+# fresh session's start: get_spark and its first jobs. A dynamic AppCDS
+# archive, dumped once per host and key, lets every later driver JVM map
+# that class metadata instead of parsing it from the jars. It caches
+# class metadata the way __pycache__ caches bytecode: no data, no
+# query results. Under -Xshare:auto (the JVM default) an archive of
+# another key only means the JVM runs without it; a SHORT archive is
+# different: JDK 17 maps it and dies of SIGBUS, so each archive's name
+# records the size its dump wrote, and a file of any other size is
+# never passed to a JVM.
+#
+# The archive is dumped when the building session's JVM exits
+# (-XX:ArchiveClassesAtExit), not by `jcmd VM.cds dynamic_dump`: JDK 17's
+# jcmd dump leaves out every loaded class that is not yet linked (3.6k of
+# ~12k after a session's first jobs, most of which every later session
+# loads again), while the exit dump links them first.
+
+_CDS_KEEP = 3  # archives kept per host (100-300 MB each), least recently used dropped
+_ARCHIVE = re.compile(r"driver-(\d+)\.jsa")
+_TEMP_DUMP = re.compile(r"driver\.(\d+)\.tmp")
+# The JVM logs CDS warnings to its stdout, which is this process's
+# stdout: the dump logs thousands of skipped classes (dropped), a
+# refused archive one line (moved to stderr).
+_QUIET = "-Xlog:cds=off,cds+dynamic=off"
+
+
+class _CdsLaunch(NamedTuple):
+    """How ``get_spark`` launches the driver JVM: its java options, the
+    empty conf dir, and the temp file its exit dump writes when the
+    key's archive is missing (else None)."""
+
+    java_opts: str
+    conf_dir: str
+    dump_to: str | None
+
+
+@contextlib.contextmanager
+def _conf_dir_for_launch(conf_dir: str | None):
+    """Set ``SPARK_CONF_DIR`` while the launcher starts the JVM (it reads
+    the environment); the JVM keeps it, this process gets its own back."""
+    if conf_dir is None:
+        yield
+        return
+    old = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = old
+
+
+def _cds_root() -> str:
+    """``${XDG_CACHE_HOME:-~/.cache}/streaming_cdc_spark/cds``: outside
+    the package (``ensure_package_on_executors`` would zip ~100 MB into
+    every snapshot) and outside every temp dir (perfbench deletes its
+    TMPDIR on each run)."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "streaming_cdc_spark", "cds")
+
+
+def _java_home() -> str | None:
+    """The JDK spark-class runs: ``$JAVA_HOME``, else ``java`` on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    if not home:
+        java = shutil.which("java")
+        home = java and os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    return os.path.realpath(home) if home else None
+
+
+def _size_bytes(size: str) -> int | None:
+    """A Spark memory size (``48g``, ``1024m``, ``512mb``; no unit = MiB)."""
+    m = re.fullmatch(r"(\d+)([bkmgtp]?)b?", size.strip().lower())
+    return int(m[1]) << (10 * "bkmgtp".index(m[2] or "m")) if m else None
+
+
+def _cds_key(java_home: str, spark_home: str, heap_bytes: int) -> str:
+    """Everything that decides whether a driver JVM accepts an archive:
+
+    - the JDK: the real ``java.home`` and its ``release`` file;
+    - name, size and mtime_ns of every jar in ``$SPARK_HOME/jars``;
+    - whether the heap is below 32g, which turns compressed oops on. An
+      archive dumped with them off is refused under them on, and the
+      reverse, without any error (48g engine default vs perfbench's 1g).
+
+    Never the java options string: callers put per-run ``-D`` flags
+    there (perfbench its ``java.io.tmpdir``), so it would never hit."""
+    h = hashlib.sha256(java_home.encode())
+    with open(os.path.join(java_home, "release"), "rb") as fh:
+        h.update(fh.read())
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(os.listdir(jars)):
+        st = os.stat(os.path.join(jars, name))
+        h.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return ("coops-" if heap_bytes < 32 << 30 else "nocoops-") + h.hexdigest()[:16]
+
+
+def _driver_cds(driver_memory: str) -> _CdsLaunch | None:
+    """The archive plan for a session about to start, or None (launch
+    as before) when: this process already has a JVM; the conf dir holds
+    a real config file (CDS refuses a non-empty directory on the
+    classpath and Spark puts the conf dir first, so it would have to be
+    swapped, dropping the user's config); the key's last build failed;
+    its archive is damaged (removed here; the next start rebuilds it);
+    or the JDK/Spark layout is unreadable."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if SparkContext._gateway is not None or os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return None
+    heap = _size_bytes(driver_memory)
+    java_home = _java_home()
+    if heap is None or java_home is None:
+        return None
+    try:
+        spark_home = _find_spark_home()
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        if any(not n.endswith(".template") for n in (os.listdir(conf_dir) if os.path.isdir(conf_dir) else [])):
+            return None
+        key_dir = os.path.join(_cds_root(), _cds_key(java_home, spark_home, heap))
+        empty_conf = os.path.join(_cds_root(), "conf")
+        os.makedirs(empty_conf, exist_ok=True)
+        os.makedirs(key_dir, exist_ok=True)
+        if os.path.exists(os.path.join(key_dir, "failed")):
+            return None
+        for name in os.listdir(key_dir):
+            m = _ARCHIVE.fullmatch(name)
+            if m:
+                archive = os.path.join(key_dir, name)
+                if os.path.getsize(archive) != int(m[1]):
+                    os.remove(archive)
+                    return None
+                os.utime(archive)  # recency for the least-recently-used sweep
+                opts = f"-XX:SharedArchiveFile={archive} {_QUIET} -Xlog:cds=warning,cds+dynamic=warning:stderr"
+                return _CdsLaunch(opts, empty_conf, None)
+    except OSError:
+        return None
+    tmp = os.path.join(key_dir, f"driver.{os.getpid()}.tmp")
+    return _CdsLaunch(f"-XX:ArchiveClassesAtExit={tmp} {_QUIET}", empty_conf, tmp)
+
+
+def _finish_cds_dump(proc: subprocess.Popen, tmp: str, owner_pid: int) -> None:
+    """atexit hook of the session that builds its key's archive: close
+    the gateway JVM's stdin (it exits on EOF, and dumps while exiting),
+    wait for it, then ``os.replace`` the whole dump into place, so
+    racing builders each leave a whole archive. A JVM that exits with
+    an error leaves a ``failed`` marker, so later sessions launch
+    without CDS instead of paying for the attempt on every exit; a
+    killed JVM (a caller's timeout) only drops its partial dump."""
+    if os.getpid() != owner_pid:  # a forked child inherited the hook
+        return
+    try:
+        if proc.poll() is None:
+            proc.stdin.close()
+            proc.wait(timeout=600)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    key_dir = os.path.dirname(tmp)
+    size = os.path.getsize(tmp) if os.path.isfile(tmp) else 0
+    with contextlib.suppress(OSError):
+        if proc.returncode == 0 and size:
+            os.replace(tmp, os.path.join(key_dir, f"driver-{size}.jsa"))
+        elif proc.returncode >= 0:
+            with open(os.path.join(key_dir, "failed"), "w", encoding="utf-8") as fh:
+                fh.write(f"driver JVM exited {proc.returncode}, dump of {size} bytes\n")
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        _sweep_cds(_cds_root())
+
+
+def _sweep_cds(root: str) -> None:
+    """Bound the archive cache: keep the newest archive of each of the
+    ``_CDS_KEEP`` most recently used keys (a hit touches its archive's
+    mtime), and drop temp dumps whose writer process is gone. Failure
+    markers stay: they stop a broken key from rebuilding on every
+    start."""
+    archives = []
+    for key in os.listdir(root) if os.path.isdir(root) else []:
+        key_dir = os.path.join(root, key)
+        for name in os.listdir(key_dir) if os.path.isdir(key_dir) else []:
+            path = os.path.join(key_dir, name)
+            m = _TEMP_DUMP.fullmatch(name)
+            if m and not _pid_alive(int(m[1])):
+                with contextlib.suppress(OSError):  # a racing sweep got there first
+                    os.remove(path)
+            elif _ARCHIVE.fullmatch(name):
+                archives.append((os.stat(path).st_mtime_ns, path))
+    kept: set[str] = set()
+    for _, path in sorted(archives, reverse=True):
+        key_dir = os.path.dirname(path)
+        if key_dir in kept or len(kept) >= _CDS_KEEP:
+            with contextlib.suppress(OSError):
+                os.remove(path)
+                os.rmdir(key_dir)  # kept while a dump or a failure marker is in it
+        else:
+            kept.add(key_dir)
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
 
 
 def write_mtime_pinned_splits(parts, base_dir: str, names=None) -> None:

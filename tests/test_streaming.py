@@ -901,6 +901,19 @@ def test_stream_starts_only_in_session():
     assert hits(sets_partitions.search) == ["session.py"]
 
 
+def test_driver_jvm_launch_only_in_session():
+    """The driver JVM's launch options and conf dir (the class-data
+    archive, the empty SPARK_CONF_DIR) have one decision point too:
+    no module under streaming_cdc_spark/ but session.py names them."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "streaming_cdc_spark"
+    for name in ("spark.driver.defaultJavaOptions", "SPARK_CONF_DIR"):
+        assert sorted(str(p.relative_to(root)) for p in root.rglob("*.py") if name in p.read_text()) == [
+            "session.py"
+        ], name
+
+
 def _renames(call):
     """(src, dst) column renames among a call's direct arguments:
     ``F.col("v").alias("u")`` and ``"v AS u"`` both give ("v", "u")."""
