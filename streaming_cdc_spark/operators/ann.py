@@ -692,55 +692,6 @@ def pq_adc_topk(
     )
 
 
-def save_ann_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]] | None = None,
-    codebooks: list[list[tuple[int, list[float]]]] | None = None,
-) -> None:
-    """Persist an ANN index (IVF centroids and/or PQ codebooks) as
-    self-describing parquet — the S12 model-persistence pattern
-    applied to the ANN side, so a daily job fits ONCE and every
-    later query/encode run loads the artifact instead of re-seeding.
-    Layout: rows (kind, subspace, code, vector); IVF centroids use
-    subspace = -1. Parquet doubles round-trip exactly, so a loaded
-    index reproduces bit-identical assignments/codes (test-pinned)."""
-    rows = []
-    for cid, vec in centroids or []:
-        rows.append(("ivf", -1, int(cid), [float(x) for x in vec]))
-    for j, book in enumerate(codebooks or []):
-        for code, vec in book:
-            rows.append(("pq", j, int(code), [float(x) for x in vec]))
-    df = spark.createDataFrame(
-        rows, "kind string, subspace int, code long, vector array<double>"
-    )
-    df.repartition(1).write.mode("overwrite").parquet(path)
-
-
-def load_ann_index(
-    spark, path: str
-) -> tuple[list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]]:
-    """Load a saved ANN index -> (centroids, codebooks). Inverse of
-    save_ann_index; ordering is restored by (subspace, code)."""
-    rows = spark.read.parquet(path).collect()
-    centroids = sorted(
-        (int(r["code"]), [float(x) for x in r["vector"]])
-        for r in rows
-        if r["kind"] == "ivf"
-    )
-    pq_rows = sorted(
-        (int(r["subspace"]), int(r["code"]), [float(x) for x in r["vector"]])
-        for r in rows
-        if r["kind"] == "pq"
-    )
-    books: list[list[tuple[int, list[float]]]] = []
-    for j, code, vec in pq_rows:
-        while len(books) <= j:
-            books.append([])
-        books[j].append((code, vec))
-    return centroids, books
-
-
 def centroid_outliers(
     emb: DataFrame,
     group_col: str = "label",

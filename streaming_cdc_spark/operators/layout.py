@@ -16,7 +16,7 @@ rank-normalization with integer division + 32 shift-and-or terms), so
 the z-value computation itself is oracle-checkable in DuckDB; the
 physical benefit (files actually skipped) is pinned by a test that
 reads the written parquet footers with pyarrow and counts which files
-a box predicate can prune under natural vs Z-order layout.
+a box predicate can prune under natural vs ZOrderTable layout.
 """
 
 from __future__ import annotations
@@ -114,78 +114,6 @@ def zorder_keys(
         .withColumnRenamed("_zy", "zy")
     )
     return out
-
-
-def zorder_write(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    path: str,
-    n_files: int = 16,
-    bits: int = ZBITS,
-) -> None:
-    """OPTIMIZE ZORDER BY (x, y): cluster rows into `n_files` files by
-    z-value and sort within each file, so every file's (x, y) footer
-    stats form a tight tile. repartitionByRange on the z key gives
-    balanced files (AQE-compatible range exchange); the within-file
-    sort tightens ROW-GROUP stats too, which matters once files exceed
-    one row group at real scale."""
-    keyed = zorder_keys(df, x_col, y_col, bits, n_buckets=max(n_files, 2))
-    (
-        keyed.repartitionByRange(n_files, "zval")
-        .sortWithinPartitions("zval")
-        .drop("zx", "zy", "zval", "zbucket")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def file_minmax_stats(path: str, cols: list[str]) -> list[dict]:
-    """Per-FILE min/max footer stats for `cols`, read with pyarrow —
-    what a reader's file-pruning step sees. Returns one dict per file:
-    {col: (min, max)}."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, name)).metadata
-        schema_names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        stats: dict = {}
-        for c in cols:
-            ci = schema_names[c]
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                s = md.row_group(rg).column(ci).statistics
-                if s is None or not s.has_min_max:
-                    lo = hi = None
-                    break
-                lo = s.min if lo is None else min(lo, s.min)
-                hi = s.max if hi is None else max(hi, s.max)
-            stats[c] = (lo, hi)
-        out.append(stats)
-    return out
-
-
-def files_overlapping(stats: list[dict], box: dict) -> int:
-    """How many files a reader must scan for a box predicate
-    {col: (lo, hi)} — files whose [min, max] intersects every
-    dimension's range (missing stats count as overlapping)."""
-    n = 0
-    for st in stats:
-        hit = True
-        for c, (lo, hi) in box.items():
-            fmin, fmax = st[c]
-            if fmin is None:
-                continue  # no stats -> cannot prune
-            if fmax < lo or fmin > hi:
-                hit = False
-                break
-        n += hit
-    return n
 
 
 # --- Manifest-indirected z-ordered table (init / append / compact) --------

@@ -1,14 +1,14 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Media are opaque ``binary`` columns with typed metadata structs; the
-decode / feature-extract / resize / frame-sample steps run as
-Arrow-batched ``mapInPandas`` so one Python invocation processes a
-whole batch of blobs. The actual codecs (PIL/ffmpeg/...) are NOT in
-this container, so the decode kernel is STUBBED: if the real library
-is importable it raises NotImplementedError where its call would go;
-otherwise a clearly-marked deterministic fake derives features from
-the content hash. The Spark-side contract — schemas, batch shapes,
-partitioning, UDF signatures — is real and tested.
+Media are opaque ``binary`` columns (``MEDIA_SCHEMA``); the decode +
+feature-extract step runs as Arrow-batched ``mapInPandas`` so one
+Python invocation processes a whole batch of blobs. image/* blobs
+decode with PIL when it is importable; every other blob (and every
+blob when PIL is absent) takes a clearly-marked deterministic fake
+that derives features from the content hash. The Spark-side contract
+— schemas, batch shapes, partitioning, UDF signatures — is real and
+tested. The registered ``media_stats`` query aggregates opaque bytes
+without decoding; no registered query decodes.
 """
 
 from __future__ import annotations
@@ -18,23 +18,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = "media binary, mime string, media_id long"
 FEATURE_SCHEMA = (
     "media_id long, n_bytes int, content_sha int, width int, height int, n_frames int"
 )
-
-
-def attach_fake_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Synthesize a binary media column (utf-8 bytes of text) with a
-    mime tag — stands in for real image/audio blobs in the synthetic
-    tables."""
-    return docs.select(
-        F.encode(F.col(text_col), "utf-8").alias("media"),
-        F.lit("application/x-fake").alias("mime"),
-        F.col(id_col).alias("media_id"),
-    )
 
 
 def _fake_decode(blob: bytes) -> tuple[int, int, int, int]:
@@ -113,24 +101,3 @@ def extract_media_features(media: DataFrame, use_real_codec: bool | None = None)
     from streaming_cdc_spark.session import fan_out
 
     return fan_out(media).mapInPandas(gen, FEATURE_SCHEMA)
-
-
-def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize stub: passes blobs through with updated metadata — the
-    partition-preserving shape a real resampler would have."""
-    return media.withColumn("target_w", F.lit(target_w)).withColumn(
-        "target_h", F.lit(target_h)
-    )
-
-
-def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sample stub: expands each blob to its sampled frame
-    indices using the fake frame count (explode = one row per frame,
-    the real output shape)."""
-    feats = extract_media_features(media)
-    return feats.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_index"),
-    )

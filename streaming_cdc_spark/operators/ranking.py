@@ -398,19 +398,3 @@ def grouped_order_statistics(
             F.col("_n").alias("n"),
         )
     )
-
-
-def grouped_order_statistic(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    id_col: str,
-    k_rank: tuple[int, int, int],
-    band_expr=None,
-    out_col: str = "stat_value",
-) -> DataFrame:
-    """Single-rank convenience over grouped_order_statistics: one row
-    per group, (group_cols..., out_col, n)."""
-    return grouped_order_statistics(
-        df, group_cols, value_col, id_col, [k_rank], band_expr, out_col
-    ).drop("stat_idx")

@@ -60,17 +60,6 @@ def transform_word_tfidf(model: PipelineModel, df: DataFrame, text_col: str) -> 
     )
 
 
-def save_model(model: PipelineModel, path: str) -> None:
-    """S12: persist a fitted vectorizer pipeline (the reference
-    pickles sklearn vectorizers, fit_vectorizer.py:26-31; MLlib
-    models save as self-describing parquet+json directories)."""
-    model.write().overwrite().save(path)
-
-
-def load_model(path: str) -> PipelineModel:
-    return PipelineModel.load(path)
-
-
 def to_dense_array(df: DataFrame, vec_col: str) -> DataFrame:
     """SparseVector -> array<double> so the dense matmul / LSH
     operators apply. Keep vocabSize bounded when using this bridge;

@@ -161,32 +161,6 @@ def ep1_bisect_to_gold(
     return {"threshold": thr, "target": target, "assignments": assign}
 
 
-def ep2_encode_and_cluster(
-    mentions: DataFrame,
-    threshold: float,
-    dim: int = 64,
-    context_budget: int = 16,
-    with_metrics: bool = True,
-) -> dict[str, object]:
-    """EP2 end-to-end (encode_mentions -> nn_thresh -> eval): encoder
-    UDF over raw mention records, cosine-threshold clustering on the
-    resulting embeddings, metrics vs gold entity_id. mentions needs
-    (mention_index, mention, left_context, right_context, entity_id).
-    """
-    from streaming_cdc_spark.operators.encoder import hash_encode_mentions
-
-    enc = hash_encode_mentions(mentions, dim=dim, context_budget=context_budget)
-    emb = enc.join(mentions.select("mention_index", "entity_id"), "mention_index")
-    return ep2_nn_threshold(
-        emb,
-        threshold,
-        id_col="mention_index",
-        vec_col="embedding",
-        label_col="entity_id",
-        with_metrics=with_metrics,
-    )
-
-
 def ep2_nn_threshold(
     embeddings: DataFrame,
     threshold: float,

@@ -3,8 +3,10 @@
 Each query is a declared operator pattern from the reference —
 scan/project/filter, joins (broadcast/semi/anti/band), groupBy
 aggregates, window functions (first-occurrence dense ids = R1-R3,
-running sums = A5 sweep), union/except, HAVING, top-k — expressed
-Spark-first so Catalyst gets pushdown/pruning/broadcast for free.
+running sums = A5 sweep), union/except, HAVING, top-k, vocab ranking
+(R4), seen/unseen routing (J3/A12), struct-max argmax (R7), lag windows
+and percent_rank — expressed Spark-first so Catalyst gets
+pushdown/pruning/broadcast for free.
 
 Determinism: float sums go through DECIMAL casts (exact, associative)
 and only the final value is cast to double + rounded, so the DuckDB
@@ -552,4 +554,148 @@ def unpivot_metric_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.round(F.min("v"), 2).alias("min_r"),
         F.round(F.max("v"), 2).alias("max_r"),
+    )
+
+
+# --- Vocab ranking (R4), seen/unseen routing (J3/A12), collect_set, deterministic
+# argmax via struct-max (R7), lag windows, percent_rank.
+
+
+@query(
+    "entity_vocab",
+    oracle="""
+    SELECT ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, user_id) AS index,
+           user_id AS entity_id, COUNT(*) AS count
+    FROM events GROUP BY user_id
+    """,
+)
+def entity_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """R4/S3: frequency-descending vocabulary with deterministic ties
+    (build_entity_vocab core; preprocess_medmentions.py:70-75)."""
+    from streaming_cdc_spark.operators.ranking import row_number_global
+
+    ev = load(spark, sf_dir, "events")
+    counts = ev.groupBy(F.col("user_id").alias("entity_id")).agg(F.count("*").alias("count"))
+    ranked = row_number_global(counts, [F.desc("count"), F.asc("entity_id")], "index")
+    return ranked.select("index", "entity_id", "count")
+
+
+@query(
+    "seen_unseen_split",
+    oracle="""
+    WITH train_users AS (
+        SELECT DISTINCT user_id FROM events WHERE ts < TIMESTAMP '2024-01-02 00:00:00'
+    ),
+    test AS (SELECT * FROM events WHERE ts >= TIMESTAMP '2024-01-02 00:00:00')
+    SELECT seen, COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users
+    FROM (
+        SELECT t.user_id,
+               EXISTS (SELECT 1 FROM train_users u WHERE u.user_id = t.user_id) AS seen
+        FROM test t
+    ) GROUP BY seen
+    """,
+)
+def seen_unseen_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J3/A12: route test events by membership of their entity in the
+    train split (scripts/split_unseen.py:5-23) — semi/anti join
+    composition expressed as one aggregation."""
+    ev = load(spark, sf_dir, "events")
+    cut = F.lit("2024-01-02 00:00:00").cast("timestamp")
+    train_users = ev.filter(F.col("ts") < cut).select("user_id").distinct()
+    test = ev.filter(F.col("ts") >= cut)
+    seen = test.join(train_users.withColumnRenamed("user_id", "tu"),
+                     F.col("user_id") == F.col("tu"), "left")
+    return (
+        seen.select("user_id", F.col("tu").isNotNull().alias("seen"))
+        .groupBy("seen")
+        .agg(F.count("*").alias("n_events"), F.countDistinct("user_id").alias("n_users"))
+    )
+
+
+@query(
+    "event_type_user_sets",
+    oracle="""
+    SELECT event_type,
+           array_to_string(list_sort(list(DISTINCT user_id % 25)), ',') AS user_buckets
+    FROM events GROUP BY event_type
+    """,
+)
+def event_type_user_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """collect_set surface (S5 per-cluster sets, eval_clusters.py:186-195)
+    serialized to a sorted CSV string for hash-stability."""
+    ev = load(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.array_join(F.array_sort(F.collect_set(F.col("user_id") % 25)), ",").alias(
+            "user_buckets"
+        )
+    )
+
+
+@query(
+    "top_type_per_user",
+    oracle="""
+    SELECT user_id, event_type AS top_type, value AS top_value FROM (
+        SELECT user_id, event_type, value,
+               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id DESC) AS rn
+        FROM events
+    ) WHERE rn = 1
+    """,
+)
+def top_type_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """R7 argmax via struct-max: max(struct(value, event_id, type))
+    picks the lexicographically largest (value, event_id) pair — a
+    single aggregation, no window shuffle, fully deterministic."""
+    ev = load(spark, sf_dir, "events")
+    best = ev.groupBy("user_id").agg(
+        F.max(F.struct("value", "event_id", "event_type")).alias("b")
+    )
+    return best.select(
+        "user_id",
+        F.col("b.event_type").alias("top_type"),
+        F.col("b.value").alias("top_value"),
+    )
+
+
+@query(
+    "event_gaps",
+    oracle="""
+    SELECT event_id, prev_event_id, gap_us FROM (
+        SELECT event_id,
+               LAG(event_id) OVER w AS prev_event_id,
+               epoch_us(ts) - LAG(epoch_us(ts)) OVER w AS gap_us
+        FROM events WHERE user_id < 10
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ) WHERE prev_event_id IS NOT NULL
+    """,
+)
+def event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lag window over the event stream: inter-arrival gaps in exact
+    microseconds (A5-adjacent sequencing surface)."""
+    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 10)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    out = ev.select(
+        "event_id",
+        F.lag("event_id").over(w).alias("prev_event_id"),
+        (F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)).alias("gap_us"),
+    )
+    return out.filter(F.col("prev_event_id").isNotNull())
+
+
+@query(
+    "acctbal_percentiles",
+    oracle="""
+    SELECT c_custkey, c_mktsegment,
+           ROUND(PERCENT_RANK() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal), 6) AS pct_rank
+    FROM customer WHERE c_custkey < 200
+    """,
+)
+def acctbal_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """percent_rank window (rank normalization — the reference's
+    score-normalization idiom generalized)."""
+    cust = load(spark, sf_dir, "customer").filter(F.col("c_custkey") < 200)
+    w = W.partitionBy("c_mktsegment").orderBy("c_acctbal")
+    return cust.select(
+        "c_custkey",
+        "c_mktsegment",
+        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
     )

@@ -1382,7 +1382,8 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = _cb_join(c, b)
     # project AWAY the buy side's event-time column so exactly one
     # event-time column (cts) feeds the downstream stateful
-    # aggregation — the multi_stream_join chaining rule
+    # aggregation — a stateful operator chained after a stream-stream
+    # join (SPARK-42376) needs one event-time column to window on
     g = (
         j.select(
             F.col("cts").alias("ts"),

@@ -1,260 +1,15 @@
-"""Event-time streaming extensions (SURVEY §7 step 7: the reference's
-streams are positional with no late data; watermarked event-time
-windows are the engine extension a real deployment needs).
+"""Custom-state streaming operators (SURVEY §7 step 7: the reference's
+streams are positional with no late data; bounded keyed state is the
+engine extension a real deployment needs): the sharded Bloom dedup,
+the sharded Misra-Gries sketch and the event-time sessionizer. The
+built-in watermark operators (windows, dedup, sessions, stream joins)
+are written inline in their registered queries.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def windowed_event_counts(
-    stream: DataFrame,
-    window_duration: str = "10 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Tumbling event-time windows with a late-data watermark:
-    (window_start, window_end, key, n_events, sum_value). Append-mode
-    compatible — windows finalize once the watermark passes."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration), F.col(key_col))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            key_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup within the watermark horizon:
-    dropDuplicates keyed state with TTL — the streaming form of
-    operators.dedup.exact_dedup_groups."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-def streaming_sessions(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Streaming gap-based sessionization via ``F.session_window`` —
-    the streaming twin of operators.temporal.sessionize: a session
-    closes when no event arrives for ``gap``, and its row finalizes
-    once the watermark passes the session end (append-mode safe).
-    State is per (key, open session), bounded by the watermark.
-
-    Output: (session_start, session_end, key, n_events, sum_value)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col(key_col))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            key_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def correlate_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    lookback: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Stream-stream interval join: pair each left event with the
-    right-stream events of the same key in the preceding ``lookback``
-    window. Both sides carry watermarks and the join condition bounds
-    event time on both, so Spark can expire join state — unbounded
-    state is the failure mode of naive stream-stream joins.
-
-    Output: (key, left ts/type/value as l_*, right ts/type/value as
-    r_*, lag_seconds)."""
-    l = (
-        left.withWatermark(ts_col, watermark)
-        .select(
-            F.col(key_col).alias("l_key"),
-            F.col(ts_col).alias("l_ts"),
-            F.col("event_type").alias("l_type"),
-            F.col("value").alias("l_value"),
-        )
-    )
-    r = (
-        right.withWatermark(ts_col, watermark)
-        .select(
-            F.col(key_col).alias("r_key"),
-            F.col(ts_col).alias("r_ts"),
-            F.col("event_type").alias("r_type"),
-            F.col("value").alias("r_value"),
-        )
-    )
-    cond = (
-        (F.col("l_key") == F.col("r_key"))
-        & (F.col("r_ts") <= F.col("l_ts"))
-        & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {lookback}"))
-    )
-    joined = l.join(r, cond, "inner")
-    return joined.select(
-        F.col("l_key").alias(key_col),
-        "l_ts",
-        "l_type",
-        "l_value",
-        "r_ts",
-        "r_type",
-        "r_value",
-        (F.col("l_ts").cast("long") - F.col("r_ts").cast("long")).alias("lag_seconds"),
-    )
-
-
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment join: the dim side is a bounded
-    DataFrame (entity vocab, source metadata), broadcast to every
-    micro-batch — stateless, so it composes freely before or after
-    stateful operators."""
-    return stream.join(F.broadcast(dim), on, how)
-
-
-def multi_stream_join(
-    anchor: DataFrame,
-    others: list[tuple[str, DataFrame]],
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    lookback: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Multi-table streaming join: chain an interval join per extra
-    stream, pairing each anchor event with same-key events from EVERY
-    other stream within the preceding ``lookback``.
-
-    Each side carries its own watermark and every join predicate
-    bounds both event times, so the state for each of the N-1 joins
-    expires independently — the per-join state is what Spark tracks,
-    and chaining stateful joins is supported since multiple-stateful-
-    operator support landed in Spark 3.5 (SPARK-42376).
-
-    Output: (key, ts, event_type, value, then per stream
-    <name>_ts/<name>_type/<name>_value, <name>_lag_seconds).
-    """
-    out = anchor.withWatermark(ts_col, watermark).select(
-        F.col(key_col).alias("_key"),
-        F.col(ts_col).alias("_ts"),
-        F.col("event_type").alias("event_type"),
-        F.col("value").alias("value"),
-    )
-    for name, s in others:
-        side = s.withWatermark(ts_col, watermark).select(
-            F.col(key_col).alias(f"{name}_key"),
-            F.col(ts_col).alias(f"{name}_ts"),
-            F.col("event_type").alias(f"{name}_type"),
-            F.col("value").alias(f"{name}_value"),
-        )
-        cond = (
-            (F.col("_key") == F.col(f"{name}_key"))
-            & (F.col(f"{name}_ts") <= F.col("_ts"))
-            & (F.col(f"{name}_ts") >= F.col("_ts") - F.expr(f"INTERVAL {lookback}"))
-        )
-        out = (
-            out.join(side, cond, "inner")
-            .drop(f"{name}_key")
-            # strip the event-time metadata off the joined side's ts
-            # (cast round-trip): the NEXT chained stateful join needs
-            # exactly one event-time column — the anchor's
-            .withColumn(
-                f"{name}_ts", F.col(f"{name}_ts").cast("long").cast("timestamp")
-            )
-            .withColumn(
-                f"{name}_lag_seconds",
-                F.col("_ts").cast("long") - F.col(f"{name}_ts").cast("long"),
-            )
-        )
-    return out.withColumnRenamed("_key", key_col).withColumnRenamed("_ts", ts_col)
-
-
-def streaming_minhash_dedup(
-    stream: DataFrame,
-    num_hashes: int = 4,
-    ts_col: str = "ts",
-    text_col: str = "text",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """In-stream NEAR-dup suppression: the batch MinHash pipeline
-    recast for a stream. The per-document signature is a pure
-    projection (word-3-gram shingles as an array expression -> min
-    salted md5 per hash function — no shuffle, no aggregation state),
-    so the only stateful operator is dropDuplicatesWithinWatermark on
-    the signature columns: a later document whose shingle set
-    minhash-collides with an earlier one inside the watermark horizon
-    is dropped. State is one row per distinct signature with a TTL —
-    bounded, key-partitioned, unbounded-stream safe."""
-    from streaming_cdc_spark.operators.dedup import minhash_columns, tokens, word_shingles
-
-    sig = minhash_columns(F.col("_sh"), num_hashes, "mh")
-    return (
-        stream.withColumn("_sh", F.array_distinct(word_shingles(tokens(text_col))))
-        .select("*", *sig)
-        .drop("_sh")
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([f"mh{i}" for i in range(num_hashes)])
-    )
-
-
-def streaming_token_counts(
-    stream: DataFrame,
-    window_duration: str = "10 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-    text_col: str = "text",
-) -> DataFrame:
-    """Windowed corpus statistics on a document stream: explode
-    tokens inside each event-time window and count per (window,
-    token) — the streaming twin of token_histogram's aggregation
-    (the top-N rank is a batch post-step: rank windows aren't
-    append-mode safe). Watermarked, so per-window state finalizes
-    and expires. Output: (window_start, window_end, token, n)."""
-    toks = stream.select(
-        F.col(ts_col), F.explode(F.split(F.col(text_col), " ")).alias("token")
-    )
-    return (
-        toks.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration), F.col("token"))
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "token",
-            "n",
-        )
-    )
 
 
 def streaming_bloom_dedup(

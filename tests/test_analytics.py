@@ -784,7 +784,7 @@ def test_streaming_misra_gries_resumes_across_query_restarts(spark, tmp_path):
 def test_grouped_order_statistic_bruteforce(spark):
     import random
 
-    from streaming_cdc_spark.operators.ranking import grouped_order_statistic
+    from streaming_cdc_spark.operators.ranking import grouped_order_statistics
 
     rng = random.Random(23)
     rows = [(f"g{i % 3}", i, rng.randrange(0, 1000)) for i in range(407)]
@@ -792,8 +792,8 @@ def test_grouped_order_statistic_bruteforce(spark):
     for num, off, den in [(5, 99, 100), (95, 99, 100), (1, 0, 1), (50, 0, 100)]:
         got = {
             (r.g, r.stat_value, r.n)
-            for r in grouped_order_statistic(
-                df, ["g"], "c", "event_id", (num, off, den),
+            for r in grouped_order_statistics(
+                df, ["g"], "c", "event_id", [(num, off, den)],
                 band_expr=F.expr("c div 100"),
             ).collect()
         }
@@ -810,13 +810,13 @@ def test_grouped_order_statistic_bruteforce(spark):
 
 def test_grouped_order_statistic_k_edges(spark):
     # k=1 (min) and k=n (max) both land despite band boundaries
-    from streaming_cdc_spark.operators.ranking import grouped_order_statistic
+    from streaming_cdc_spark.operators.ranking import grouped_order_statistics
 
     rows = [("a", i, v) for i, v in enumerate([100, 99, 300, 5, 5])]
     df = spark.createDataFrame(rows, "g string, event_id long, c long")
     # k = (num*n + off) div den: (0,1,1) -> k=1 (min); (1,0,1) -> k=n (max)
-    lo = grouped_order_statistic(df, ["g"], "c", "event_id", (0, 1, 1)).first()
-    hi = grouped_order_statistic(df, ["g"], "c", "event_id", (1, 0, 1)).first()
+    lo = grouped_order_statistics(df, ["g"], "c", "event_id", [(0, 1, 1)]).first()
+    hi = grouped_order_statistics(df, ["g"], "c", "event_id", [(1, 0, 1)]).first()
     assert (lo.stat_value, lo.n) == (5, 5)
     assert (hi.stat_value, hi.n) == (300, 5)
 

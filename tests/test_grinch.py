@@ -145,75 +145,6 @@ def test_cut_dendrogram_unnormalized_hand_tree(spark):
     assert got_all == {"a"}
 
 
-def test_grinch_stream_service_matches_offline(spark, tmp_path):
-    """foreachBatch driver service over a 3-file stream
-    (maxFilesPerTrigger=1 => three sequential micro-batches) builds
-    the SAME tree as the offline sequential build."""
-    import json as _json
-
-    from streaming_cdc_spark.session import drain_stream
-    from streaming_cdc_spark.streaming.grinch_service import GrinchStreamService
-
-    rows = clustered_vectors()
-    src = tmp_path / "gsrc"
-    src.mkdir()
-    # file names in lexical order = arrival order
-    for f in range(3):
-        chunk = rows[f * 8 : (f + 1) * 8]
-        (src / f"part-{f}.jsonl").write_text(
-            "\n".join(
-                _json.dumps({"vec_id": i, "embedding": v, "label": lab})
-                for i, v, lab in chunk
-            )
-        )
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>, label string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    svc = GrinchStreamService()
-    drain_stream(stream, svc.foreach_batch)
-    assert svc.n_batches == 3
-
-    from streaming_cdc_spark.operators.grinch import GrinchTree
-
-    offline = GrinchTree(dim=3)
-    for i, v, lab in rows:
-        offline.insert(np.array(v), external=i, label=lab)
-    got = svc.flat_clusters(0.9)
-    want = offline.flat_clusters(0.9)
-    assert got == want
-    sizes = sorted(
-        len([1 for _, c in got.items() if c == cid]) for cid in set(got.values())
-    )
-    assert sizes == [8, 8, 8]
-
-
-def test_grinch_stream_service_skips_replayed_batch(spark):
-    """foreachBatch is at-least-once: delivering batch k twice must
-    leave the tree exactly as one delivery does (no leaf inserted
-    twice), and a genuinely new batch id still folds in."""
-    from streaming_cdc_spark.streaming.grinch_service import GrinchStreamService
-
-    rows = clustered_vectors()
-    df = spark.createDataFrame(
-        rows[:12], "vec_id long, embedding array<double>, label string"
-    )
-    once, twice = GrinchStreamService(), GrinchStreamService()
-    once.foreach_batch(df, 0)
-    twice.foreach_batch(df, 0)
-    twice.foreach_batch(df, 0)
-    assert twice.n_batches == once.n_batches == 1
-    assert len(twice.tree.edge_rows()) == len(once.tree.edge_rows())
-    assert twice.flat_clusters(0.9) == once.flat_clusters(0.9)
-    assert len(twice.flat_clusters(0.9)) == 12
-    rest = spark.createDataFrame(
-        rows[12:], "vec_id long, embedding array<double>, label string"
-    )
-    twice.foreach_batch(rest, 1)
-    assert twice.n_batches == 2 and len(twice.flat_clusters(0.9)) == len(rows)
-
-
 def test_grinch_per_key_purity_golden(spark):
     """Per-key trees preserve per-key dendrogram purity: each key gets
     well-separated clusters -> purity ~1.0 per key, and a deliberately

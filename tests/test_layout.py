@@ -3,9 +3,6 @@ measured from written parquet footers."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators import layout as L
@@ -31,64 +28,92 @@ def test_zvalue_matches_reference_interleave(spark):
         assert got[i] == _morton(x, y), (i, x, y)
 
 
-def test_zorder_write_prunes_both_dimensions(spark):
+def _file_minmax(files: list[str], cols: list[str]) -> list[dict]:
+    """Per-file footer {col: (min, max)} over all row groups, read with
+    pyarrow — what a reader's file-pruning step sees."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for fp in files:
+        md = pq.ParquetFile(fp).metadata
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        stats = {}
+        for c in cols:
+            rgs = [md.row_group(g).column(idx[c]).statistics for g in range(md.num_row_groups)]
+            stats[c] = (min(s.min for s in rgs), max(s.max for s in rgs))
+        out.append(stats)
+    return out
+
+
+def _files_overlapping(stats: list[dict], box: dict) -> int:
+    """Files a reader must scan for a box predicate {col: (lo, hi)}."""
+    return sum(
+        all(not (st[c][1] < lo or st[c][0] > hi) for c, (lo, hi) in box.items())
+        for st in stats
+    )
+
+
+def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
     """The point of Z-order: after clustering, a reader can skip most
     files for a range predicate on EITHER dimension. The natural
-    (insertion-order ~ time-order) layout prunes only on ts; a
-    user_id predicate must scan every file."""
-    events = load(spark, "/root/testdata/sf0.01", "events").select(
+    (insertion-order ~ time-order) layout prunes only on ts; a user_id
+    predicate must scan every file. The z-layout is a ZOrderTable
+    compacted to one file per tile."""
+    import os
+
+    from streaming_cdc_spark.tables import DEFAULT_SF_DIR
+
+    sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+    events = load(spark, sf, "events").select(
         "event_id",
         F.col("user_id").cast("long").alias("user_id"),
         F.unix_micros("ts").alias("ts_us"),
     )
     n_files = 16
-    tmp = tempfile.mkdtemp(prefix="zorder_")
-    try:
-        nat, zod = f"{tmp}/natural", f"{tmp}/zorder"
-        (
-            events.repartitionByRange(n_files, "event_id")
-            .sortWithinPartitions("event_id")
-            .write.mode("overwrite")
-            .parquet(nat)
-        )
-        L.zorder_write(events, "user_id", "ts_us", zod, n_files=n_files)
-        cols = ["user_id", "ts_us"]
-        nat_stats = L.file_minmax_stats(nat, cols)
-        z_stats = L.file_minmax_stats(zod, cols)
-        assert len(nat_stats) == n_files and len(z_stats) == n_files
+    nat = str(tmp_path / "natural")
+    (
+        events.repartitionByRange(n_files, "event_id")
+        .sortWithinPartitions("event_id")
+        .write.mode("overwrite")
+        .parquet(nat)
+    )
+    t = L.ZOrderTable(str(tmp_path / "zorder"))
+    t.init(events, "user_id", "ts_us", n_buckets=n_files)
+    t.compact(spark, max_files=0, target_files=1)
+    m = t.pointer.read()
+    z_files = [f for d in m["tiles"].values() for f in t._tile_files(m, d)]
+    cols = ["user_id", "ts_us"]
+    nat_stats = _file_minmax(
+        [os.path.join(nat, f) for f in sorted(os.listdir(nat)) if f.endswith(".parquet")], cols
+    )
+    z_stats = _file_minmax(z_files, cols)
+    assert len(nat_stats) == n_files and len(z_stats) == n_files
 
-        lo_u, hi_u = 10, 19  # ~7% of the 150 users
-        ts_min = events.agg(F.min("ts_us")).collect()[0][0]
-        ts_max = events.agg(F.max("ts_us")).collect()[0][0]
-        span = ts_max - ts_min
-        ts_box = (ts_min + span // 10, ts_min + 2 * span // 10)  # 10% slice
+    lo_u, hi_u = 10, 19  # ~7% of the 150 users
+    ts_min, ts_max = events.agg(F.min("ts_us"), F.max("ts_us")).first()
+    span = ts_max - ts_min
+    ts_box = (ts_min + span // 10, ts_min + 2 * span // 10)  # 10% slice
 
-        user_pred = {"user_id": (lo_u, hi_u)}
-        ts_pred = {"ts_us": ts_box}
-        box_pred = {"user_id": (lo_u, hi_u), "ts_us": ts_box}
+    user_pred = {"user_id": (lo_u, hi_u)}
+    ts_pred = {"ts_us": ts_box}
+    box_pred = {"user_id": (lo_u, hi_u), "ts_us": ts_box}
 
-        # natural layout: time-ordered ids -> ts prunes well, user_id
-        # stats span everything -> zero pruning on the user dimension
-        assert L.files_overlapping(nat_stats, user_pred) == n_files
-        assert L.files_overlapping(nat_stats, ts_pred) <= 4
+    # natural layout: time-ordered ids -> ts prunes well, user_id
+    # stats span everything -> zero pruning on the user dimension
+    assert _files_overlapping(nat_stats, user_pred) == n_files
+    assert _files_overlapping(nat_stats, ts_pred) <= 4
 
-        # z-order layout: BOTH single-dim predicates skip most files,
-        # and the 2-D box skips nearly all
-        z_user = L.files_overlapping(z_stats, user_pred)
-        z_ts = L.files_overlapping(z_stats, ts_pred)
-        z_box = L.files_overlapping(z_stats, box_pred)
-        assert z_user <= n_files // 2, z_user
-        assert z_ts <= n_files // 2, z_ts
-        assert z_box <= 4, z_box
+    # z-order layout: BOTH single-dim predicates skip most files,
+    # and the 2-D box skips nearly all
+    z_user = _files_overlapping(z_stats, user_pred)
+    z_ts = _files_overlapping(z_stats, ts_pred)
+    z_box = _files_overlapping(z_stats, box_pred)
+    assert z_user <= n_files // 2, z_user
+    assert z_ts <= n_files // 2, z_ts
+    assert z_box <= 4, z_box
 
-        # layout is lossless: same rows back
-        assert (
-            spark.read.parquet(zod).count()
-            == spark.read.parquet(nat).count()
-            == events.count()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # layout is lossless: same rows back
+    assert t.read(spark).count() == spark.read.parquet(nat).count() == events.count()
 
 
 def test_zbucket_is_deterministic_tile(spark):

@@ -2,13 +2,19 @@
 decode determinism."""
 
 import pytest
+from pyspark.sql import functions as F
 
-from streaming_cdc_spark.operators.multimodal import (
-    attach_fake_media,
-    extract_media_features,
-    resize_media,
-    sample_frames,
-)
+from streaming_cdc_spark.operators.multimodal import MEDIA_SCHEMA, extract_media_features
+
+
+def attach_fake_media(docs):
+    """utf-8 bytes of each doc's text as a media blob with a non-image
+    mime tag — the synthetic tables carry no real blobs."""
+    return docs.select(
+        F.encode(F.col("text"), "utf-8").alias("media"),
+        F.lit("application/x-fake").alias("mime"),
+        F.col("doc_id").alias("media_id"),
+    )
 
 
 def media_df(spark):
@@ -20,8 +26,9 @@ def media_df(spark):
 
 
 def test_media_schema(spark):
-    m = media_df(spark)
-    assert dict(m.dtypes) == {"media": "binary", "mime": "string", "media_id": "bigint"}
+    """The fixture builds exactly the input contract extract_media_features
+    declares."""
+    assert media_df(spark).dtypes == spark.createDataFrame([], MEDIA_SCHEMA).dtypes
 
 
 def test_feature_extraction_deterministic(spark):
@@ -49,25 +56,12 @@ def test_real_codec_path_is_gated(spark):
         assert extract_media_features(media_df(spark), use_real_codec=True).count() > 0
 
 
-def test_resize_and_frame_sample(spark):
-    m = media_df(spark)
-    r = resize_media(m, 224, 224).first()
-    assert r["target_w"] == 224 and r["target_h"] == 224
-    frames = sample_frames(m, every_n=5).collect()
-    assert all(f["frame_index"] % 5 == 0 for f in frames)
-    assert {f["media_id"] for f in frames} == {0, 1, 2}
-
-
 def test_real_codec_flag_requires_pil(spark):
     """use_real_codec=True must fail fast with the install hint when
     PIL is absent (and run the real decoder when present)."""
     import pytest
 
-    from streaming_cdc_spark.operators.multimodal import (
-        attach_fake_media,
-        extract_media_features,
-        have_pil,
-    )
+    from streaming_cdc_spark.operators.multimodal import have_pil
 
     docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
     media = attach_fake_media(docs)
@@ -99,11 +93,6 @@ def test_pil_decode_real_image():
 def test_auto_codec_keeps_fake_hashes_for_non_images(spark):
     """Default (auto) mode must produce the SAME features as the fake
     path for non-image mimes, PIL or not — media_stats hash stability."""
-    from streaming_cdc_spark.operators.multimodal import (
-        attach_fake_media,
-        extract_media_features,
-    )
-
     docs = spark.createDataFrame([(1, "abc"), (2, "xyz")], "doc_id long, text string")
     media = attach_fake_media(docs)
     auto = {tuple(r) for r in extract_media_features(media).collect()}

@@ -107,30 +107,6 @@ def test_pq_adc_topk_matches_bruteforce(spark):
     assert sorted(got) == sorted(want)
 
 
-def test_ann_index_save_load_roundtrip(spark, tmp_path):
-    """Persisted IVF centroids + PQ codebooks must reload
-    bit-identically (parquet doubles are exact), so encodes and
-    assignments from a loaded index equal the fresh-fit ones."""
-    from streaming_cdc_spark.operators.ann import (
-        collect_seed_centroids,
-        load_ann_index,
-        save_ann_index,
-    )
-
-    emb = load(spark, SF, "embeddings")
-    cents = collect_seed_centroids(emb, 8)
-    cb = collect_pq_codebooks(emb, M, KSUB)
-    path = str(tmp_path / "ann_index")
-    save_ann_index(spark, path, centroids=cents, codebooks=cb)
-    got_c, got_b = load_ann_index(spark, path)
-    assert got_c == cents
-    assert got_b == cb
-    # loaded codebooks drive identical encodes
-    fresh = {tuple(r) for r in pq_encode(emb, cb).collect()}
-    loaded = {tuple(r) for r in pq_encode(emb, got_b).collect()}
-    assert fresh == loaded
-
-
 def test_hybrid_rrf_matches_python_replay(spark):
     """RRF fusion must equal the python fold of its two input
     rankings — including candidates present in only one list."""

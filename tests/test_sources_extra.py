@@ -126,98 +126,3 @@ def test_kafka_source_guard(spark):
         assert "spark-sql-kafka" in str(e)
     else:  # pragma: no cover - only with connector on classpath
         assert df.isStreaming
-
-
-def test_partitioned_corpus_roundtrip_and_pruning(spark, tmp_path):
-    """Hive-partitioned write + read-back; a filter on the partition
-    key must prune at plan time (directory-level, not row-level)."""
-    from streaming_cdc_spark.sources.corpus import (
-        read_partitioned_corpus,
-        write_partitioned_corpus,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}", ["en", "es", "zh"][i % 3]) for i in range(30)],
-        "doc_id long, text string, lang string",
-    )
-    path = str(tmp_path / "corpus")
-    write_partitioned_corpus(df, path, ["lang"], max_records_per_file=100)
-
-    import os
-
-    assert sorted(d for d in os.listdir(path) if d.startswith("lang=")) == [
-        "lang=en",
-        "lang=es",
-        "lang=zh",
-    ]
-    back = read_partitioned_corpus(spark, path)
-    assert back.count() == 30
-    en = back.filter("lang = 'en'")
-    assert en.count() == 10
-    plan = en._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan
-
-
-def test_partitioned_corpus_sorted_rowgroups(spark, tmp_path):
-    """sort_cols clusters rows inside each partition's files so
-    parquet min/max stats are tight per file."""
-    import pyarrow.parquet as pq
-    import os
-
-    from streaming_cdc_spark.sources.corpus import write_partitioned_corpus
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}", ["en", "es"][i % 2]) for i in range(1000)],
-        "doc_id long, text string, lang string",
-    ).repartition(4)
-    path = str(tmp_path / "sorted_corpus")
-    write_partitioned_corpus(df, path, ["lang"], sort_cols=["doc_id"])
-    en_dir = os.path.join(path, "lang=en")
-    files = [f for f in os.listdir(en_dir) if f.endswith(".parquet")]
-    assert files
-    for f in files:
-        md = pq.ParquetFile(os.path.join(en_dir, f)).metadata
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)  # doc_id
-            assert col.statistics.min <= col.statistics.max
-        # within-file ordering: read back and check sorted
-        tbl = pq.read_table(os.path.join(en_dir, f), columns=["doc_id"])
-        ids = tbl["doc_id"].to_pylist()
-        assert ids == sorted(ids)
-
-
-def test_corpus_compaction_and_schema_merge(spark, tmp_path):
-    """Many small files compact to one per partition; a later batch
-    with an extra column reads back via mergeSchema with NULLs for
-    old rows."""
-    import os
-
-    from streaming_cdc_spark.sources.corpus import (
-        compact_partition,
-        read_partitioned_corpus,
-        write_partitioned_corpus,
-    )
-
-    path = str(tmp_path / "life")
-    v1 = spark.createDataFrame(
-        [(i, f"d{i}", "en") for i in range(100)], "doc_id long, text string, lang string"
-    ).repartition(8)
-    write_partitioned_corpus(v1, path, ["lang"])
-    en = os.path.join(path, "lang=en")
-    before = len([f for f in os.listdir(en) if f.startswith("part-")])
-    assert before > 1
-    n = compact_partition(spark, path, "lang=en", target_files=1)
-    assert n == 1
-    back = read_partitioned_corpus(spark, path)
-    assert back.count() == 100
-
-    # schema evolution: append a batch with an extra quality column
-    v2 = spark.createDataFrame(
-        [(100 + i, f"d{100+i}", "en", 0.5) for i in range(10)],
-        "doc_id long, text string, lang string, quality double",
-    )
-    write_partitioned_corpus(v2, path, ["lang"], mode="append")
-    merged = read_partitioned_corpus(spark, path, merge_schema=True)
-    assert "quality" in merged.columns
-    assert merged.count() == 110
-    assert merged.filter("quality IS NULL").count() == 100

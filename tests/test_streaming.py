@@ -644,7 +644,7 @@ def test_linkreplay_fixture_geometry_exercises_both_branches(spark):
     from pyspark.sql import functions as F
 
     from streaming_cdc_spark.functions.hashing import md5_long
-    from streaming_cdc_spark.queries.cdc2 import (
+    from streaming_cdc_spark.queries.cdc import (
         _LINKREPLAY_GROUPS,
         _LINKREPLAY_KEYS,
         _LINKREPLAY_LIMIT,
