@@ -9,22 +9,27 @@ whenever the greedy pass links transitively, which holds for the
 `backwards` strategy with no window limit), and keep the exact
 sequential replay in operators/greedy.py for parity mode.
 
-Physical strategy for CC is adaptive, like AQE join selection:
+Physical strategy for CC is adaptive, like AQE join selection, and
+both sides run the ONE union-find kernel, ``_union_find``:
 - the threshold graph is usually MUCH smaller than the input (only
-  near-duplicate pairs survive). Below ``driver_cutoff`` edges we
-  solve union-find on the driver (O(E α)) and broadcast the mapping —
-  same pattern as the driver-side Hungarian: the *aggregate* is
-  small even when the data is not.
+  near-duplicate pairs survive). Up to ``driver_cutoff`` edges the
+  kernel solves the collected edges on the driver and the labels go
+  back over Arrow — same pattern as the driver-side Hungarian: the
+  *aggregate* is small even when the data is not.
 - above the cutoff: min-label propagation with pointer jumping over
   only the edge-touched vertices (isolated vertices are singletons by
-  construction and never enter the loop), O(log n) rounds, cheap
-  sum-based convergence test, localCheckpoint lineage truncation.
-  The labels start from a SEED pass, not the identity: one
-  ``mapInPandas`` over the cached, u-partitioned symmetric edges runs
-  a vectorized numpy union-find per partition, and each vertex starts
-  at the least root any partition gave it. Components that one
-  partition sees whole (cliques, stars) are then already final, and
-  the loop's first round only confirms the fixpoint.
+  construction and never enter the loop), cheap sum-based
+  convergence test, localCheckpoint lineage truncation. The labels
+  start from a SEED pass, not the identity: one ``mapInPandas`` over
+  the cached, u-partitioned symmetric edges runs the kernel per
+  partition, and each vertex starts at the least root any partition
+  gave it. Components that one partition sees whole (cliques, stars)
+  are then already final, and the loop's first round only confirms
+  the fixpoint.
+Both paths end in one left join of the vertices against the labels.
+The kernel hooks roots, never vertices: a vertex-hooking min-label
+loop is quadratic on chains (a label moves one hop per round, so a
+chain in random id order takes thousands of rounds).
 
 Every graph operator here reads its edges through ``sym_edges`` and
 materializes its result before that cache is released.
@@ -38,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators.similarity import cosine_self_edges
+from streaming_cdc_spark.session import ensure_package_on_executors
 
 
 def _long_pairs(edges: DataFrame) -> DataFrame:
@@ -110,52 +116,40 @@ def sym_edges(edges: DataFrame, self_loops: bool = False):
         e.unpersist()
 
 
-def _driver_union_find(vertices: DataFrame, edge_pairs: list, id_col: str) -> DataFrame:
-    parent: dict = {}
+def _union_find(u, v):
+    """Connected components of the edge arrays (u, v) of equal length:
+    ``(ids, roots)``, the sorted distinct vertex ids and each one's
+    least component id. Numpy union-find on dense indices (index order
+    is id order): each round hooks every tree ROOT to the least root
+    across its edges, then shortcuts until every vertex points at a
+    root (Shiloach-Vishkin, O(log n) rounds). A root only ever hooks
+    to a smaller root of its own component, so pointers strictly
+    decrease (no cycles) and each component's least vertex stays its
+    root."""
+    import numpy as np
 
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for u, v in edge_pairs:
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            # union by min id keeps the representative deterministic
-            if ru < rv:
-                parent[rv] = ru
-            else:
-                parent[ru] = rv
-    import pandas as pd
-
-    spark = vertices.sparkSession
-    # Arrow path: near the 2M-edge cutoff the mapping is ~millions of
-    # rows, where the pickle-per-row createDataFrame is seconds and
-    # the Arrow batch is milliseconds
-    map_pdf = pd.DataFrame(
-        {id_col: list(parent), "_root": [find(x) for x in parent]},
-        dtype="int64",
-    )
-    if len(map_pdf) == 0:
-        map_pdf = pd.DataFrame({id_col: pd.array([], dtype="int64"), "_root": pd.array([], dtype="int64")})
-    map_df = spark.createDataFrame(map_pdf)
-    return (
-        vertices.join(F.broadcast(map_df), id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("_root", F.col(id_col)).alias("cluster_id"),
-        )
-    )
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    lab = np.arange(len(ids))
+    while True:
+        m = np.minimum(lab[a], lab[b])
+        new = lab.copy()
+        np.minimum.at(new, lab[a], m)
+        np.minimum.at(new, lab[b], m)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, lab):
+            return ids, ids[lab]
+        lab = new
 
 
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str = "v",
-    max_iter: int = 50,
     driver_cutoff: int = 2_000_000,
 ) -> DataFrame:
     """Connected components of (vertices, edges).
@@ -174,69 +168,56 @@ def connected_components(
         # whole matmul. The big path re-reads the cache it would have
         # had to materialize anyway; the small path collects via Arrow.
         e = e.persist()
-        n_edges = e.count()
-        if n_edges <= driver_cutoff:
-            try:
-                if n_edges == 0:
-                    return vs.select(
-                        F.col("v").alias(id_col), F.col("v").alias("cluster_id")
-                    )
-                pdf = e.toPandas()
-                pairs = list(zip(pdf["u"].to_numpy(), pdf["v"].to_numpy()))
-                return _driver_union_find(vs, pairs, "v").withColumnRenamed("v", id_col)
-            finally:
-                e.unpersist()
-    # The self-loops make the touched-vertex set come from the cached
-    # edges instead of a second pass over the edge subtree, and the
-    # loop's self-loop row folds "keep own label" into the
-    # neighbor-min aggregate — min over (neighbors ∪ self) IS
-    # least(own, nbr min) — so no per-round join on the label relation
-    # is needed; each round shuffles only the labels.
-    with sym_edges(e, self_loops=True) as sym:
-        lbl = _min_labels(sym, max_iter)
-    e.unpersist()
-    # the final labels cover exactly the edge-touched vertices; the
-    # rest of `vs` are singletons. Edges may reference ids absent from
-    # `vertices`, so labelled rows are kept only for the requested
-    # vertex set (matches the driver-union-find path).
-    isolated = vs.join(lbl, "v", "leftanti").select("v", F.col("v").alias("l"))
-    return (
-        lbl.join(vs, "v", "leftsemi")
-        .union(isolated)
-        .select(F.col("v").alias(id_col), F.col("l").alias("cluster_id"))
+    try:
+        if driver_cutoff and e.count() <= driver_cutoff:
+            import pandas as pd
+
+            pdf = e.toPandas()
+            ids, roots = _union_find(pdf["u"].to_numpy(), pdf["v"].to_numpy())
+            # Arrow path: near the 2M-edge cutoff the mapping is
+            # ~millions of rows, where the pickle-per-row
+            # createDataFrame is seconds and the Arrow batch milliseconds
+            lbl = vs.sparkSession.createDataFrame(
+                pd.DataFrame({"v": ids, "l": roots}), "v long, l long"
+            )
+        else:
+            # The self-loops make the touched-vertex set come from the
+            # cached edges instead of a second pass over the edge
+            # subtree, and the loop's self-loop row folds "keep own
+            # label" into the neighbor-min aggregate — min over
+            # (neighbors ∪ self) IS least(own, nbr min) — so no
+            # per-round join on the label relation is needed; each
+            # round shuffles only the labels.
+            with sym_edges(e, self_loops=True) as sym:
+                lbl = _min_labels(sym)
+    finally:
+        e.unpersist()
+    # the labels cover exactly the edge-touched vertices; the rest of
+    # `vs` are singletons. Edges may reference ids absent from
+    # `vertices`, so only the requested vertex set is returned.
+    return vs.join(lbl, "v", "left").select(
+        F.col("v").alias(id_col), F.coalesce("l", "v").alias("cluster_id")
     )
 
 
-def _min_labels(sym: DataFrame, max_iter: int) -> DataFrame:
+def _min_labels(sym: DataFrame) -> DataFrame:
     """(v, l): l = least vertex id of v's component, over a
     ``sym_edges(self_loops=True)`` relation; the returned labels are
     materialized (the convergence probe is the action)."""
 
     def local_roots(batches):
-        # union-find over ONE partition's edges: vectorized min-label
-        # propagation with pointer jumping on dense indices; index
-        # order is id order, so the min index is the min vertex id
+        # union-find over ONE partition's edges
         import numpy as np
         import pandas as pd
 
         frames = list(batches)
         if not frames:
             return
-        u = np.concatenate([f["u"].to_numpy() for f in frames])
-        v = np.concatenate([f["v"].to_numpy() for f in frames])
-        ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        a, b = inv[: len(u)], inv[len(u):]
-        lab = np.arange(len(ids))
-        while True:
-            m = np.minimum(lab[a], lab[b])
-            new = lab.copy()
-            np.minimum.at(new, a, m)
-            np.minimum.at(new, b, m)
-            new = new[new]
-            if np.array_equal(new, lab):
-                break
-            lab = new
-        yield pd.DataFrame({"v": ids, "l": ids[lab]})
+        ids, roots = _union_find(
+            np.concatenate([f["u"].to_numpy() for f in frames]),
+            np.concatenate([f["v"].to_numpy() for f in frames]),
+        )
+        yield pd.DataFrame({"v": ids, "l": roots})
 
     # SEED the labels with one local pass instead of the identity: each
     # partition of the u-partitioned edges solves its own components,
@@ -254,18 +235,20 @@ def _min_labels(sym: DataFrame, max_iter: int) -> DataFrame:
     # never drop below m, and the fixpoint (no vertex above a
     # neighbor's label) gives the whole component m — the same answer
     # as starting from the identity.
+    ensure_package_on_executors(sym.sparkSession)  # local_roots calls _union_find
     lbl = (
         sym.mapInPandas(local_roots, "v long, l long")
         .groupBy("v")
         .agg(F.min("l").alias("l"))
         .localCheckpoint(eager=False)
     )
-    # labels only ever decrease; the total is a strict monotone — equal
-    # sums mean a fixed point (one cheap agg, no join). The seed's own
-    # sum is the baseline, so an already-converged seed stops after one
-    # round; a NULL sum means no edges at all.
+    # labels only ever decrease; the total strictly falls until a
+    # round changes nothing and is bounded below, so the loop ends —
+    # equal sums mean a fixed point (one cheap agg, no join). The seed's
+    # own sum is the baseline, so an already-converged seed stops after
+    # one round; a NULL sum means no edges at all.
     prev_sum = _label_sum(lbl)
-    for _ in range(max_iter if prev_sum is not None else 0):
+    while prev_sum is not None:
         # min over (neighbors ∪ self): the self-loop row carries v's own
         # label through the same aggregate
         stepped = (

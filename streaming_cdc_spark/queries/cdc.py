@@ -120,8 +120,8 @@ def cosine_edges_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def threshold_cc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB physical path of threshold_cc_clusters, pinned:
     blocked similarity kernel + distributed min-label propagation
-    with pointer jumping (operators/clustering.py:110), forced by
-    strategy="blocked" and driver_cutoff=0 so neither the broadcast
+    with pointer jumping (operators/clustering.py: _min_labels), forced
+    by strategy="blocked" and driver_cutoff=0 so neither the broadcast
     matmul nor the driver union-find shortcut can run. Same
     recursive-CTE oracle as threshold_cc_clusters — the driver hash
     check certifies that the fully distributed path computes the
@@ -1336,16 +1336,16 @@ def ep2_streaming_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified end to end by ep2_streaming_linker_replay, whose
     one-hot fixture makes the fold SQL-replayable."""
     import os
-    import tempfile
 
     from streaming_cdc_spark.pipelines import ep2_streaming
+    from streaming_cdc_spark.session import cached_tmp_dir
     from streaming_cdc_spark.tables import load as _load
 
     emb = _load(spark, sf_dir, "embeddings")
     src_dir = _MULTIBATCH_SPLITS.get(sf_dir)
     if src_dir is None or not os.path.isdir(src_dir):
         lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-        src_dir = tempfile.mkdtemp(prefix="ep2mb_src_")
+        src_dir = cached_tmp_dir("ep2mb_src_")
         n_splits = 4
         step = (hi - lo + n_splits) // n_splits
         from streaming_cdc_spark.session import write_mtime_pinned_splits

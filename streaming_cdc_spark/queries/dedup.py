@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators import dedup as D
 from streaming_cdc_spark.queries.registry import query
-from streaming_cdc_spark.session import drain_stream
+from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
 from streaming_cdc_spark.tables import load
 
 # Shared oracle fragments ------------------------------------------------
@@ -1114,7 +1114,7 @@ def _run_progressive_stream(
         if lo is None:  # empty table: nothing to stream
             return spark.createDataFrame([], ProgressiveResolver.RESULT_SCHEMA)
         step = (hi - lo + n_splits) // n_splits
-        src = tempfile.mkdtemp(prefix="progstream_src_")
+        src = cached_tmp_dir("progstream_src_")
         from streaming_cdc_spark.session import write_mtime_pinned_splits
 
         write_mtime_pinned_splits(
@@ -1268,7 +1268,6 @@ def streaming_bloom_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain joins. A rare thing: a probabilistic streaming operator
     under a full value-hash oracle, false-positive drops included."""
     import os
-    import tempfile
 
     from streaming_cdc_spark.streaming.windows import streaming_bloom_dedup
 
@@ -1279,7 +1278,7 @@ def streaming_bloom_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = _BLOOM_SPLITS.get(sf_dir)
     if src_dir is None or not os.path.isdir(src_dir):
         lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        src_dir = tempfile.mkdtemp(prefix="bloomst_src_")
+        src_dir = cached_tmp_dir("bloomst_src_")
         n_splits = 4
         step = (hi - lo + n_splits) // n_splits
         from streaming_cdc_spark.session import write_mtime_pinned_splits

@@ -44,32 +44,3 @@ DENDROGRAM_SCHEMA = T.StructType(
         T.StructField("label", T.StringType()),
     ]
 )
-
-# PubTator document (medmentions.py:9-23).
-PUBTATOR_MENTION_TYPE = T.StructType(
-    [
-        T.StructField("start", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("semantic_types", T.ArrayType(T.StringType())),
-        T.StructField("entity_id", T.StringType()),
-    ]
-)
-
-PUBTATOR_DOCUMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("pmid", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("abstract", T.StringType()),
-        T.StructField("mentions", T.ArrayType(PUBTATOR_MENTION_TYPE)),
-    ]
-)
-
-# Entity vocabulary (utils.py:53-75): index 0 is reserved for [PAD].
-ENTITY_VOCAB_SCHEMA = T.StructType(
-    [
-        T.StructField("index", T.IntegerType()),
-        T.StructField("entity_id", T.StringType()),
-        T.StructField("count", T.LongType()),
-    ]
-)

@@ -27,11 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at any scale factor we target.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
 # Parquet TIMESTAMP(NANOS) columns (read as long nanos via
 # spark.sql.legacy.parquet.nanosAsLong) converted to microsecond
 # timestamps — same truncation DuckDB applies when it reads them.

@@ -120,6 +120,50 @@ def _graphs(draw):
     return n + draw(st.integers(0, 3)), edges
 
 
+def _reference_cc(edges):
+    """{vertex: least vertex id of its component} by a plain
+    path-halving union-find, independent of the engine's kernel."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_union_find_kernel_matches_reference():
+    """The one CC kernel (driver path and distributed seed pass) equals
+    the reference on the shapes that break a vertex-hooking min-label
+    loop — a long chain in random id order, a descending chain — plus
+    disjoint cliques and random sparse edges, and solves them all well
+    inside a wall bound that such a loop (thousands of rounds on the
+    chain) misses."""
+    import time
+
+    rng = np.random.default_rng(12)
+    perm = rng.permutation(50_000)
+    cliques = [(a, b) for k in range(0, 3000, 6) for a in range(k, k + 6) for b in range(a + 1, k + 6)]
+    graphs = {
+        "random_chain": np.stack([perm[:-1], perm[1:]], axis=1),
+        "desc_chain": np.array([(i, i - 1) for i in range(20_000, 0, -1)]),
+        "cliques": np.array(cliques),
+        "sparse": rng.integers(0, 100_000, size=(60_000, 2)),
+    }
+    start = time.perf_counter()
+    for name, e in graphs.items():
+        ids, roots = C._union_find(e[:, 0], e[:, 1])
+        assert dict(zip(ids.tolist(), roots.tolist())) == _reference_cc(e.tolist()), name
+    ids, roots = C._union_find(np.array([], dtype=np.int64), np.array([], dtype=np.int64))
+    assert len(ids) == len(roots) == 0
+    assert time.perf_counter() - start < 5
+
+
 def _cc(spark, n, edges, **kw):
     vertices = spark.range(n).select(F.col("id").alias("v"))
     e = spark.createDataFrame(edges, "u long, v long")
@@ -149,11 +193,12 @@ def _group_jobs(spark, group, fn):
 @settings(max_examples=5, deadline=None)
 @given(graph=_graphs())
 def test_connected_components_seeded_loop_equals_union_find(spark, parts, graph):
-    """The locally seeded distributed loop equals the driver
-    union-find at any shuffle-partition count (the seed pass solves
-    each partition's edges, so the partitioning decides how much of
-    each component a seed sees)."""
+    """The locally seeded distributed loop and the driver path both
+    equal a reference union-find at any shuffle-partition count (the
+    seed pass solves each partition's edges, so the partitioning
+    decides how much of each component a seed sees)."""
     n, edges = graph
+    truth = {v: v for v in range(n)} | _reference_cc(edges)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
@@ -161,27 +206,29 @@ def test_connected_components_seeded_loop_equals_union_find(spark, parts, graph)
             got = _cc(spark, n, edges, driver_cutoff=0)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert got == _cc(spark, n, edges)
+    assert got == truth
+    assert _cc(spark, n, edges) == truth
 
 
 def test_connected_components_cliques_converge_in_one_round(spark):
     """Every vertex of a clique sees the whole clique in its own
-    partition's edges, so the seed is already the fixpoint: a call
-    allowed 50 rounds runs exactly the jobs of a call allowed one."""
+    partition's edges, so the seed is already the fixpoint: the cliques
+    run exactly the jobs of a one-edge graph, which the seed solves
+    too."""
     edges = [(a, b) for g in range(5) for a in range(6 * g, 6 * g + 6) for b in range(a + 1, 6 * g + 6)]
     truth = {v: v - v % 6 if v < 30 else v for v in range(32)}  # 30, 31 isolated
     with _all_partitions():
-        assert _cc(spark, 32, edges, driver_cutoff=0, max_iter=1) == truth
-        one = _group_jobs(spark, "cc_one_round", lambda: _cc(spark, 32, edges, driver_cutoff=0, max_iter=1))
-        fifty = _group_jobs(spark, "cc_fifty_rounds", lambda: _cc(spark, 32, edges, driver_cutoff=0))
-    assert fifty == one
+        assert _cc(spark, 32, edges, driver_cutoff=0) == truth
+        cliques = _group_jobs(spark, "cc_cliques", lambda: _cc(spark, 32, edges, driver_cutoff=0))
+        one_edge = _group_jobs(spark, "cc_one_edge", lambda: _cc(spark, 32, [(0, 1)], driver_cutoff=0))
+    assert cliques == one_edge
 
 
 def test_connected_components_empty_edges_distributed_stops(spark):
     """An empty edge set on the distributed path is all singletons and
     runs a small constant number of jobs: the label sum of an empty
     graph is NULL, which never compares equal, so convergence must not
-    hinge on it (else all max_iter rounds run)."""
+    hinge on it (else the loop never stops)."""
     got = {}
     jobs = _group_jobs(spark, "cc_empty", lambda: got.update(_cc(spark, 5, [], driver_cutoff=0)))
     assert got == {v: v for v in range(5)}
@@ -291,22 +338,8 @@ def test_threshold_clusters_matches_union_find(spark):
     # driver-side truth: union-find over exact cosine graph
     norm = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
     sims = norm @ norm.T
-    parent = list(range(40))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for i in range(40):
-        for j in range(i + 1, 40):
-            if sims[i, j] > tau:
-                parent[find(i)] = find(j)
-    truth = {}
-    for i in range(40):
-        truth.setdefault(find(i), []).append(i)
-    expected = {m: min(ms) for ms in truth.values() for m in ms}
+    edges = [(i, j) for i in range(40) for j in range(i + 1, 40) if sims[i, j] > tau]
+    expected = {i: i for i in range(40)} | _reference_cc(edges)
     got = {r["vec_id"]: r["cluster_id"] for r in threshold_clusters(df, tau).collect()}
     assert got == expected
 

@@ -1,10 +1,11 @@
 """Every public engine definition has a consumer outside the tests.
 
 A no-Spark AST scan of ``streaming_cdc_spark/``: each public (no leading
-underscore), non-``@query`` top-level function or class must be named —
-as a Name, an attribute, an import or a string constant — somewhere in
-the engine outside its own body, in ``tools/``, ``bench.py``,
-``perfbench/`` or ``__spark_entry__.py``. A definition that only tests
+underscore), non-``@query`` top-level function, class or module-level
+assigned name must be named — as a Name, an attribute, an import or a
+string constant — somewhere in the engine outside its own body, in
+``tools/``, ``bench.py``, ``perfbench/`` or ``__spark_entry__.py``.
+A definition that only tests
 call is a second path to keep working; delete it with its tests, or, if
 it is the only implementation of a reference capability or the
 reference a test compares a shipped path against, add it to ``KEEP``
@@ -41,6 +42,7 @@ KEEP = {
     "operators/ann.py:collect_pq_codebooks": "reference the fused PQ planning collect is compared against",
     "operators/multimodal.py:extract_media_features": "the only blob decode path "
     "(PIL for image/*, deterministic fake otherwise)",
+    "operators/multimodal.py:MEDIA_SCHEMA": "the media column contract extract_media_features reads",
     "plans/inspect.py": "plan-inspection helpers the plan tests assert with",
 }
 
@@ -75,6 +77,20 @@ def _is_query(node) -> bool:
     return False
 
 
+def _defined_names(node) -> list[str]:
+    """Public names a top-level statement defines: a non-@query def or
+    class, or the Name targets of a module-level assignment."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        names = [] if _is_query(node) else [node.name]
+    elif isinstance(node, ast.Assign):
+        names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+    elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+        names = [node.target.id]
+    else:
+        names = []
+    return [n for n in names if not n.startswith("_")]
+
+
 def _unreferenced() -> dict[str, str]:
     """{"module path:name": module path} of the public, non-@query
     top-level definitions nothing outside the tests references."""
@@ -85,12 +101,8 @@ def _unreferenced() -> dict[str, str]:
         engine += _refs(tree)
         rel = os.path.relpath(path, PKG)
         for node in tree.body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not node.name.startswith("_")
-                and not _is_query(node)
-            ):
-                defs.append((rel, node.name, _refs(node)[node.name]))
+            for name in _defined_names(node):
+                defs.append((rel, name, _refs(node)[name]))
     outside: Counter = Counter()
     others = [os.path.join(ROOT, f) for f in ("bench.py", "__spark_entry__.py")]
     for top in ("tools", "perfbench"):

@@ -61,10 +61,7 @@ def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
     compacted to one file per tile."""
     import os
 
-    from streaming_cdc_spark.tables import DEFAULT_SF_DIR
-
-    sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
-    events = load(spark, sf, "events").select(
+    events = load(spark, "/root/testdata/sf0.01", "events").select(
         "event_id",
         F.col("user_id").cast("long").alias("user_id"),
         F.unix_micros("ts").alias("ts_us"),

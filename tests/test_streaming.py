@@ -830,7 +830,6 @@ def test_drains_leave_no_view_or_checkpoint(spark, tmp_path):
     rest of the session."""
     from streaming_cdc_spark.pipelines import ep2_streaming
     from streaming_cdc_spark.queries import QUERIES
-    from streaming_cdc_spark.tables import DEFAULT_SF_DIR
 
     views, ckpts = _temp_views(spark), _ckpt_dirs()
     # the tests/test_bisection.py::test_ep2_streaming fixture
@@ -850,9 +849,8 @@ def test_drains_leave_no_view_or_checkpoint(spark, tmp_path):
     )
     out = ep2_streaming(stream, gold, threshold=0.9)
     assert out["summary"].first()["mean_f1"] == pytest.approx(1.0, abs=1e-6)
-    sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
     for name in ("watermarked_daily_counts", "streaming_sessions_finalized"):
-        assert QUERIES[name](spark, sf).count() > 0
+        assert QUERIES[name](spark, "/root/testdata/sf0.001").count() > 0
     assert _temp_views(spark) - views == set()
     assert _ckpt_dirs() - ckpts == set()
 
@@ -965,3 +963,34 @@ def test_edges_symmetrized_only_in_sym_edges():
             and {("v", "u"), ("u", "v")} <= _renames(n)
         ]
     assert hits == []
+
+
+def test_split_source_dirs_removed_at_exit(tmp_path):
+    """The memoized split-file sources of the three multi-batch queries
+    live in ``cached_tmp_dir`` dirs: a process that ran them leaves no
+    ``*_src_*`` dir in its temp dir once it exits."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from streaming_cdc_spark.queries import QUERIES
+from streaming_cdc_spark.session import get_spark
+spark = get_spark("src-dirs", shuffle_partitions=2)
+for name in ("progressive_stream_resolution", "streaming_bloom_status", "ep2_streaming_multibatch"):
+    QUERIES[name](spark, "/root/testdata/sf0.001").collect()
+print(" ".join(sorted(d for d in os.listdir(tempfile.gettempdir()) if "_src_" in d)))
+"""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    made = out.stdout.split()
+    assert {d.split("_src_")[0] for d in made} == {"progstream", "bloomst", "ep2mb"}
+    assert not [d for d in os.listdir(tmp) if "_src_" in d]
