@@ -337,9 +337,6 @@ def heavy_hitters_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hh_assemble(keyed, summ)
 
 
-_HH_SPLITS: dict[str, str] = {}
-
-
 @query("streaming_heavy_hitters", oracle=_HH_ORACLE)
 def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING twin of heavy_hitters_bounds under the SAME
@@ -354,39 +351,20 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same theorem bound as the batch form, so the exact counts +
     literal bits hash-match identically. Final state = the max
     batch_idx row-set per shard; estimates never reach the output."""
-    import os
-
     from streaming_cdc_spark.session import (
-        cached_tmp_dir,
         drain_stream,
-        write_mtime_pinned_splits,
+        id_range_splits,
+        replay_stream,
     )
     from streaming_cdc_spark.streaming.windows import streaming_misra_gries
 
     keyed_batch = load(spark, sf_dir, "events").select(
         "event_id", _hh_key_col().alias("key")
     )
-    src_dir = _HH_SPLITS.get(sf_dir)
-    if src_dir is None or not os.path.isdir(src_dir):
-        lo, hi = keyed_batch.agg(F.min("event_id"), F.max("event_id")).first()
-        src_dir = cached_tmp_dir("hhst_src_")
-        n_splits = 4
-        step = (hi - lo + n_splits) // n_splits
-        write_mtime_pinned_splits(
-            [
-                keyed_batch.filter(
-                    (F.col("event_id") >= lo + i * step)
-                    & (F.col("event_id") < lo + (i + 1) * step)
-                )
-                for i in range(n_splits)
-            ],
-            src_dir,
-        )
-        _HH_SPLITS[sf_dir] = src_dir
-    stream = (
-        spark.readStream.schema("event_id long, key string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/split_*/*.parquet")
+    stream = replay_stream(
+        spark,
+        ("hhst", sf_dir),
+        lambda: id_range_splits(keyed_batch, "event_id", 4),
     )
     out = streaming_misra_gries(
         stream, key_col="key", id_col="event_id", k=_HH_K, n_shards=8

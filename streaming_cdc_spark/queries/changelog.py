@@ -12,7 +12,6 @@ merging implement exactly the batch semantics.
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
@@ -21,7 +20,7 @@ from pyspark.sql import functions as F
 
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
+from streaming_cdc_spark.session import drain_stream, id_range_splits, replay_stream
 
 # Op mix: ~6% deletes, the rest updates/inserts. % 17 guarantees (at
 # every sf) several users whose LATEST op is a delete — the
@@ -187,27 +186,18 @@ def cdc_log_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _project(state)
 
 
-_CDC_SPLITS: dict[str, str] = {}
-
-
-def _split_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The op-log written as four round-robin parquet files
+def _oplog_stream(spark: SparkSession, sf_dir: str):
+    """The op-log replayed as four round-robin micro-batches
     (seq % 4, mtime-pinned admission order). Every batch spans the
     whole seq range, so each micro-batch delivers ops BELOW seqs
     already applied from earlier batches — real out-of-order arrival,
     including late updates below an applied tombstone."""
-    src = _CDC_SPLITS.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
-    src = cached_tmp_dir("cdclog_src_")
-    log = _oplog(spark, sf_dir)
-    from streaming_cdc_spark.session import write_mtime_pinned_splits
 
-    write_mtime_pinned_splits(
-        [log.filter(F.col("seq") % 4 == i) for i in range(4)], src
-    )
-    _CDC_SPLITS[sf_dir] = src
-    return src
+    def build():
+        log = _oplog(spark, sf_dir)
+        return [log.filter(F.col("seq") % 4 == i) for i in range(4)]
+
+    return replay_stream(spark, ("cdclog", sf_dir), build)
 
 
 @query("cdc_streaming_apply", oracle=_APPLY_SQL)
@@ -223,15 +213,8 @@ def cdc_streaming_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     do not change the materialization."""
     from streaming_cdc_spark.streaming.materialize import MaterializedChangelog
 
-    src = _split_dir(spark, sf_dir)
+    stream = _oplog_stream(spark, sf_dir)
     state_dir = tempfile.mkdtemp(prefix="cdclog_state_")
-    stream = (
-        spark.readStream.schema(
-            "user_id long, seq long, op string, value double, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
-    )
     sink = MaterializedChangelog(
         state_dir,
         key_cols=["user_id"],
@@ -270,15 +253,8 @@ def cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     travel (test-pinned)."""
     from streaming_cdc_spark.streaming.materialize import MaterializedChangelog
 
-    src = _split_dir(spark, sf_dir)
+    stream = _oplog_stream(spark, sf_dir)
     state_dir = tempfile.mkdtemp(prefix="cdctt_state_")
-    stream = (
-        spark.readStream.schema(
-            "user_id long, seq long, op string, value double, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
-    )
     sink = MaterializedChangelog(
         state_dir,
         key_cols=["user_id"],
@@ -564,16 +540,15 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE narrow pre-image scan (optimization r9): the 4-batch fold
     # references the events log 9x (per batch: fact partials + dim
     # upserts; plus the bounds agg) — un-checkpointed, each reference
-    # re-scanned parquet. The lazy checkpoint is materialized by the
-    # bounds agg below (a planning scalar we pay anyway), so every
-    # batch slice reads the cached narrow rows: 9 scans -> 1.
+    # re-scanned parquet. The lazy checkpoint is materialized by
+    # id_range_splits' bounds agg (a planning scalar we pay anyway), so
+    # every batch slice reads the cached narrow rows: 9 scans -> 1.
     ev = (
         load(spark, sf_dir, "events")
         .select("user_id", "event_id", "value", "event_type")
         .localCheckpoint(eager=False)
     )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    step = (hi - lo + 4) // 4
+    batches = id_range_splits(ev, "event_id", 4)
     a_state = None  # (user_id, a_n, a_cents)
     b_state = None  # (user_id, segment)
     v_state = None  # (segment, n_facts, cents_sum) signed partials
@@ -581,11 +556,7 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nothing in the loop needs a driver value, so the whole fold
     # materializes in the caller's single final action — 12 eager
     # driver jobs become one; plan truncation is unchanged.
-    for i in range(4):
-        batch = ev.filter(
-            (F.col("event_id") >= lo + i * step)
-            & (F.col("event_id") < lo + (i + 1) * step)
-        )
+    for batch in batches:
         pa = (
             batch.filter(F.col("value").isNotNull())
             .select(

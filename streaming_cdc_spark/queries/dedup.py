@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from streaming_cdc_spark.operators import dedup as D
 from streaming_cdc_spark.queries.registry import query
-from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
+from streaming_cdc_spark.session import drain_stream, id_range_splits, replay_stream
 from streaming_cdc_spark.tables import load
 
 # Shared oracle fragments ------------------------------------------------
@@ -1046,9 +1046,6 @@ def progressive_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PROGSTREAM_SPLITS: dict[tuple[str, int], str] = {}
-
-
 def _progstream_oracle(
     n_splits: int, budget: int, df_cap: int = 50, tau: float = 0.2
 ) -> str:
@@ -1101,41 +1098,23 @@ def _run_progressive_stream(
     id-range parquet files, drain them through ProgressiveResolver
     one micro-batch per file, return the published results (temp
     state/checkpoint dirs deleted before returning)."""
-    import os
     import shutil
     import tempfile
 
     from streaming_cdc_spark.streaming.progressive import ProgressiveResolver
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    src = _PROGSTREAM_SPLITS.get((sf_dir, n_splits))
-    if src is None or not os.path.isdir(src):
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo is None:  # empty table: nothing to stream
-            return spark.createDataFrame([], ProgressiveResolver.RESULT_SCHEMA)
-        step = (hi - lo + n_splits) // n_splits
-        src = cached_tmp_dir("progstream_src_")
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [
-                docs.filter(
-                    (F.col("doc_id") >= lo + i * step)
-                    & (F.col("doc_id") < lo + (i + 1) * step)
-                ).withColumn("bucket", F.lit(i))
-                for i in range(n_splits)
-            ],
-            src,
-        )
-        _PROGSTREAM_SPLITS[(sf_dir, n_splits)] = src
+    stream = replay_stream(
+        spark,
+        ("progstream", sf_dir, n_splits),
+        lambda: [
+            part.withColumn("bucket", F.lit(i))
+            for i, part in enumerate(id_range_splits(docs, "doc_id", n_splits))
+        ],
+    )
     state_dir = tempfile.mkdtemp(prefix="progstream_state_")
     resolver = ProgressiveResolver(
         state_dir, budget=budget, df_cap=df_cap, tau=tau, compact_every=compact_every
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string, bucket int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
     )
     try:
         drain_stream(stream, resolver.apply_batch)
@@ -1225,9 +1204,6 @@ def bloom_incremental_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.bloom_prefilter_matches(corpus, batch, key)
 
 
-_BLOOM_SPLITS: dict[str, str] = {}
-
-
 @query(
     "streaming_bloom_status",
     oracle=f"""
@@ -1267,37 +1243,14 @@ def streaming_bloom_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays shards, positions, and that prefix property with
     plain joins. A rare thing: a probabilistic streaming operator
     under a full value-hash oracle, false-positive drops included."""
-    import os
-
     from streaming_cdc_spark.streaming.windows import streaming_bloom_dedup
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_join(F.slice(F.split(F.col("text"), " "), 1, 5), " ").alias("kk"),
     )
-    src_dir = _BLOOM_SPLITS.get(sf_dir)
-    if src_dir is None or not os.path.isdir(src_dir):
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        src_dir = cached_tmp_dir("bloomst_src_")
-        n_splits = 4
-        step = (hi - lo + n_splits) // n_splits
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [
-                docs.filter(
-                    (F.col("doc_id") >= lo + i * step)
-                    & (F.col("doc_id") < lo + (i + 1) * step)
-                )
-                for i in range(n_splits)
-            ],
-            src_dir,
-        )
-        _BLOOM_SPLITS[sf_dir] = src_dir
-    stream = (
-        spark.readStream.schema("doc_id long, kk string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_dir}/split_*/*.parquet")
+    stream = replay_stream(
+        spark, ("bloomst", sf_dir), lambda: id_range_splits(docs, "doc_id", 4)
     )
     out = streaming_bloom_dedup(
         stream, key_col="kk", id_col="doc_id", n_bits=1 << 14, n_hashes=3, n_shards=8

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from streaming_cdc_spark.operators import layout as L
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
+from streaming_cdc_spark.session import cached_tmp_dir, drain_stream, replay_stream
 
 _ZV = L.zvalue_sql("zx", "zy")
 
@@ -120,9 +120,6 @@ def zorder_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_ZSTREAM_SPLITS: dict[str, str] = {}
-
-
 @query(
     "zorder_streaming_ingest",
     oracle=f"""
@@ -162,7 +159,6 @@ def zorder_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     compactions -> read) equals the one-shot spec. Completes the
     layout family: batch maintenance (zorder_table_roundtrip) and
     streaming ingest share one physical table format."""
-    import os
     import shutil
     import tempfile
 
@@ -171,24 +167,15 @@ def zorder_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("long").alias("x"),
         F.unix_micros("ts").alias("y"),
     )
-    src = _ZSTREAM_SPLITS.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("zstream_src_")
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [events.filter(F.col("event_id") % 8 == i) for i in range(8)], src
-        )
-        _ZSTREAM_SPLITS[sf_dir] = src
+    stream = replay_stream(
+        spark,
+        ("zstream", sf_dir),
+        lambda: [events.filter(F.col("event_id") % 8 == i) for i in range(8)],
+    )
     path = tempfile.mkdtemp(prefix="zsink_table_")
     from streaming_cdc_spark.streaming.zorder_sink import ZOrderStreamWriter
 
     try:
-        stream = (
-            spark.readStream.schema("event_id long, x long, y long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/split_*/*.parquet")
-        )
         w = ZOrderStreamWriter(
             path, "x", "y", bits=16, n_buckets=16, compact_every=3, max_files=1
         )
@@ -292,18 +279,14 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
 
 
-_PARTPRUNE_DIRS: dict[str, str] = {}
 _PARTPRUNE_SCHEMA = "event_id long, cents long"
 
 
 def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """events written hive-partitioned by event_type (immutable per
-    sf_dir — cached like the streaming split fixtures)."""
-    import os
+    sf_dir — memoized like the streaming replay sources)."""
 
-    path = _PARTPRUNE_DIRS.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        path = cached_tmp_dir("partprune_")
+    def fill(path: str) -> None:
         (
             load(spark, sf_dir, "events")
             .filter(F.col("value").isNotNull())
@@ -318,8 +301,8 @@ def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .parquet(path)
         )
-        _PARTPRUNE_DIRS[sf_dir] = path
-    return path
+
+    return cached_tmp_dir("partprune_", ("partprune", sf_dir), fill)[0]
 
 
 @query(

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from streaming_cdc_spark.operators.temporal import asof_join, time_bucket_rollup
 from streaming_cdc_spark.queries.registry import query
 from streaming_cdc_spark.tables import load
-from streaming_cdc_spark.session import cached_tmp_dir, drain_stream
+from streaming_cdc_spark.session import drain_stream, id_range_splits, replay_stream
 
 # Orders are 1995-2001; shift +27 years so they interleave with the
 # 2024-01 event stream and the as-of target varies per event.
@@ -445,9 +445,6 @@ def user_series_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WM_SPLITS: dict[str, str] = {}
-
-
 @query(
     "watermarked_daily_counts",
     oracle="""
@@ -496,22 +493,11 @@ def watermarked_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id, so the entire run is deterministic. Boundary hazard is
     measure-zero: watermarks carry microsecond offsets, window ends
     are day-aligned. DECIMAL money sums per the registry rules."""
-    import os
-
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
-    src = _WM_SPLITS.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("wm_src_")
-        from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-        write_mtime_pinned_splits(
-            [ev.filter(F.col("event_id") % 4 == i) for i in range(4)], src
-        )
-        _WM_SPLITS[sf_dir] = src
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
+    stream = replay_stream(
+        spark,
+        ("wm", sf_dir),
+        lambda: [ev.filter(F.col("event_id") % 4 == i) for i in range(4)],
     )
     agg = (
         stream.withWatermark("ts", "7 days")
@@ -632,8 +618,6 @@ def hourly_ffill_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resample_locf(events, freq_us=14_400_000_000)
 
 
-_SES_SRC: dict[str, str] = {}
-
 # Shared by streaming_sessions_finalized (native session_window) and
 # streaming_sessions_custom_state (applyInPandasWithState +
 # EventTimeTimeout): one oracle, two physicals — the driver hash
@@ -662,6 +646,13 @@ _SESSIONS_ORACLE = """
     """
 
 
+def _ses_stream(spark: SparkSession, sf_dir: str):
+    """The events as ONE micro-batch: one builder for both sessions
+    queries, which share its replay dir."""
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    return replay_stream(spark, ("ses", sf_dir), lambda: [ev])
+
+
 @query("streaming_sessions_finalized", oracle=_SESSIONS_ORACLE)
 def streaming_sessions_finalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native streaming SESSION WINDOWS under a FULL oracle: events
@@ -677,18 +668,7 @@ def streaming_sessions_finalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateness horizon stay in state. Complements
     watermarked_daily_counts (tumbling) with the MERGING window kind,
     whose state is per-(user, session), not per-bucket."""
-    import os
-
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    src = _SES_SRC.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("ses_src_")
-        ev.coalesce(1).write.parquet(os.path.join(src, "all"))
-        _SES_SRC[sf_dir] = src
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp")
-        .parquet(f"{src}/all/*.parquet")
-    )
+    stream = _ses_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "7 days")
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -766,7 +746,6 @@ def exact_moment_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select("event_type", "n", F.round(corr, 6).alias("corr_r"))
 
 
-_DDW_SRC: dict[str, str] = {}
 _DDW_T0, _DDW_G, _DDW_Q, _DDW_D = 1_700_000_000, 1000, 130, 550
 
 
@@ -854,35 +833,20 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped duplicates (else that probe's key would never re-emit).
     All arithmetic integer seconds. A Spark-version change to any of
     those three rules flips the hash."""
-    import os
-
-    from streaming_cdc_spark.session import write_mtime_pinned_splits
-
     ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-    src = _DDW_SRC.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-        step = (hi - lo + 4) // 4
-        src = cached_tmp_dir("ddw_src_")
-        parts = [
-            ev.filter(
-                (F.col("event_id") >= lo + i * step)
-                & (F.col("event_id") < lo + (i + 1) * step)
-            ).select(
+    stream = replay_stream(
+        spark,
+        ("ddw", sf_dir),
+        lambda: [
+            part.select(
                 (F.col("user_id") % 50).alias("k"),
                 (
                     F.lit(_DDW_T0 + i * _DDW_G)
                     + (F.col("user_id") % 50 % 7) * _DDW_Q
                 ).cast("long").alias("sec"),
             )
-            for i in range(4)
-        ]
-        write_mtime_pinned_splits(parts, src)
-        _DDW_SRC[sf_dir] = src
-    stream = (
-        spark.readStream.schema("k long, sec long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
+            for i, part in enumerate(id_range_splits(ev, "event_id", 4))
+        ],
     )
     ded = (
         stream.withColumn("ts", F.timestamp_seconds("sec"))
@@ -892,7 +856,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_stream(ded.select("k", "sec"), "ddw").select("k", "sec")
 
 
-_SSJ_SRC: dict[str, str] = {}
 _SSJ_T0, _SSJ_G, _SSJ_R = 1_700_000_000, 1000, 900
 
 
@@ -980,45 +943,30 @@ def _cb_prologue(
     )"""
 
 
-def _cb_fixture(
+def _cb_sides(
     spark: SparkSession,
     sf_dir: str,
-    cache: dict,
-    prefix: str,
     late_shift: int,
     abandoned_mod4: int | None = None,
     orphan_mod4: int | None = None,
-) -> str:
-    """Write (once per sf_dir) the click/buy mtime-pinned split dirs
-    the stream-join family reads: 5 batches, clicks of era i in batch
-    i (batch 4 empty), buys of era e in batch e+1 (batch 0 empty) —
-    mirrors _cb_prologue exactly; keep the two in lockstep."""
-    import os
-
-    src = cache.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
-    from streaming_cdc_spark.session import write_mtime_pinned_splits
-
+):
+    """The click and buy split lists the stream-join family replays:
+    5 batches, clicks of era i in batch i (batch 4 empty), buys of era
+    e in batch e+1 (batch 0 empty) — mirrors _cb_prologue exactly;
+    keep the two in lockstep."""
     ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    step = (hi - lo + 4) // 4
-    src = cached_tmp_dir(prefix)
+    eras = id_range_splits(ev, "event_id", 4)
     k = F.col("user_id") % 40
     empty = ev.filter(F.lit(False)).select(
         k.alias("k"), F.lit(0).cast("long").alias("sec")
     )
     clks, buys = [], []
     for i in range(5):
-        cf = (
-            (F.col("event_id") % 25 == 0)
-            & (F.col("event_id") >= lo + i * step)
-            & (F.col("event_id") < lo + (i + 1) * step)
-        )
+        cf = F.col("event_id") % 25 == 0
         if orphan_mod4 is not None:
             cf = cf & (k % 4 != orphan_mod4)
         clks.append(
-            ev.filter(cf).select(
+            eras[i].filter(cf).select(
                 k.alias("k"),
                 (F.lit(_SSJ_T0 + i * _SSJ_G) + (k % 5) * 40)
                 .cast("long")
@@ -1028,15 +976,11 @@ def _cb_fixture(
             else empty
         )
         e = i - 1  # buys arriving at batch i carry time-era i-1
-        bf = (
-            (F.col("event_id") % 25 == 1)
-            & (F.col("event_id") >= lo + e * step)
-            & (F.col("event_id") < lo + (e + 1) * step)
-        )
+        bf = F.col("event_id") % 25 == 1
         if abandoned_mod4 is not None:
             bf = bf & (k % 4 != abandoned_mod4)
         buys.append(
-            ev.filter(bf).select(
+            eras[e].filter(bf).select(
                 k.alias("k"),
                 (
                     F.lit(_SSJ_T0 + e * _SSJ_G)
@@ -1049,32 +993,38 @@ def _cb_fixture(
             if e >= 0
             else empty
         )
-    import os as _os
-
-    write_mtime_pinned_splits(clks, _os.path.join(src, "clk"))
-    write_mtime_pinned_splits(buys, _os.path.join(src, "buy"))
-    cache[sf_dir] = src
-    return src
+    return clks, buys
 
 
-def _cb_streams(spark: SparkSession, src: str):
-    """Standard watermarked click/buy stream pair over a _cb_fixture
-    dir: returns (clicks, buys) with (ck, cts, csec) / (bk, bts,
-    bsec) columns and 0-second watermarks on both sides."""
+def _cb_streams(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    late_shift: int,
+    abandoned_mod4: int | None = None,
+    orphan_mod4: int | None = None,
+):
+    """Standard watermarked click/buy stream pair replaying one
+    _cb_sides call (so one bounds job serves both sides): returns
+    (clicks, buys) with (ck, cts, csec) / (bk, bts, bsec) columns and
+    0-second watermarks on both sides."""
+    import functools
 
-    def _rd(side: str):
+    sides = functools.cache(
+        lambda: _cb_sides(spark, sf_dir, late_shift, abandoned_mod4, orphan_mod4)
+    )
+
+    def _rd(i: int, side: str):
         return (
-            spark.readStream.schema("k long, sec long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/{side}/split_*/*.parquet")
+            replay_stream(spark, (name, sf_dir, side), lambda: sides()[i])
             .withColumn("ts", F.timestamp_seconds("sec"))
             .withWatermark("ts", "0 seconds")
         )
 
-    c = _rd("clk").select(
+    c = _rd(0, "clk").select(
         F.col("k").alias("ck"), F.col("ts").alias("cts"), F.col("sec").alias("csec")
     )
-    b = _rd("buy").select(
+    b = _rd(1, "buy").select(
         F.col("k").alias("bk"), F.col("ts").alias("bts"), F.col("sec").alias("bsec")
     )
     return c, b
@@ -1123,8 +1073,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction: an earlier row is evicted only when no on-time
     future partner can satisfy the condition). Row multiplicities
     carry through the join on both engines."""
-    src = _cb_fixture(spark, sf_dir, _SSJ_SRC, "ssj_src_", late_shift=2000)
-    c, b = _cb_streams(spark, src)
+    c, b = _cb_streams(spark, sf_dir, "ssj", late_shift=2000)
     j = _cb_join(c, b)
     return drain_stream(
         j.select(F.col("ck").alias("k"), "csec", "bsec"), "ssj"
@@ -1181,9 +1130,6 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return interval_overlap_pairs(iv, "skey", "iid", "s", "e", bucket_width=14)
 
 
-_LOJ_SRC: dict[str, str] = {}
-
-
 _LOJ_ORACLE = _cb_prologue(late_shift=5000, abandoned_mod4=1) + f"""
     SELECT c.k, c.csec, b.bsec
     FROM cok c JOIN bok b
@@ -1233,10 +1179,7 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     blast radius while still exercising late input in the stream.
     NULL bsec is carried as the -1 sentinel on both engines
     (nullable-BIGINT NaN is the scd2 fetch-path hazard)."""
-    src = _cb_fixture(
-        spark, sf_dir, _LOJ_SRC, "loj_src_", late_shift=5000, abandoned_mod4=1
-    )
-    c, b = _cb_streams(spark, src)
+    c, b = _cb_streams(spark, sf_dir, "loj", late_shift=5000, abandoned_mod4=1)
     j = _cb_join(c, b, "leftOuter")
     out = drain_stream(
         j.select(F.col("ck").alias("k"), "csec", "bsec"), "loj"
@@ -1245,8 +1188,6 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k", "csec", F.coalesce(F.col("bsec"), F.lit(-1).cast("long")).alias("bsec")
     )
 
-
-_FOJ_SRC: dict[str, str] = {}
 
 _FOJ_ORACLE = _cb_prologue(late_shift=0, abandoned_mod4=1, orphan_mod4=2) + f"""
     SELECT c.k, c.csec, b.bsec
@@ -1302,16 +1243,9 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot mask an off-by-one there — the probe test pins
     strictness instead. NULL csec/bsec carried as -1 sentinels on both
     engines (the scd2 nullable-BIGINT fetch hazard)."""
-    src = _cb_fixture(
-        spark,
-        sf_dir,
-        _FOJ_SRC,
-        "foj_src_",
-        late_shift=0,
-        abandoned_mod4=1,
-        orphan_mod4=2,
+    c, b = _cb_streams(
+        spark, sf_dir, "foj", late_shift=0, abandoned_mod4=1, orphan_mod4=2
     )
-    c, b = _cb_streams(spark, src)
     j = _cb_join(c, b, "fullOuter")
     out = drain_stream(
         j.select(
@@ -1324,9 +1258,6 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("csec"), F.lit(-1).cast("long")).alias("csec"),
         F.coalesce(F.col("bsec"), F.lit(-1).cast("long")).alias("bsec"),
     )
-
-
-_SJW_SRC: dict[str, str] = {}
 
 
 _SJW_ORACLE = _cb_prologue(late_shift=0) + f""",
@@ -1377,8 +1308,7 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic propagates CORRECTLY THROUGH the join into the
     aggregation's finalization decision — the property
     single-operator queries cannot test."""
-    src = _cb_fixture(spark, sf_dir, _SJW_SRC, "sjw_src_", late_shift=0)
-    c, b = _cb_streams(spark, src)
+    c, b = _cb_streams(spark, sf_dir, "sjw", late_shift=0)
     j = _cb_join(c, b)
     # project AWAY the buy side's event-time column so exactly one
     # event-time column (cts) feeds the downstream stateful
@@ -1508,44 +1438,31 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SSE_SRC: dict[str, str] = {}
+def _sse_stream(spark: SparkSession, sf_dir: str):
+    """The 3 id-range event batches the stream-static enrichment and
+    output-mode queries replay. ONE builder for all four
+    (stream_static_enrich / stream_static_enrich_evolving /
+    streaming_update_mode_counts / streaming_complete_mode_topk):
+    they share one replay dir, so a drift between two copies would
+    poison whichever query ran second — the _cb_sides lockstep lesson
+    (review r8)."""
 
+    def build():
+        ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+        return [
+            part.select(
+                "event_id",
+                "user_id",
+                "event_type",
+                (F.col("value").cast("decimal(18,2)") * 100)
+                .cast("long")
+                .alias("cents"),
+            )
+            for part in id_range_splits(ev, "event_id", 3)
+        ]
 
-def _sse_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per sf_dir) the 3 mtime-pinned id-range event
-    batches the stream-static enrichment pair reads. ONE builder for
-    BOTH queries (stream_static_enrich / stream_static_enrich_
-    evolving): they share the _SSE_SRC cache, so a drift between two
-    copies would poison whichever query ran second — the _cb_fixture
-    lockstep lesson (review r8)."""
-    import os
+    return replay_stream(spark, ("sse", sf_dir), build)
 
-    from streaming_cdc_spark.session import write_mtime_pinned_splits
-
-    src = _SSE_SRC.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    step = (hi - lo + 3) // 3
-    src = cached_tmp_dir("sse_src_")
-    parts = [
-        ev.filter(
-            (F.col("event_id") >= lo + i * step)
-            & (F.col("event_id") < lo + (i + 1) * step)
-        ).select(
-            "event_id",
-            "user_id",
-            "event_type",
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        for i in range(3)
-    ]
-    write_mtime_pinned_splits(parts, src)
-    _SSE_SRC[sf_dir] = src
-    return src
 
 _SSE_ORACLE = """
     SELECT c.c_mktsegment, e.event_type,
@@ -1579,18 +1496,11 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer row at every sf — pinned by
     test_sse_fixture_every_event_user_has_customer), so no rows ride
     on matched-ness."""
-    src = _sse_fixture(spark, sf_dir)
+    stream = _sse_stream(spark, sf_dir)
     dim = F.broadcast(
         load(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"), "c_mktsegment"
         )
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
     )
     joined = stream.join(dim, "user_id", "inner")
     drained = drain_stream(
@@ -1616,22 +1526,11 @@ def streaming_sessions_custom_state(spark: SparkSession, sf_dir: str) -> DataFra
     native session_window / tumbling / dropDuplicatesWithinWatermark
     / stream-stream joins all have one; event-time timeouts now do
     too."""
-    import os
-
     from streaming_cdc_spark.session import ensure_package_on_executors
     from streaming_cdc_spark.streaming.windows import streaming_sessionizer_custom
 
     ensure_package_on_executors(spark)
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    src = _SES_SRC.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = cached_tmp_dir("ses_src_")
-        ev.coalesce(1).write.parquet(os.path.join(src, "all"))
-        _SES_SRC[sf_dir] = src
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp")
-        .parquet(f"{src}/all/*.parquet")
-    )
+    stream = _ses_stream(spark, sf_dir)
     out = streaming_sessionizer_custom(stream)
     return drain_stream(
         out.select("user_id", "session_start_us", "n_events", "session_us"),
@@ -1692,7 +1591,7 @@ def stream_static_enrich_evolving(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
     import tempfile
 
-    src = _sse_fixture(spark, sf_dir)
+    stream = _sse_stream(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -1732,13 +1631,6 @@ def stream_static_enrich_evolving(spark: SparkSession, sf_dir: str) -> DataFrame
             if batch_id == 0:
                 late_rows.write.mode("overwrite").parquet(f"{dim_dir}/late")
 
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, cents long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/split_*/*.parquet")
-        )
         drain_stream(stream, handle)
         return (
             spark.read.parquet(f"{out_dir}/b*")
@@ -1797,17 +1689,10 @@ def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried (running totals), i.e. the update-mode state machine.
     Rows are unique by construction (a type's count strictly
     increases across its emitting batches). Three mtime-pinned
-    id-range batches (the shared _sse_fixture); state is the
+    id-range batches (the shared _sse_stream); state is the
     per-type running aggregate — at 100 TB the state store holds
     |keys| rows, the mode never rescans history."""
-    src = _sse_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
-    )
+    stream = _sse_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("cents").cast("long").alias("cents_sum"),
@@ -1851,14 +1736,7 @@ def streaming_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB: re-emission cost scales with the RESULT, not the
     stream, and a result-bounded query is the only kind complete
     mode should ever serve."""
-    src = _sse_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/split_*/*.parquet")
-    )
+    stream = _sse_stream(spark, sf_dir)
     top = (
         stream.groupBy("event_type")
         .agg(

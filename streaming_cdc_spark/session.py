@@ -17,6 +17,7 @@ import tempfile
 from typing import NamedTuple
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -51,19 +52,64 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     sc._scs_pyfiles_added = True
 
 
-def cached_tmp_dir(prefix: str) -> str:
-    """mkdtemp whose removal is registered atexit — for module-level
-    cached SOURCE dirs that queries reuse across calls within one
-    process (streaming splits of the op-log / events). Unlike per-run
-    state/ckpt dirs these sit outside any ``finally``, so without the
-    atexit hook every process run leaked a few parquet temp dirs per
-    sf (ADVICE r5). Intra-session reuse is unchanged: callers keep
-    caching the returned path in their module dict."""
+_TMP_DIRS: dict[tuple, tuple[str, object]] = {}
+
+
+def cached_tmp_dir(prefix: str, key: tuple, fill):
+    """The fixture dir of ``key``, made once per process: a mkdtemp dir
+    named ``<prefix>*`` whose removal is registered atexit, filled by
+    ``fill(path)``. Returns ``(path, fill's return value)``; later calls
+    with the same ``key`` return the memo and write nothing. A dir
+    that vanished (a /tmp sweep) is made and filled again. For
+    immutable per-sf fixtures that queries reuse across calls; per-run
+    state/ckpt dirs belong in the caller's ``finally`` instead."""
     import atexit
 
+    hit = _TMP_DIRS.get(key)
+    if hit is not None and os.path.isdir(hit[0]):
+        return hit
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    _TMP_DIRS[key] = (path, fill(path))
+    return _TMP_DIRS[key]
+
+
+def replay_stream(spark: SparkSession, key: tuple, build):
+    """A file stream that admits the DataFrames ``build()`` returns one
+    micro-batch each, in list order: the engine's one replay source.
+    ``key`` names the replay (``key[0]`` is the dir prefix, the rest
+    whatever the parts depend on, e.g. the sf dir). The first call for
+    ``key`` writes the parts with ``write_mtime_pinned_splits`` into a
+    ``<key[0]>_src_*`` ``cached_tmp_dir`` and records the first part's
+    schema; every call reads that dir back with the recorded schema
+    and maxFilesPerTrigger=1."""
+
+    def fill(path):
+        parts = build()
+        write_mtime_pinned_splits(parts, path)
+        return parts[0].schema
+
+    src, schema = cached_tmp_dir(f"{key[0]}_src_", key, fill)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/split_*/*.parquet")
+    )
+
+
+def id_range_splits(df, col: str, n: int) -> list:
+    """``df`` cut into ``n`` contiguous ranges of ``col``: with
+    ``step = (hi - lo + n) // n``, slice i holds
+    ``lo + i*step <= col < lo + (i+1)*step``, so a row lands in slice
+    ``(col - lo) // step`` (the bucket the oracles replay in SQL). An
+    empty ``df`` gives ``n`` empty slices. Runs one agg job for the
+    bounds."""
+    lo, hi = df.agg(F.min(col), F.max(col)).first()
+    if lo is None:
+        return [df.filter(F.lit(False))] * n
+    step = (hi - lo + n) // n
+    c = F.col(col)
+    return [df.filter((c >= lo + i * step) & (c < lo + (i + 1) * step)) for i in range(n)]
 
 
 def fan_out(df, min_partitions: int | None = None):
@@ -374,19 +420,14 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def write_mtime_pinned_splits(parts, base_dir: str, names=None) -> None:
+def write_mtime_pinned_splits(parts, base_dir: str) -> None:
     """Write each DataFrame in ``parts`` as one parquet file under
     ``base_dir``/split_i and pin file mtimes to 1_000_000 + i, so a
     file stream with maxFilesPerTrigger=1 admits them oldest-first in
     exactly list order — the micro-batch-order convention every
-    streaming-state oracle in this repo depends on (the r6 z-table
-    and r7 DDW/SSJ queries each hand-rolled this loop; bug-fixes to
-    the pinning belong HERE now). ``names`` overrides the split dir
-    names (e.g. per-side subdirs)."""
-    import os
-
+    streaming-state oracle in this repo depends on."""
     for i, part in enumerate(parts):
-        path = os.path.join(base_dir, names[i] if names else f"split_{i}")
+        path = os.path.join(base_dir, f"split_{i}")
         part.coalesce(1).write.parquet(path)
         for root, _dirs, files in os.walk(path):
             for f_ in files:

@@ -880,16 +880,25 @@ def test_drain_stream_handler_error_propagates_and_cleans_up(spark, tmp_path):
 
 
 def test_stream_starts_only_in_session():
-    """Every engine stream start goes through session.drain_stream: no
-    other module under streaming_cdc_spark/ may hand-roll one. The
-    stream's state-store count has one decision point too: only
-    session.py reads SPARK_GRAFT_STREAM_SHUFFLE or sets
-    spark.sql.shuffle.partitions."""
+    """Every engine stream start goes through session.drain_stream and
+    every split-file source through session.replay_stream: no other
+    module under streaming_cdc_spark/ may hand-roll either (a
+    maxFilesPerTrigger read or a split write). The stream's
+    state-store count has one decision point too: only session.py
+    reads SPARK_GRAFT_STREAM_SHUFFLE or sets
+    spark.sql.shuffle.partitions. The fixture-dir memo
+    (cached_tmp_dir) has one caller outside session.py: the
+    hive-partitioned events table of queries/layout.py, a batch
+    fixture that no stream replays."""
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parents[1] / "streaming_cdc_spark"
     sets_partitions = re.compile(r"\.set\(\s*[\"']spark\.sql\.shuffle\.partitions")
+    # calls only: docstrings name maxFilesPerTrigger=1 in prose
+    max_files = re.compile(r"\.options?\(\s*[\"']?maxFilesPerTrigger")
+    pinned_splits = re.compile(r"\bwrite_mtime_pinned_splits\(")
+    memo = re.compile(r"\bcached_tmp_dir\(")
 
     def hits(pred):
         return sorted(str(p.relative_to(root)) for p in root.rglob("*.py") if pred(p.read_text()))
@@ -897,6 +906,9 @@ def test_stream_starts_only_in_session():
     assert hits(lambda t: "writeStream" in t or "stream_start_conf(" in t) == ["session.py"]
     assert hits(lambda t: "SPARK_GRAFT_STREAM_SHUFFLE" in t) == ["session.py"]
     assert hits(sets_partitions.search) == ["session.py"]
+    assert hits(max_files.search) == ["session.py"]
+    assert hits(pinned_splits.search) == ["session.py"]
+    assert hits(memo.search) == ["queries/layout.py", "session.py"]
 
 
 def test_driver_jvm_launch_only_in_session():
@@ -966,9 +978,11 @@ def test_edges_symmetrized_only_in_sym_edges():
 
 
 def test_split_source_dirs_removed_at_exit(tmp_path):
-    """The memoized split-file sources of the three multi-batch queries
-    live in ``cached_tmp_dir`` dirs: a process that ran them leaves no
-    ``*_src_*`` dir in its temp dir once it exits."""
+    """The split-file sources of the three multi-batch queries are
+    memoized ``cached_tmp_dir`` dirs: running each query twice writes
+    one ``<prefix>_src_`` dir per query (a memo hit writes nothing),
+    and a process that ran them leaves none in its temp dir once it
+    exits."""
     import subprocess
     import sys
 
@@ -980,7 +994,8 @@ from streaming_cdc_spark.queries import QUERIES
 from streaming_cdc_spark.session import get_spark
 spark = get_spark("src-dirs", shuffle_partitions=2)
 for name in ("progressive_stream_resolution", "streaming_bloom_status", "ep2_streaming_multibatch"):
-    QUERIES[name](spark, "/root/testdata/sf0.001").collect()
+    for _ in range(2):
+        QUERIES[name](spark, "/root/testdata/sf0.001").collect()
 print(" ".join(sorted(d for d in os.listdir(tempfile.gettempdir()) if "_src_" in d)))
 """
     tmp = tmp_path / "tmp"
@@ -992,5 +1007,29 @@ print(" ".join(sorted(d for d in os.listdir(tempfile.gettempdir()) if "_src_" in
     )
     assert out.returncode == 0, out.stderr[-3000:]
     made = out.stdout.split()
-    assert {d.split("_src_")[0] for d in made} == {"progstream", "bloomst", "ep2mb"}
+    assert sorted(d.split("_src_")[0] for d in made) == ["bloomst", "ep2mb", "progstream"]
     assert not [d for d in os.listdir(tmp) if "_src_" in d]
+
+
+@pytest.mark.parametrize("n", [1, 3, 4])
+@pytest.mark.parametrize("empty", [False, True])
+def test_id_range_splits_match_oracle_buckets(spark, n, empty):
+    """``id_range_splits`` puts each id in slice ``(id - lo) // step``
+    with ``step = (hi - lo + n) // n``, the bucket the oracles replay
+    in SQL; an empty table gives ``n`` empty slices, and a replay of
+    them drains to zero rows."""
+    from streaming_cdc_spark.session import drain_stream, id_range_splits, replay_stream
+
+    ids = [] if empty else sorted({int(i) for i in np.random.default_rng(n).integers(-50, 5000, 300)})
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    got = [sorted(r.id for r in part.collect()) for part in id_range_splits(df, "id", n)]
+    want = [[] for _ in range(n)]
+    if ids:
+        lo, hi = ids[0], ids[-1]
+        step = (hi - lo + n) // n
+        for i in ids:
+            want[(i - lo) // step].append(i)
+    assert got == want
+    if empty:
+        stream = replay_stream(spark, ("idsplit_empty", n), lambda: id_range_splits(df, "id", n))
+        assert drain_stream(stream, "idsplit_empty").count() == 0
